@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Headline benchmark (driver contract): runs the engine's headline queries
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the host's core count) and prints ONE
+JSON line:
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -137,7 +138,7 @@ def main():
     # loop alone (BENCH/BASELINE.md substrate section).
     os.environ.setdefault("TSENGINE_PRETOUCH", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
 
     from tsengine.session import get_spark

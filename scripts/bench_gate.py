@@ -45,7 +45,7 @@ def latest_baseline() -> tuple[str, dict]:
 def run_bench() -> dict:
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         env=env,

@@ -5,12 +5,13 @@ vectors and the Spark applyInPandas layer."""
 import numpy as np
 import pytest
 
+from oracle import gorilla_scalar as G
 from tsengine import compress as C
 
 
 def _roundtrip(ts, vals):
-    blk = C.encode_block(np.array(ts, dtype=np.int64), np.array(vals, dtype=np.float64))
-    dts, dvals = C.decode_block(blk)
+    blk = G.encode_block(np.array(ts, dtype=np.int64), np.array(vals, dtype=np.float64))
+    dts, dvals = G.decode_block(blk)
     assert dts.tolist() == list(ts)
     got = np.asarray(dvals, dtype=np.float64).view(np.uint64)
     exp = np.array(vals, dtype=np.float64).view(np.uint64)
@@ -64,7 +65,7 @@ def test_compression_ratio_on_transcript_like_data():
     gaps = np.ceil(rng.lognormal(3, 1.2, size=5000)).astype(np.int64)
     ts = 1398895200 + np.cumsum(gaps)
     vals = gaps.astype(np.float64)  # latency plane: small ints as doubles
-    blk = C.encode_block(ts, vals)
+    blk = G.encode_block(ts, vals)
     raw = 16 * len(ts)
     packed = len(blk["ts_block"]) + len(blk["val_block"]) + 20
     assert packed < raw * 0.7, f"ratio {packed/raw:.2f}"
@@ -136,11 +137,11 @@ def test_batch_encoder_matches_single_series():
     for i, n in enumerate(sizes):
         assert ft[i] == parts_ts[i][0]
         assert fv[i] == parts_v[i][0]
-        assert tb[i] == C.encode_timestamps(parts_ts[i]), f"ts stream {i}"
-        assert vb[i] == C.encode_values(parts_v[i]), f"val stream {i}"
+        assert tb[i] == G.encode_timestamps(parts_ts[i]), f"ts stream {i}"
+        assert vb[i] == G.encode_values(parts_v[i]), f"val stream {i}"
         # and decodes back exactly
-        assert np.array_equal(C.decode_timestamps(tb[i], int(ft[i]), n), parts_ts[i])
-        assert np.array_equal(C.decode_values(vb[i], float(fv[i]), n), parts_v[i])
+        assert np.array_equal(G.decode_timestamps(tb[i], int(ft[i]), n), parts_ts[i])
+        assert np.array_equal(G.decode_values(vb[i], float(fv[i]), n), parts_v[i])
 
 
 def test_batch_decoder_matches_scalar_and_input():
@@ -169,7 +170,7 @@ def test_batch_decoder_matches_scalar_and_input():
     ns, ft, fv, tb, vb = C.encode_blocks_batch(flat_ts, flat_v, bounds)
     ref_t, ref_v = [], []
     for i in range(len(ns)):
-        t, v = C.decode_block(
+        t, v = G.decode_block(
             {"n": int(ns[i]), "first_ts": int(ft[i]), "first_val": float(fv[i]),
              "ts_block": tb[i], "val_block": vb[i]})
         ref_t.append(t); ref_v.append(v)

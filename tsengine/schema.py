@@ -1,4 +1,4 @@
-"""Canonical StructTypes (SURVEY.md §1.2, FIXTURES.md).
+"""Canonical StructType of the series plane (SURVEY.md §1.2, FIXTURES.md).
 
 The reference enforces shape at runtime with ``check_ts``
 (timeseries_functions.py:70-90); here the schema system IS the contract.
@@ -14,77 +14,5 @@ SERIES = T.StructType(
         T.StructField("series_id", T.LongType(), False),
         T.StructField("epoch", T.LongType(), False),
         T.StructField("value", T.DoubleType(), True),
-    ]
-)
-
-# Primary input table (BASELINE.json input_hint): multi-turn transcripts.
-TRANSCRIPTS = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), False),
-    ]
-)
-
-# Rollup tier rows (FIXTURES.md §4): per (conv, tier, bucket) aggregates of
-# turn latency plus role/tool distributions.
-ROLLUP = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("bucket", T.TimestampType(), False),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("cnt_lat", T.LongType(), False),
-        T.StructField("vmin", T.DoubleType(), True),
-        T.StructField("vmax", T.DoubleType(), True),
-        T.StructField("vsum", T.DoubleType(), True),
-        T.StructField("vmean", T.DoubleType(), True),
-        T.StructField("role_dist", T.MapType(T.StringType(), T.LongType()), True),
-        T.StructField("tool_dist", T.MapType(T.StringType(), T.LongType()), True),
-    ]
-)
-
-# Gorilla / delta-of-delta compressed blocks (SURVEY.md §2.10).
-COMPRESSED_BLOCK = T.StructType(
-    [
-        T.StructField("series_id", T.LongType(), False),
-        T.StructField("n", T.IntegerType(), False),
-        T.StructField("first_ts", T.LongType(), False),
-        T.StructField("first_val", T.DoubleType(), False),
-        T.StructField("ts_block", T.BinaryType(), False),
-        T.StructField("val_block", T.BinaryType(), False),
-        # persisted wire-format version (compress.BLOCK_FORMAT_VERSION): the
-        # r2 encoder changed the timestamp stream layout (first delta moved
-        # from a 32-bit header into the DoD bucket coder), so blocks must
-        # self-describe — the decoder rejects unknown versions instead of
-        # decoding silently wrong
-        T.StructField("fmt", T.ByteType(), False),
-    ]
-)
-
-# Checkpoint + lineage metadata tables (FIXTURES.md §5).
-CHECKPOINT = T.StructType(
-    [
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("last_committed_bucket", T.TimestampType(), False),
-        T.StructField("job_run_id", T.StringType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("input_rows", T.LongType(), False),
-        T.StructField("output_rows", T.LongType(), False),
-        T.StructField("input_bytes", T.LongType(), False),
-        T.StructField("output_bytes", T.LongType(), False),
-        T.StructField("source_snapshot_id", T.StringType(), True),
-        T.StructField("run_id", T.StringType(), False),
     ]
 )

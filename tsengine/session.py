@@ -29,7 +29,7 @@ def get_spark(
       (reference analysis_utils.py:182-237).
     - Arrow enabled for the pandas-UDF compression kernels.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or os.environ.get("TSENGINE_MASTER", f"local[{cpus}]")
     # Lazily-faulted VM memory (e.g. Firecracker snapshots) makes first-touch
     # page faults ~100x normal cost, which serializes allocation-heavy

@@ -35,10 +35,11 @@ job), mirroring Iceberg's manifest pruning: a time-range read opens only
 files whose [min_ts, max_ts] intersects the predicate, and the residual
 filter still runs in Spark for row-group/row-level exactness.
 
-On a real cluster the same call sites bind to an Iceberg catalog
-(tables.iceberg_available); this format is the sandbox-honest stand-in and
-is deliberately single-table, optimistic-concurrency (CommitConflict on a
-lost race), and JSON-manifest-simple.
+This is the engine's one table format: appended transcripts, materialized
+tiers, conv state and Gorilla block stores are all SnapshotTables.  It
+stands in for Iceberg without a catalog, and is deliberately single-table,
+optimistic-concurrency (CommitConflict on a lost race), and
+JSON-manifest-simple.
 """
 
 from __future__ import annotations

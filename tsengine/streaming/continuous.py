@@ -1,17 +1,13 @@
 """Streaming continuous aggregates (SURVEY.md §2.9).
 
 The reference has NO streaming (pull-based batch over a live store); the
-engine's primary continuous-aggregate path is the idempotent incremental
-batch runner (tsengine.checkpoint) per SURVEY.md §2.9.  This module adds the
-Structured Streaming rendering for ingest-time rollups: file-source stream
-over the transcripts directory -> watermarked tumbling-window aggregate ->
-tier sink, runnable with Trigger.AvailableNow for deterministic tests.
-
-Latency (lag) is NOT computable in a pure streaming aggregate (needs
-per-conv ordering across microbatches), so the streaming tier carries the
-count/role-distribution plane; the latency plane stays on the batch path —
-the same split TimescaleDB-style systems make (counts streamed, complex
-aggregates on refresh).
+engine's continuous-aggregate path is the incremental refresh of
+:class:`tsengine.materialize.MaterializedTiers` per SURVEY.md §2.9.  This
+module adds the Structured Streaming rendering for ingest:
+:func:`stream_ingest_to_snapshot` commits each micro-batch of a file-source
+stream into a :class:`~tsengine.sources.snapshots.SnapshotTable` exactly once
+and can fold it into the tiers, and :func:`latency_state_stream` keeps the
+per-conversation latency plane as stateful streaming state.
 """
 
 from __future__ import annotations
@@ -20,36 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine.synth import TRANSCRIPT_COLS
-
-
-def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    return (
-        spark.readStream.schema(
-            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, day string"
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(path)
-    )
-
-
-def streaming_tier(
-    stream: DataFrame, width_sec: int = 60, watermark: str = "1 hour"
-) -> DataFrame:
-    """Watermarked tumbling-window per-conv rollup: cnt + role counts.
-    Late rows beyond the watermark are dropped (late-data policy)."""
-    w = F.window(F.col("ts"), f"{width_sec} seconds")
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col("conv_id"), w.alias("win"), F.col("role"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            "conv_id",
-            F.col("win.start").alias("bucket"),
-            "role",
-            "cnt",
-        )
-    )
-
 
 LATENCY_STATE_OUT = (
     "conv_id string, cnt long, cnt_lat long, vmin double, vmax double, "
@@ -63,17 +29,17 @@ _LATENCY_STATE = (
 
 def latency_state_stream(stream: DataFrame) -> DataFrame:
     """Per-conversation latency plane as a STATEFUL streaming operator
-    (``applyInPandasWithState``): the windowed streaming tier cannot carry
-    turn latency because lag() needs per-conv ordering ACROSS micro-batches
-    — this operator keeps exactly that state (last epoch + last turn index
-    per conv_id) and emits the running cnt/min/max/sum aggregate after every
+    (``applyInPandasWithState``): a windowed streaming aggregate cannot
+    carry turn latency because lag() needs per-conv ordering ACROSS
+    micro-batches — this operator keeps exactly that state (last epoch +
+    last turn index per conv_id) and emits the running cnt/min/max/sum aggregate after every
     batch.  Each batch's rows are sorted by turn_idx inside the kernel and
     diffed vectorized (numpy), with the cross-batch boundary latency taken
     against the stored last epoch.
 
     Late-data policy: a turn at or below the stored turn index arrived out
     of order across batches — it is dropped and counted in ``late_dropped``
-    (the streaming analogue of the watermark drop in :func:`streaming_tier`).
+    (the streaming analogue of a watermark drop).
     """
     import numpy as np
     import pandas as pd
@@ -150,7 +116,7 @@ def stream_ingest_to_snapshot(
     ``table``) is given, each committed batch is folded into the 1m/1h/1d
     tiers by an incremental refresh — streaming continuous aggregates WITH
     the latency plane (conv-state anchors carry cross-batch continuity),
-    which the pure windowed :func:`streaming_tier` cannot express.  A kill
+    which a pure windowed streaming aggregate cannot express.  A kill
     anywhere (mid-refresh included) resumes cleanly: refresh() reconciles
     component positions, the sink skips replayed batches.
 
@@ -177,25 +143,6 @@ def stream_ingest_to_snapshot(
         reader.parquet(in_path)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_available_now(
-    spark: SparkSession, in_path: str, out_path: str, checkpoint: str,
-    width_sec: int = 60,
-) -> None:
-    """Process everything currently in `in_path` exactly once and stop —
-    the deterministic test/bootstrap mode.  Output mode append requires the
-    watermark to close windows; AvailableNow drains and finalizes."""
-    tier = streaming_tier(stream_transcripts(spark, in_path), width_sec)
-    q = (
-        tier.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
