@@ -321,13 +321,14 @@ def main():
     series = turns.selectExpr(
         "cast(hash(conv_id) as long) as series_id", "epoch", "coalesce(value, 0.0) as value"
     )
+    blk_cols = dict(group_cols=("series_id",), epoch_col="epoch", value_cols=("value",))
     # best-of-2 like every other phase: this was the one single-shot timing
     # left, and the host's steal bursts made it swing 3.1-9.1 s run-to-run
     # on identical plans (r3 measurement)
     gz_sec = None
     for _ in range(2):
         t0 = time.perf_counter()
-        _run_noop(C.compress_series(series))
+        _run_noop(C.compress_table(series, **blk_cols))
         dt = time.perf_counter() - t0
         gz_sec = dt if gz_sec is None else min(gz_sec, dt)
     timings["gorilla_compress"] = round(gz_sec, 3)
@@ -336,11 +337,11 @@ def main():
     # 16 bytes/point (long epoch + double value) the blocks replace — the
     # storage-side half of the Gorilla story (the north rule compresses
     # every tier series at rest; ratio decides the retention bill)
-    blk = C.compress_series(series).selectExpr(
+    blk = C.compress_table(series, **blk_cols).selectExpr(
         "sum(n) as pts",
         # per-block payload + the fixed decode header the block schema
-        # carries (n:int, first_ts:long, first_val:double, fmt:byte)
-        "sum(length(ts_block) + length(val_block) + 21) as enc_bytes",
+        # carries (n:int, first_ts:long, first_value:double, fmt:byte)
+        "sum(length(ts_block) + length(blk_value) + 21) as enc_bytes",
     ).first()
     comp_ratio = round(16.0 * blk["pts"] / blk["enc_bytes"], 3)
     comp_bpp = round(blk["enc_bytes"] / blk["pts"], 3)

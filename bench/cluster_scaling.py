@@ -68,7 +68,8 @@ tiers["1m"].unionByName(tiers["1h"]).unionByName(tiers["1d"]) \
 if mode == "compress":
     series = turns.selectExpr("conv_id as series_id", "epoch",
                               "coalesce(value, 0.0) as value")
-    C.compress_series(series).write.format("noop").mode("overwrite").save()
+    C.compress_table(series, group_cols=("series_id",), epoch_col="epoch",
+                     value_cols=("value",)).write.format("noop").mode("overwrite").save()
 dt = time.perf_counter() - t0
 spark.stop()
 

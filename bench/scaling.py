@@ -60,7 +60,8 @@ tiers["1m"].unionByName(tiers["1h"]).unionByName(tiers["1d"]) \
     .write.format("noop").mode("overwrite").save()
 series = turns.selectExpr("conv_id as series_id", "epoch",
                           "coalesce(value, 0.0) as value")
-C.compress_series(series).write.format("noop").mode("overwrite").save()
+C.compress_table(series, group_cols=("series_id",), epoch_col="epoch",
+                 value_cols=("value",)).write.format("noop").mode("overwrite").save()
 dt = time.perf_counter() - t0
 print(json.dumps({{"cpus": cpus, "turns": n, "sec": dt, "pps": n / dt}}))
 """
@@ -94,7 +95,8 @@ def work(seed):
     bounds = np.concatenate(([0], np.cumsum(sizes)))
     t0 = time.time(); pts = 0
     while time.time() - t0 < 4.0:
-        C.encode_blocks_batch(ts, va, bounds)
+        C.encode_ts_batch(ts, bounds)
+        C.encode_values_batch(va, bounds)
         pts += len(ts)
     return pts
 

@@ -44,17 +44,23 @@ def _stat() -> list[int]:
         return [int(v) for v in f.readline().split()[1:]]
 
 
-def _memcpy_gbps(mb: int = 200, reps: int = 3) -> float:
+def _memcpy_gbps(mb: int = 200, reps: int = 3) -> float | None:
     """Single-core pre-touched memcpy bandwidth (GB/s) — the SECOND
     contention axis.  A neighbor VM saturating the shared memory bus shows
     ZERO steal (no CPU is taken) while slowing every shuffle/aggregate by
     the bandwidth ratio; this box's quiet-bus reference is ~14.7 GB/s
     (BENCH/BASELINE.md substrate controls), and a round-5 episode measured
-    8.1 GB/s at 0.1 % steal alongside uniformly ~1.4x slower bench numbers."""
-    import numpy as np
+    8.1 GB/s at 0.1 % steal alongside uniformly ~1.4x slower bench numbers.
 
-    a = np.ones(mb * 1_000_000 // 8)
-    b = np.empty_like(a)
+    Returns None when numpy is missing or the two buffers cannot be
+    allocated, so the steal half of the probe still reports."""
+    try:
+        import numpy as np
+
+        a = np.ones(mb * 1_000_000 // 8)
+        b = np.empty_like(a)
+    except (ImportError, MemoryError):
+        return None
     np.copyto(b, a)  # pre-touch both buffers outside the timed region
     best = None
     for _ in range(reps):
@@ -89,8 +95,8 @@ def main() -> None:
         "memcpy_gbps": mem_gbps,
         "memcpy_gbps_quiet_ref": 14.7,
         "gate_advice": (
-            "quiet"
-            if shares.get("steal", 0.0) < 5 and mem_gbps >= 11.0
+            "unknown" if mem_gbps is None
+            else "quiet" if shares.get("steal", 0.0) < 5 and mem_gbps >= 11.0
             else "noisy"
         ),
     }

@@ -1,8 +1,9 @@
 """Scalar Gorilla codec: one series per call, one block per series.
 
-The engine encodes and decodes many series per Arrow batch with
-:func:`tsengine.compress.encode_blocks_batch` and
-:func:`tsengine.compress.decode_blocks_batch`.  This module keeps the
+The engine encodes and decodes many series per Arrow batch with the
+timestamp and value passes of :mod:`tsengine.compress`
+(``encode_ts_batch``/``encode_values_batch``,
+``decode_ts_batch``/``decode_values_batch``).  This module keeps the
 per-series codec those were generalized from, as their byte-for-byte test
 oracle (``tests/test_compress.py``, ``tests/test_property.py``).  The wire
 format (delta-of-delta timestamps, XOR values) is described in
@@ -13,7 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from tsengine.compress import _U64, _clz64, _ctz64, encode_blocks_batch
+from tsengine.compress import _U64, _clz64, _ctz64, encode_ts_batch, encode_values_batch
 
 
 # ------------------------------------------------------------------ bit helpers
@@ -239,12 +240,12 @@ def decode_values(data: bytes, first_val: float, n: int) -> np.ndarray:
 
 # ------------------------------------------------------------------ blocks
 def encode_block(ts: np.ndarray, vals: np.ndarray) -> dict:
-    """Single-series block encode — thin wrapper over the batch encoder."""
-    ts = np.asarray(ts, dtype=np.int64)
-    vals = np.asarray(vals, dtype=np.float64)
-    ns, ft, fv, tb, vb = encode_blocks_batch(ts, vals, np.array([0, len(ts)]))
+    """Single-series block encode — thin wrapper over the batch encoders."""
+    bounds = np.array([0, len(ts)])
+    ft, tb = encode_ts_batch(ts, bounds)
+    fv, vb = encode_values_batch(vals, bounds)
     return {
-        "n": int(ns[0]),
+        "n": len(ts),
         "first_ts": int(ft[0]),
         "first_val": float(fv[0]),
         "ts_block": tb[0],

@@ -1,12 +1,14 @@
 """Compression roundtrip property tests (FIXTURES.md §6): decode(encode(x))
 == x exactly — timestamps as int64, values bitwise float64 — over adversarial
-vectors and the Spark applyInPandas layer."""
+vectors and the Spark mapInPandas layer (compress_table/decompress_table)."""
 
 import numpy as np
 import pytest
 
 from oracle import gorilla_scalar as G
 from tsengine import compress as C
+
+SERIES = dict(group_cols=("series_id",), epoch_col="epoch", value_cols=("value",))
 
 
 def _roundtrip(ts, vals):
@@ -82,15 +84,54 @@ def test_spark_roundtrip(spark):
         vals = rng.normal(size=200) * 100
         series.append(list(zip(ts.tolist(), vals.tolist())))
     df = from_ts_lists(spark, series)
-    blocks = C.compress_series(df)
+    blocks = C.compress_table(df, **SERIES)
     assert blocks.count() == 5
-    back = C.decompress_series(blocks)
+    back = C.decompress_table(blocks, **SERIES)
     orig = sorted(map(tuple, df.collect()))
     got = sorted(map(tuple, back.select("series_id", "epoch", "value").collect()))
     assert len(orig) == len(got)
     for (s1, e1, v1), (s2, e2, v2) in zip(orig, got):
         assert (s1, e1) == (s2, e2)
         assert np.float64(v1).view(np.uint64) == np.float64(v2).view(np.uint64)
+
+
+def test_block_table_bytes_match_scalar_across_batches(spark):
+    """compress_table's persisted bytes == the scalar codec, per group and
+    per value column, with Arrow batches of 7 rows so every multi-batch
+    group goes through the kernel's cross-batch carry."""
+    rng = np.random.RandomState(11)
+    groups = {}
+    for g, n in [("a", 1), ("b", 23), ("c", 40), ("d", 9)]:
+        ts = 1700000000 + np.cumsum(rng.randint(1, 5000, size=n)).astype(np.int64)
+        cnt = rng.randint(0, 4, size=n).astype(np.float64)
+        mean = np.where(rng.rand(n) < 0.3, 0.0, rng.standard_normal(n) * 1e3)
+        groups[g] = (ts, cnt, mean)
+    rows = [
+        (g, int(t), float(c), float(m))
+        for g, cols in groups.items() for t, c, m in zip(*cols)
+    ]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "g string, t long, cnt double, mean double")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        blocks = {
+            r["g"]: r
+            for r in C.compress_table(
+                df, group_cols=("g",), epoch_col="t", value_cols=("cnt", "mean")
+            ).collect()
+        }
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(blocks) == sorted(groups)
+    for g, (ts, cnt, mean) in groups.items():
+        b = blocks[g]
+        assert b["n"] == len(ts) and b["first_ts"] == ts[0]
+        assert bytes(b["ts_block"]) == G.encode_timestamps(ts), g
+        for c, vals in (("cnt", cnt), ("mean", mean)):
+            assert b[f"first_{c}"] == vals[0]
+            assert bytes(b[f"blk_{c}"]) == G.encode_values(vals), (g, c)
 
 
 def test_block_format_version_gate(spark):
@@ -103,22 +144,22 @@ def test_block_format_version_gate(spark):
     from tsengine.core import from_ts_lists
 
     df = from_ts_lists(spark, [[(1398895200 + 60 * i, float(i)) for i in range(10)]])
-    blocks = C.compress_series(df)
+    blocks = C.compress_table(df, **SERIES)
     assert blocks.select("fmt").distinct().collect()[0][0] == C.BLOCK_FORMAT_VERSION
 
     # version-less table: rejected at plan time
     with pytest.raises(ValueError, match="no 'fmt' version column"):
-        C.decompress_series(blocks.drop("fmt"))
+        C.decompress_table(blocks.drop("fmt"), **SERIES)
 
     # wrong version: rejected at execution time with the version named
     stale = blocks.withColumn("fmt", F.lit(1).cast("tinyint"))
     with pytest.raises(Exception, match="format version"):
-        C.decompress_series(stale).collect()
+        C.decompress_table(stale, **SERIES).collect()
 
 
 def test_batch_encoder_matches_single_series():
-    """encode_blocks_batch over concatenated series == encode_timestamps/
-    encode_values per series, byte for byte."""
+    """encode_ts_batch/encode_values_batch over concatenated series ==
+    encode_timestamps/encode_values per series, byte for byte."""
     import numpy as np
 
     from tsengine import compress as C
@@ -132,8 +173,9 @@ def test_batch_encoder_matches_single_series():
     ts = np.concatenate(parts_ts)
     vals = np.concatenate(parts_v)
     bounds = np.concatenate(([0], np.cumsum(sizes)))
-    ns, ft, fv, tb, vb = C.encode_blocks_batch(ts, vals, bounds)
-    assert list(ns) == sizes
+    ft, tb = C.encode_ts_batch(ts, bounds)
+    fv, vb = C.encode_values_batch(vals, bounds)
+    assert len(tb) == len(vb) == len(sizes)
     for i, n in enumerate(sizes):
         assert ft[i] == parts_ts[i][0]
         assert fv[i] == parts_v[i][0]
@@ -167,14 +209,17 @@ def test_batch_decoder_matches_scalar_and_input():
         ns_l.append(n); ts_l.append(ts); v_l.append(v)
     flat_ts, flat_v = np.concatenate(ts_l), np.concatenate(v_l)
     bounds = np.concatenate([[0], np.cumsum(ns_l)])
-    ns, ft, fv, tb, vb = C.encode_blocks_batch(flat_ts, flat_v, bounds)
+    ns = np.diff(bounds)
+    ft, tb = C.encode_ts_batch(flat_ts, bounds)
+    fv, vb = C.encode_values_batch(flat_v, bounds)
     ref_t, ref_v = [], []
     for i in range(len(ns)):
         t, v = G.decode_block(
             {"n": int(ns[i]), "first_ts": int(ft[i]), "first_val": float(fv[i]),
              "ts_block": tb[i], "val_block": vb[i]})
         ref_t.append(t); ref_v.append(v)
-    bt, bv = C.decode_blocks_batch(ns, ft, fv, tb, vb)
+    bt = C.decode_ts_batch(ns, ft, tb)
+    bv = C.decode_values_batch(ns, fv, vb)
     assert np.array_equal(bt, np.concatenate(ref_t))
     assert np.array_equal(bv.view(np.uint64), np.concatenate(ref_v).view(np.uint64))
     assert np.array_equal(bt, flat_ts)

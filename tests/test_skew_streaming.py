@@ -30,82 +30,6 @@ def test_hot_keys_detects_skew(spark):
     assert len(hot) <= 3
 
 
-def test_stateful_latency_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState operator: streamed per-conv latency aggregates
-    over MULTIPLE micro-batches (maxFilesPerTrigger=1, conversations split
-    across files) must equal the batch with_latency plane exactly."""
-    import time as _time
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from tsengine.operators import rollup as R
-    from tsengine.streaming import continuous as S
-
-    src = str(tmp_path / "turns")
-    full = transcripts(spark, n_conv=6, base_turns=20, hot_factor=3).withColumn(
-        "day", F.lit("x")
-    )
-    # two files with disjoint turn ranges, second strictly newer (mtime
-    # drives file-source order) -> every conv spans both micro-batches
-    full.filter(F.col("turn_idx") < 10).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(1.1)
-    full.filter(F.col("turn_idx") >= 10).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, day string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = str(tmp_path / "out")
-    q = (
-        S.latency_state_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got_df = spark.read.parquet(out)
-    # several rows per conv (one per micro-batch): the final state is the
-    # row with the highest cnt
-    final = {
-        r["conv_id"]: r
-        for r in got_df.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("conv_id").orderBy(F.col("cnt").desc())
-            ),
-        ).filter("_rn = 1").collect()
-    }
-    assert len(final) == 6
-    # a conv emitted more than one row -> state really crossed batches
-    assert got_df.groupBy("conv_id").count().agg(F.max("count")).first()[0] >= 2
-
-    exp = {
-        r["conv_id"]: r
-        for r in R.with_latency(full.drop("day"))
-        .groupBy("conv_id")
-        .agg(
-            F.count("*").alias("cnt"), F.count("value").alias("cnt_lat"),
-            F.min("value").alias("vmin"), F.max("value").alias("vmax"),
-            F.sum("value").alias("vsum"),
-        )
-        .collect()
-    }
-    for cid, e in exp.items():
-        g = final[cid]
-        assert g["cnt"] == e["cnt"] and g["cnt_lat"] == e["cnt_lat"], cid
-        assert g["vmin"] == e["vmin"] and g["vmax"] == e["vmax"], cid
-        assert abs(g["vsum"] - e["vsum"]) < 1e-9, cid
-        assert g["late_dropped"] == 0
-
-
 def test_stream_ingest_to_snapshot_exactly_once(spark, tmp_path):
     """foreachBatch -> SnapshotTable ingestion: one snapshot per micro-batch
     with stream_batch_id in properties, tiers maintained incrementally with

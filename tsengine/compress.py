@@ -2,8 +2,10 @@
 (BASELINE.json north_rule), implemented from the public Gorilla paper
 (Pelkonen et al., "Gorilla: A Fast, Scalable, In-Memory Time Series
 Database", VLDB 2015, §4.1-4.2) as pandas/Arrow kernels driven by
-``applyInPandas`` over per-series sorted batches — Spark sees one vectorized
-UDF per block, never per-row Python.
+``mapInPandas`` over group-sorted Arrow batches — each Python call encodes
+or decodes every series of a batch, never per-row Python.  The Spark layer
+is :func:`compress_table`/:func:`decompress_table`; a single series is a
+one-value-column table.
 
 Timestamp encoding (§4.1): store first_ts in the block header; every
 subsequent point as a delta-of-delta D with the paper's variable codes,
@@ -32,9 +34,10 @@ Bit packing is numpy-vectorized: per-element (code, bitlength) pairs are
 computed columnwise, then scattered into one bit array with cumsum offsets —
 no per-element Python in the hot loop for encode.  Decode is inherently
 sequential per stream (variable-length prefix codes) and runs lock-step
-across every stream of an Arrow batch (:func:`decode_blocks_batch`).  The
-one-series-at-a-time codec these batch kernels generalize is kept as their
-test oracle in :mod:`oracle.gorilla_scalar`.
+across every stream of an Arrow batch (:func:`decode_ts_batch`,
+:func:`decode_values_batch`).  The one-series-at-a-time codec these batch
+kernels generalize is kept as their test oracle in
+:mod:`oracle.gorilla_scalar`.
 """
 
 from __future__ import annotations
@@ -150,39 +153,32 @@ def _splice_payload(codes, lens, keys, esc_idx, payload, plens, owner):
     return codes[order], lens[order], owner[order]
 
 
-def encode_blocks_batch(ts: np.ndarray, vals: np.ndarray, bounds: np.ndarray):
-    """Encode MANY series at once: ``bounds`` delimits contiguous series in
-    ``ts``/``vals`` (len S+1).  Returns (ns, first_ts, first_val, ts_blocks,
-    val_blocks) where the first three are arrays of length S and the last
-    two are lists of bytes.  Batch-wide vectorization: deltas, dod
-    classification, XOR classification and bit packing are each ONE numpy
-    pass over the whole batch with series boundaries masked out.
-    """
-    ts = np.asarray(ts, dtype=np.int64)
-    v = np.asarray(vals, dtype=np.float64).view(np.uint64)
+def _series_rows(bounds):
+    """(first row, series of each row, intra-series adjacency) for the S
+    series ``bounds`` delimits: ``same[j]`` is True when rows j and j+1
+    belong to one series, so the delta/XOR between them is coded (on row
+    j+1) and cross-series pairs are masked out."""
     bounds = np.asarray(bounds, dtype=np.int64)
-    S = len(bounds) - 1
-    los, his = bounds[:-1], bounds[1:]
-    ns = his - los
-    owner_i = np.repeat(np.arange(S), ns)  # series of each global row
+    owner = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+    return bounds[:-1], owner, owner[1:] == owner[:-1]
 
-    # ---------------- timestamps ----------------
-    if len(ts) > 1:
-        d = np.diff(ts)
-        same_d = owner_i[1:] == owner_i[:-1]  # delta stays within one series
-    else:
-        d = np.zeros(0, dtype=np.int64)
-        same_d = np.zeros(0, dtype=bool)
+
+def encode_ts_batch(ts: np.ndarray, bounds: np.ndarray):
+    """Delta-of-delta encode MANY series at once: ``bounds`` (len S+1)
+    delimits contiguous series in ``ts``.  Returns (first_ts, ts_blocks):
+    an int64 array and a list of bytes, one per series.  Deltas, dod
+    classification and bit packing are each ONE numpy pass over the whole
+    batch with series boundaries masked out."""
+    ts = np.asarray(ts, dtype=np.int64)
+    firsts, owner_i, same_d = _series_rows(bounds)
+    d = np.diff(ts)
 
     # every intra-series delta d[j] becomes one bucket code at row j+1:
     # dod = d[j] - d[j-1] when d[j-1] is in the same series, else d[j] - 0
     # (implicit zero previous delta at each series start)
     j = np.where(same_d)[0]
-    prev_ok = np.zeros(len(j), dtype=bool)
-    if len(j):
-        prev_ok = (j >= 1) & same_d[np.maximum(j - 1, 0)]
+    prev_ok = (j >= 1) & same_d[np.maximum(j - 1, 0)]
     dod = d[j] - np.where(prev_ok, d[np.maximum(j - 1, 0)], 0)
-    dod_owner = owner_i[j]
     zero = dod == 0
     b7 = (~zero) & (dod >= -63) & (dod <= 64)
     b9 = (~zero) & (~b7) & (dod >= -255) & (dod <= 256)
@@ -198,51 +194,37 @@ def encode_blocks_batch(ts: np.ndarray, vals: np.ndarray, bounds: np.ndarray):
     dlens[b12] = 16
     dcodes[b64] = _U64(0b1111)
     dlens[b64] = 4
-    dkeys = (j + 1) * 2  # code for delta d[j] is stamped on row j+1
-
-    esc = np.where(b64)[0]
-    t_codes, t_lens, t_owner = _splice_payload(
-        dcodes, dlens, dkeys, esc,
-        dod[b64].astype(np.int64).view(np.uint64),
-        np.full(int(b64.sum()), 64, dtype=np.int64), dod_owner,
+    codes, lens, owner = _splice_payload(
+        dcodes, dlens, (j + 1) * 2, np.where(b64)[0],
+        dod[b64].view(np.uint64), np.full(int(b64.sum()), 64, dtype=np.int64),
+        owner_i[j],
     )
-    ts_blocks = _pack_streams(t_codes, t_lens, t_owner, S)
+    return ts[firsts], _pack_streams(codes, lens, owner, len(firsts))
 
-    # ---------------- values ----------------
-    if len(v) > 1:
-        x = v[1:] ^ v[:-1]
-        k = np.where(same_d)[0]  # xor index k encodes row k+1
-    else:
-        x = np.zeros(0, dtype=np.uint64)
-        k = np.zeros(0, dtype=np.int64)
-    xor = x[k]
-    x_owner = owner_i[k]
+
+def encode_values_batch(vals: np.ndarray, bounds: np.ndarray):
+    """Gorilla XOR encode MANY series at once (same ``bounds`` contract as
+    :func:`encode_ts_batch`).  Returns (first_vals, val_blocks): a float64
+    array and a list of bytes, one per series."""
+    v = np.asarray(vals, dtype=np.float64).view(np.uint64)
+    firsts, owner_i, same = _series_rows(bounds)
+    k = np.where(same)[0]  # xor index k encodes row k+1
+    xor = (v[1:] ^ v[:-1])[k]
     lz = np.minimum(_clz64(xor), 31)
     tz = _ctz64(xor)
-    zero = xor == 0
-    nz = ~zero
+    nz = xor != 0
     mbits = np.where(nz, 64 - lz - tz, 0)
     header = (
         (_U64(0b11) << _U64(12))
         | (lz.astype(_U64) << _U64(6))
         | (mbits & 63).astype(_U64)
     )
-    vcodes = np.where(zero, _U64(0), header.astype(np.uint64))
-    vlens = np.where(zero, 1, 14).astype(np.int64)
-    vkeys = (k + 1) * 2
-    esc = np.where(nz)[0]
-    tz_nz = tz[nz].astype(_U64)
-    vcodes, vlens, v_owner = _splice_payload(
-        vcodes, vlens, vkeys, esc, (xor[nz] >> tz_nz).astype(_U64),
-        mbits[nz].astype(np.int64), x_owner,
+    codes, lens, owner = _splice_payload(
+        np.where(nz, header, _U64(0)), np.where(nz, 14, 1).astype(np.int64),
+        (k + 1) * 2, np.where(nz)[0], xor[nz] >> tz[nz].astype(_U64),
+        mbits[nz].astype(np.int64), owner_i[k],
     )
-    val_blocks = _pack_streams(vcodes, vlens, v_owner, S)
-
-    first_ts = ts[los] if len(ts) else np.zeros(0, dtype=np.int64)
-    first_val = (
-        v[los].view(np.float64) if len(v) else np.zeros(0, dtype=np.float64)
-    )
-    return ns, first_ts, first_val, ts_blocks, val_blocks
+    return v[firsts].view(np.float64), _pack_streams(codes, lens, owner, len(firsts))
 
 
 # ------------------------------------------------------------ batch decoding
@@ -280,51 +262,38 @@ def _concat_streams(blocks: list) -> tuple[np.ndarray, np.ndarray]:
     return buf, (byte_off * 8).astype(np.uint64)
 
 
-def decode_blocks_batch(
-    ns: np.ndarray,
-    first_ts: np.ndarray,
-    first_val: np.ndarray,
-    ts_blocks: list,
-    val_blocks: list,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode MANY blocks at once, lock-step across streams: iteration ``i``
-    decodes point ``i`` of every stream that still has one, as a handful of
-    numpy passes (two :func:`_gather_windows` reads + mask arithmetic).
-    Python-level iteration count is max(ns), not sum(ns) — the batch-side
-    dual of :func:`encode_blocks_batch`, and the fix for the per-point
-    decode loop the round-1 bench flagged as the engine's slowest path.
-
-    Returns (timestamps, values) concatenated in input stream order
-    (lengths = ``ns``).
-    """
+def _stream_order(ns):
+    """Lock-step decode order: streams sorted longest first, so the streams
+    still active at point ``i`` are the prefix ``[:active[i]]`` and
+    per-iteration state access is views, not boolean masks.  Returns
+    (order, output offset of each ordered stream, active)."""
     ns = np.asarray(ns, dtype=np.int64)
-    S = len(ns)
-    total = int(ns.sum())
-    ts_out = np.empty(total, dtype=np.int64)
-    val_out = np.empty(total, dtype=np.float64)
-    if total == 0:
-        return ts_out, val_out
-    off_orig = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    # sorted-descending stream order makes "streams still active at i" a
-    # prefix slice, so per-iteration state access is views, not boolean masks
     order = np.argsort(-ns, kind="stable")
+    off = np.concatenate(([0], np.cumsum(ns)[:-1]))[order]
     ns_s = ns[order]
-    off_s = off_orig[order]
-    max_n = int(ns_s[0])
+    max_n = int(ns_s[0]) if len(ns_s) else 0
+    active = np.searchsorted(-ns_s, -np.arange(max_n), side="left")
+    return order, off, active
 
-    def active(i: int) -> int:
-        return int(np.searchsorted(-ns_s, -i, side="left"))
 
-    # ---------------- timestamps ----------------
-    tbuf, tpos0 = _concat_streams([ts_blocks[s] for s in order])
-    pos = tpos0.copy()
-    delta = np.zeros(S, dtype=np.int64)
-    prev = first_ts[order].astype(np.int64).copy()
-    k0 = active(0)
-    ts_out[off_s[:k0]] = prev[:k0]
-    for i in range(1, max_n):
-        k = active(i)
-        win = _gather_windows(tbuf, pos[:k])
+def decode_ts_batch(ns: np.ndarray, first_ts: np.ndarray, ts_blocks: list) -> np.ndarray:
+    """Decode MANY timestamp streams at once, lock-step across streams:
+    iteration ``i`` decodes point ``i`` of every stream that still has one,
+    as a handful of numpy passes (:func:`_gather_windows` reads + mask
+    arithmetic).  Python-level iteration count is max(ns), not sum(ns).
+    Returns the timestamps concatenated in input stream order (lengths =
+    ``ns``)."""
+    order, off, active = _stream_order(ns)
+    out = np.empty(int(np.sum(ns)), dtype=np.int64)
+    if not len(active):
+        return out
+    buf, pos = _concat_streams([ts_blocks[s] for s in order])
+    delta = np.zeros(len(order), dtype=np.int64)
+    prev = np.asarray(first_ts, dtype=np.int64)[order]
+    out[off[:active[0]]] = prev[:active[0]]
+    for i in range(1, len(active)):
+        k = active[i]
+        win = _gather_windows(buf, pos[:k])
         c4 = (win >> np.uint64(60)).astype(np.int64)  # top 4 control bits
         cls0 = c4 < 8
         cls1 = (c4 >> 2) == 0b10
@@ -342,22 +311,30 @@ def decode_blocks_batch(
         dod[cls3] = small[cls3] - 2047
         if cls4.any():  # 64-bit escape: second gather just past the prefix
             p4 = pos[:k][cls4] + np.uint64(4)
-            dod[cls4] = _gather_windows(tbuf, p4).view(np.int64)
+            dod[cls4] = _gather_windows(buf, p4).view(np.int64)
         delta[:k] += dod
         prev[:k] += delta[:k]
-        ts_out[off_s[:k] + i] = prev[:k]
+        out[off[:k] + i] = prev[:k]
         pos[:k] += (ctrl + plen).astype(np.uint64)
+    return out
 
-    # ---------------- values ----------------
-    vbuf, vpos0 = _concat_streams([val_blocks[s] for s in order])
-    pos = vpos0.copy()
-    prevb = first_val[order].astype(np.float64).view(np.uint64).copy()
-    lead = np.zeros(S, dtype=np.int64)
-    trail = np.zeros(S, dtype=np.int64)
-    val_out[off_s[:k0]] = prevb[:k0].view(np.float64)
-    for i in range(1, max_n):
-        k = active(i)
-        win = _gather_windows(vbuf, pos[:k])
+
+def decode_values_batch(ns: np.ndarray, first_vals: np.ndarray, val_blocks: list) -> np.ndarray:
+    """Lock-step XOR decode of MANY value streams — the value-side dual of
+    :func:`decode_ts_batch`.  Returns float64 values in input stream
+    order."""
+    order, off, active = _stream_order(ns)
+    out = np.empty(int(np.sum(ns)), dtype=np.float64)
+    if not len(active):
+        return out
+    buf, pos = _concat_streams([val_blocks[s] for s in order])
+    prevb = np.asarray(first_vals, dtype=np.float64)[order].view(np.uint64)
+    lead = np.zeros(len(order), dtype=np.int64)
+    trail = np.zeros(len(order), dtype=np.int64)
+    out[off[:active[0]]] = prevb[:active[0]].view(np.float64)
+    for i in range(1, len(active)):
+        k = active[i]
+        win = _gather_windows(buf, pos[:k])
         b0 = (win >> np.uint64(63)).astype(np.int64)
         b1 = (win >> np.uint64(62)).astype(np.int64) & 1
         is_same = b0 == 0
@@ -371,22 +348,32 @@ def decode_blocks_batch(
         new_t = 64 - new_l - new_m
         pre = np.select([is_same, is_reuse], [1, 2], default=14)
         pw = np.select([is_same, is_reuse], [0, m_old], default=new_m)
-        pay = _take_bits(_gather_windows(vbuf, pos[:k] + pre.astype(np.uint64)), pw)
+        pay = _take_bits(_gather_windows(buf, pos[:k] + pre.astype(np.uint64)), pw)
         t_eff = np.select([is_reuse], [trail[:k]], default=new_t)
         t_eff = np.where(pw > 0, t_eff, 0).astype(np.uint64)
         cur = np.where(is_same, prevb[:k], prevb[:k] ^ (pay << t_eff))
-        val_out[off_s[:k] + i] = cur.view(np.float64)
+        out[off[:k] + i] = cur.view(np.float64)
         prevb[:k] = cur
         lead[:k] = np.where(is_new, new_l, lead[:k])
         trail[:k] = np.where(is_new, new_t, trail[:k])
         pos[:k] += (pre + pw).astype(np.uint64)
-
-    return ts_out, val_out
+    return out
 
 
 # ------------------------------------------------------------------ Spark layer
-def compress_series(df, group_cols=("series_id",), epoch_col="epoch", value_col="value"):
-    """DataFrame (group, epoch, value) -> one compressed block per group.
+def _group_types(df, gcols):
+    m = dict(df.dtypes)
+    return [m[c] for c in gcols]
+
+
+def compress_table(df, group_cols, epoch_col, value_cols):
+    """DataFrame (group, epoch, value columns) -> one compressed block row
+    per group: ONE delta-of-delta timestamp stream (``first_ts`` long +
+    ``ts_block`` binary) plus a Gorilla XOR stream PER value column
+    (``first_<c>`` double + ``blk_<c>`` binary), ``n`` points and the
+    ``fmt`` wire version.  A single series is the one-column case
+    (``value_cols=("value",)``).  Integer columns are encoded through their
+    float64 image (exact to 2^53 — tier counts).
 
     Scale design: ``repartition(group) + sortWithinPartitions(group, epoch) +
     mapInPandas`` rather than per-group ``applyInPandas`` — each Python call
@@ -395,135 +382,7 @@ def compress_series(df, group_cols=("series_id",), epoch_col="epoch", value_col=
     per-call pandas/Arrow overhead is amortized over ~10^4 rows instead of
     being paid once per series.  Repartitioning on the group keys guarantees
     each series is wholly inside one partition, so carry-over never crosses
-    a partition boundary.
-    """
-    import pandas as pd
-
-    gcols = list(group_cols)
-    schema_prefix = ", ".join(
-        f"{c} {t}" for c, t in zip(gcols, _group_types(df, gcols))
-    )
-    schema = (
-        schema_prefix
-        + ", n int, first_ts long, first_val double, ts_block binary,"
-        + " val_block binary, fmt tinyint"
-    )
-    out_cols = gcols + ["n", "first_ts", "first_val", "ts_block", "val_block", "fmt"]
-
-    def encode_span(pdf, bounds):
-        """Encode the series delimited by ``bounds`` inside pdf via the
-        batch encoder -> one output frame."""
-        ns, ft, fv, tb, vb = encode_blocks_batch(
-            pdf[epoch_col].to_numpy(), pdf[value_col].to_numpy(), bounds
-        )
-        data = {c: pdf[c].to_numpy()[bounds[:-1]] for c in gcols}
-        data.update(
-            {"n": ns.astype("int32"), "first_ts": ft, "first_val": fv,
-             "ts_block": tb, "val_block": vb,
-             "fmt": np.full(len(ns), BLOCK_FORMAT_VERSION, dtype="int8")}
-        )
-        return pd.DataFrame(data, columns=out_cols)
-
-    def kernel(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            gv = [pdf[c].to_numpy() for c in gcols]
-            # boundaries where any group column changes
-            change = np.zeros(len(pdf) - 1, dtype=bool)
-            for g in gv:
-                change |= g[1:] != g[:-1]
-            bounds = np.concatenate(([0], np.where(change)[0] + 1, [len(pdf)]))
-            # last run may continue in the next batch — carry it
-            carry = pdf.iloc[bounds[-2]:].copy()
-            if len(bounds) > 2:
-                yield encode_span(pdf, bounds[:-1])
-        if carry is not None and len(carry):
-            yield encode_span(carry, np.array([0, len(carry)], dtype=np.int64))
-
-    part = df.repartition(*gcols).sortWithinPartitions(*gcols, epoch_col)
-    return part.mapInPandas(kernel, schema=schema)
-
-
-def decompress_series(blocks_df, group_cols=("series_id",)):
-    """Inverse of :func:`compress_series`: blocks -> (group, epoch, value).
-
-    Blocks are self-contained, so this is ``mapInPandas`` straight over the
-    block rows — NO shuffle (the previous groupBy().applyInPandas paid a full
-    exchange for nothing) — and each Arrow batch of blocks is decoded by the
-    lock-step :func:`decode_blocks_batch` instead of a per-row, per-point
-    Python loop.
-
-    Version gate: blocks must carry ``fmt == BLOCK_FORMAT_VERSION``; a
-    missing column is rejected at plan time and a mismatched value per
-    batch, so pre-v2 persisted blocks fail loudly instead of decoding to
-    wrong timestamps."""
-    import pandas as pd
-
-    if "fmt" not in blocks_df.columns:
-        raise ValueError(
-            "compressed blocks carry no 'fmt' version column — these were "
-            "written by a pre-v2 encoder and are not decodable by this "
-            f"version (expected fmt={BLOCK_FORMAT_VERSION}); re-encode from raw"
-        )
-    gcols = list(group_cols)
-    schema_prefix = ", ".join(
-        f"{c} {t}" for c, t in zip(gcols, _group_types(blocks_df, gcols))
-    )
-    schema = schema_prefix + ", epoch long, value double"
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            fmts = pdf["fmt"].to_numpy()
-            if (fmts != BLOCK_FORMAT_VERSION).any():
-                bad = sorted(set(int(x) for x in fmts[fmts != BLOCK_FORMAT_VERSION]))
-                raise ValueError(
-                    f"unsupported compressed-block format version(s) {bad}; "
-                    f"this decoder reads fmt={BLOCK_FORMAT_VERSION} only"
-                )
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            ts, vals = decode_blocks_batch(
-                ns,
-                pdf["first_ts"].to_numpy(dtype=np.int64),
-                pdf["first_val"].to_numpy(dtype=np.float64),
-                [bytes(b) for b in pdf["ts_block"]],
-                [bytes(b) for b in pdf["val_block"]],
-            )
-            data = {c: np.repeat(pdf[c].to_numpy(), ns) for c in gcols}
-            data["epoch"] = ts
-            data["value"] = vals
-            yield pd.DataFrame(data, columns=gcols + ["epoch", "value"])
-
-    return blocks_df.mapInPandas(kernel, schema=schema)
-
-
-def _group_types(df, gcols):
-    m = dict(df.dtypes)
-    return [m[c] for c in gcols]
-
-
-# -------------------------------------------------- multi-column block tables
-def compress_table(df, group_cols=("conv_id",), epoch_col="bucket",
-                   value_cols=("vsum",)):
-    """Multi-column variant of :func:`compress_series` for tier storage
-    (VERDICT r04 task 4): one block row per group carries ONE shared
-    delta-of-delta timestamp stream plus a Gorilla XOR value stream PER
-    column (``first_<c>`` double + ``blk_<c>`` binary).  Integer columns are
-    encoded through their float64 image (exact to 2^53 — tier counts).
-
-    Same scale shape as compress_series: repartition on the group keys +
-    sortWithinPartitions + ONE mapInPandas with cross-batch series carry,
-    so each Python call amortizes over a whole Arrow batch.  The batch
-    encoder is invoked once per value column; its timestamp pass is
-    recomputed and discarded for columns past the first — a deliberate
-    simplicity trade (the ts pass is one vectorized sweep, a small fraction
-    of the XOR work)."""
+    a partition boundary."""
     import pandas as pd
 
     gcols, vcols = list(group_cols), list(value_cols)
@@ -541,21 +400,19 @@ def compress_table(df, group_cols=("conv_id",), epoch_col="bucket",
     )
 
     def encode_span(pdf, bounds):
-        ts = pdf[epoch_col].to_numpy()
+        """Encode the series delimited by ``bounds`` inside pdf -> one
+        output frame; the timestamp stream is encoded once for all value
+        columns."""
+        ft, tb = encode_ts_batch(pdf[epoch_col].to_numpy(), bounds)
         data = {c: pdf[c].to_numpy()[bounds[:-1]] for c in gcols}
-        first = True
+        data.update({
+            "n": np.diff(bounds).astype("int32"), "first_ts": ft, "ts_block": tb,
+            "fmt": np.full(len(tb), BLOCK_FORMAT_VERSION, dtype="int8"),
+        })
         for c in vcols:
-            ns, ft, fv, tb, vb = encode_blocks_batch(
-                ts, pdf[c].to_numpy(dtype="float64"), bounds
+            data[f"first_{c}"], data[f"blk_{c}"] = encode_values_batch(
+                pdf[c].to_numpy(dtype="float64"), bounds
             )
-            if first:
-                data.update({
-                    "n": ns.astype("int32"), "first_ts": ft, "ts_block": tb,
-                    "fmt": np.full(len(ns), BLOCK_FORMAT_VERSION, dtype="int8"),
-                })
-                first = False
-            data[f"first_{c}"] = fv
-            data[f"blk_{c}"] = vb
         return pd.DataFrame(data, columns=out_cols)
 
     def kernel(batches):
@@ -566,11 +423,13 @@ def compress_table(df, group_cols=("conv_id",), epoch_col="bucket",
                 carry = None
             if not len(pdf):
                 continue
-            gv = [pdf[c].to_numpy() for c in gcols]
+            # boundaries where any group column changes
             change = np.zeros(len(pdf) - 1, dtype=bool)
-            for g in gv:
+            for c in gcols:
+                g = pdf[c].to_numpy()
                 change |= g[1:] != g[:-1]
             bounds = np.concatenate(([0], np.where(change)[0] + 1, [len(pdf)]))
+            # last run may continue in the next batch — carry it
             carry = pdf.iloc[bounds[-2]:].copy()
             if len(bounds) > 2:
                 yield encode_span(pdf, bounds[:-1])
@@ -581,14 +440,29 @@ def compress_table(df, group_cols=("conv_id",), epoch_col="bucket",
     return part.mapInPandas(kernel, schema=schema)
 
 
-def decompress_table(blocks_df, group_cols=("conv_id",), epoch_col="bucket",
-                     value_cols=("vsum",)):
+def decompress_table(blocks_df, group_cols, epoch_col, value_cols):
     """Inverse of :func:`compress_table`: block rows -> (group, epoch,
-    value columns).  Shuffle-free mapInPandas over self-contained blocks,
-    with the same fmt version gate as decompress_series."""
+    value columns).
+
+    Blocks are self-contained, so this is ``mapInPandas`` straight over the
+    block rows — NO shuffle — and each Arrow batch of blocks is decoded by
+    the lock-step :func:`decode_ts_batch` (once) and
+    :func:`decode_values_batch` (per column) instead of a per-row,
+    per-point Python loop.
+
+    Version gate: blocks must carry ``fmt == BLOCK_FORMAT_VERSION``; a
+    missing column is rejected at plan time and a mismatched value per
+    batch, so pre-v2 persisted blocks fail loudly instead of decoding to
+    wrong timestamps."""
     import pandas as pd
 
-    for col in ["fmt", "n", "first_ts", "ts_block"]:
+    if "fmt" not in blocks_df.columns:
+        raise ValueError(
+            "compressed blocks carry no 'fmt' version column — these were "
+            "written by a pre-v2 encoder and are not decodable by this "
+            f"version (expected fmt={BLOCK_FORMAT_VERSION}); re-encode from raw"
+        )
+    for col in ["n", "first_ts", "ts_block"]:
         if col not in blocks_df.columns:
             raise ValueError(f"compressed block table missing {col!r} column")
     gcols, vcols = list(group_cols), list(value_cols)
@@ -612,19 +486,16 @@ def decompress_table(blocks_df, group_cols=("conv_id",), epoch_col="bucket",
                     f"this decoder reads fmt={BLOCK_FORMAT_VERSION} only"
                 )
             ns = pdf["n"].to_numpy(dtype=np.int64)
-            ft = pdf["first_ts"].to_numpy(dtype=np.int64)
-            tsb = [bytes(b) for b in pdf["ts_block"]]
             data = {c: np.repeat(pdf[c].to_numpy(), ns) for c in gcols}
-            first = True
+            data[epoch_col] = decode_ts_batch(
+                ns, pdf["first_ts"].to_numpy(dtype=np.int64),
+                [bytes(b) for b in pdf["ts_block"]],
+            )
             for c in vcols:
-                ts, vals = decode_blocks_batch(
-                    ns, ft, pdf[f"first_{c}"].to_numpy(dtype=np.float64),
-                    tsb, [bytes(b) for b in pdf[f"blk_{c}"]],
+                data[c] = decode_values_batch(
+                    ns, pdf[f"first_{c}"].to_numpy(dtype=np.float64),
+                    [bytes(b) for b in pdf[f"blk_{c}"]],
                 )
-                if first:
-                    data[epoch_col] = ts
-                    first = False
-                data[c] = vals
             yield pd.DataFrame(data, columns=gcols + [epoch_col] + vcols)
 
     return blocks_df.mapInPandas(kernel, schema=schema)

@@ -291,8 +291,8 @@ def q_compress_roundtrip(spark, sf_dir):
     from tsengine.core import events_as_series
 
     ev = events_as_series(spark, sf_dir)
-    blocks = C.compress_series(ev)
-    back = C.decompress_series(blocks)
+    cols = dict(group_cols=("series_id",), epoch_col="epoch", value_cols=("value",))
+    back = C.decompress_table(C.compress_table(ev, **cols), **cols)
     return back.select("series_id", "epoch", F.round("value", 6).alias("value"))
 
 

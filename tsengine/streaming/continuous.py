@@ -6,84 +6,15 @@ engine's continuous-aggregate path is the incremental refresh of
 module adds the Structured Streaming rendering for ingest:
 :func:`stream_ingest_to_snapshot` commits each micro-batch of a file-source
 stream into a :class:`~tsengine.sources.snapshots.SnapshotTable` exactly once
-and can fold it into the tiers, and :func:`latency_state_stream` keeps the
-per-conversation latency plane as stateful streaming state.
+and can fold it into the tiers; the refresh's conv-state anchors carry the
+latency plane across micro-batches.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from tsengine.synth import TRANSCRIPT_COLS
-
-LATENCY_STATE_OUT = (
-    "conv_id string, cnt long, cnt_lat long, vmin double, vmax double, "
-    "vsum double, last_epoch long, late_dropped long"
-)
-_LATENCY_STATE = (
-    "last_epoch long, last_turn int, cnt long, cnt_lat long, vmin double, "
-    "vmax double, vsum double, late_dropped long"
-)
-
-
-def latency_state_stream(stream: DataFrame) -> DataFrame:
-    """Per-conversation latency plane as a STATEFUL streaming operator
-    (``applyInPandasWithState``): a windowed streaming aggregate cannot
-    carry turn latency because lag() needs per-conv ordering ACROSS
-    micro-batches — this operator keeps exactly that state (last epoch +
-    last turn index per conv_id) and emits the running cnt/min/max/sum aggregate after every
-    batch.  Each batch's rows are sorted by turn_idx inside the kernel and
-    diffed vectorized (numpy), with the cross-batch boundary latency taken
-    against the stored last epoch.
-
-    Late-data policy: a turn at or below the stored turn index arrived out
-    of order across batches — it is dropped and counted in ``late_dropped``
-    (the streaming analogue of a watermark drop).
-    """
-    import numpy as np
-    import pandas as pd
-
-    def fn(key, pdfs, state):
-        (conv_id,) = key
-        if state.exists:
-            le, lt, cnt, cl, mn, mx, sm, dropped = state.get
-        else:
-            le, lt, cnt, cl, mn, mx, sm, dropped = None, -1, 0, 0, None, None, 0.0, 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values("turn_idx")
-            keep = batch[batch["turn_idx"] > lt]
-            dropped += len(batch) - len(keep)
-            if len(keep):
-                eps = (keep["ts"].astype("int64") // 10**9).to_numpy()
-                lats = np.diff(eps).astype("float64")
-                if le is not None:
-                    lats = np.concatenate(([float(eps[0] - le)], lats))
-                cnt += len(keep)
-                cl += len(lats)
-                if len(lats):
-                    mn = float(lats.min()) if mn is None else min(mn, float(lats.min()))
-                    mx = float(lats.max()) if mx is None else max(mx, float(lats.max()))
-                    sm += float(lats.sum())
-                le = int(eps[-1])
-                lt = int(keep["turn_idx"].iloc[-1])
-        state.update((le, lt, cnt, cl, mn, mx, sm, dropped))
-        yield pd.DataFrame(
-            [{"conv_id": conv_id, "cnt": cnt, "cnt_lat": cl, "vmin": mn,
-              "vmax": mx, "vsum": sm, "last_epoch": le, "late_dropped": dropped}]
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        stream.select("conv_id", "turn_idx", "ts")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn, LATENCY_STATE_OUT, _LATENCY_STATE, "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def last_stream_batch_id(table) -> int:
