@@ -22,8 +22,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-# the queries whose plans carry the scale story (VERDICT plan-audit set +
-# the tier chain and the compressed-tier read path)
+# the queries whose plans carry the scale story (VERDICT plan-audit set,
+# the tier chain, the compressed-tier read path and the formula layer)
 PLAN_SET = [
     "q_usage_day",
     "q_distribute_linear",
@@ -31,6 +31,9 @@ PLAN_SET = [
     "q_jaccard_pairs",
     "q_rollup_1h",
     "q_pair_product",
+    "q_pair_addition_scalar_broadcast",
+    "q_get_increments",
+    "q_compound_formula",
     "q_knn_ivf",
     "q_semantic_dedup",
     "q_transcript_rollup_1m",

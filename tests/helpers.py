@@ -24,3 +24,21 @@ def assert_series_equal(df, expected, cols=("series_id", "epoch", "value"), tol=
                 assert not (ev is None) and math.isclose(gv, ev, rel_tol=tol, abs_tol=tol), f"{g} != {e}"
             else:
                 assert gv == ev, f"{g} != {e}"
+
+
+# joins that pair every row with every row: never in a scale plan
+RED_FLAG_JOINS = ("CartesianProduct", "BroadcastNestedLoopJoin")
+
+
+def executed_plan(df) -> str:
+    """The physical plan Spark would run (AQE's initial plan)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def parquet_series(spark, path, data):
+    """(series_id, epoch, value) rows written to parquet and read back, so
+    plans over the frame start from a ``FileScan parquet``."""
+    from tsengine.core import series_frame
+
+    series_frame(spark, data).write.parquet(str(path))
+    return spark.read.parquet(str(path))

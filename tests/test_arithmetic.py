@@ -1,16 +1,28 @@
 """Golden-vector ports: scalar ops and pairwise joins.
 Vectors from timeseries_functions_tests.py:309-511 (scalar) and 794-1175
-(addition/product/division incl. scalar broadcast and ÷0 drops)."""
+(addition/product/division incl. scalar broadcast and ÷0 drops), plus a
+differential test of the pairwise ops against tests/pair_reference.py."""
+
+import math
+import random
 
 import pytest
 
-from tests.helpers import assert_series_equal
-from tsengine.core import TsError, from_ts_lists
+from tests.helpers import (
+    RED_FLAG_JOINS,
+    assert_series_equal,
+    executed_plan,
+    parquet_series,
+    rows,
+)
+from tests.pair_reference import pair_op_reference
+from tsengine.core import TsError, from_ts_lists, series_frame
 from tsengine.operators.arithmetic import (
     addition,
     clean_duplicated,
     delete_critical_values,
     division,
+    pair_op,
     product,
     round_values,
     scalar_division,
@@ -160,6 +172,63 @@ def test_div_5_scalar_broadcast_per_series(spark):
     exp = [(0, 1393628100 + 300 * i, i / 500.0) for i in range(1000)]
     exp += [(1, 1393928100 + 300 * i, (i + 100) / 600.0) for i in range(1000)]
     assert_series_equal(out, exp)
+
+
+# per-series side sizes: 0 = absent, 1 = single row, "m" = several rows
+_SHAPES = [(1, 1), (1, "m"), ("m", 1), ("m", "m"), (0, "m"), ("m", 0), (0, 1), (1, 0)]
+_SPECIAL = [None, math.nan, math.inf, -math.inf, 0.0]
+
+
+def _random_side(rng, sid, size):
+    n = {0: 0, 1: 1, "m": rng.randint(2, 7)}[size]
+    out = []
+    for _ in range(n):
+        # epochs from a pool of 5 so both sides repeat epochs often
+        e = 300 * rng.randint(0, 4)
+        v = rng.choice(_SPECIAL) if rng.random() < 0.3 else float(rng.randint(-4, 4))
+        out.append((sid, e, v))
+    return out
+
+
+def _random_pair_rows(seed, n_series=64):
+    rng = random.Random(seed)
+    rows1, rows2 = [], []
+    for sid in range(n_series):
+        s1, s2 = _SHAPES[sid % len(_SHAPES)]
+        rows1 += _random_side(rng, sid, s1)
+        rows2 += _random_side(rng, sid, s2)
+    return rows1, rows2
+
+
+@pytest.mark.parametrize("op", ["add", "sub", "mul", "div"])
+def test_pair_op_matches_reference(spark, op):
+    """pair_op == the pure-Python tf:727-756 reference on random frames:
+    duplicate epochs on one or both sides, single-row series on either or
+    both sides, one-sided series, null/NaN/±inf values and ÷0."""
+    rows1, rows2 = _random_pair_rows(seed=["add", "sub", "mul", "div"].index(op))
+    got = rows(pair_op(series_frame(spark, rows1), series_frame(spark, rows2), op))
+    exp = sorted(pair_op_reference(rows1, rows2, op))
+    assert got == exp
+
+
+def test_product_formula_plan_scans_each_operand_once(spark, tmp_path):
+    """product(get_variable(a); get_variable(b)): one parquet scan and one
+    exchange per operand, plus the one exchange of the tagged union; no
+    join at all, so no Cartesian or nested-loop join."""
+    from tsengine.plans.api import Engine
+
+    t0 = 1393628100
+    data = [(s, t0 + 600 * i, float(i + s)) for s in range(2) for i in range(200)]
+    eng = Engine(spark, parquet_series(spark, tmp_path / "series.parquet", data))
+    gv = "get_variable({}; time_int = 3600; now = %d; range = last_week)" % (t0 + 86400)
+    out = eng.query(f"product({gv.format(0)}; {gv.format(1)})")
+    plan = executed_plan(out)
+    assert plan.count("FileScan parquet") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 3, plan
+    assert "Join" not in plan, plan
+    assert not any(f in plan for f in RED_FLAG_JOINS), plan
+    # both operands are on the same hourly grid: one product row per point
+    assert out.count() == eng.query(gv.format(0)).count() > 0
 
 
 def test_subtraction_identity(spark):

@@ -656,3 +656,34 @@ def test_semantic_pairs_probe_spread_on_narrow_input(spark):
         for r in dedup.semantic_dedup(wide, cents, threshold=0.3).collect()
     )
     assert got_narrow == got_wide
+
+
+def test_semantic_pairs_non_numeric_shuffle_partitions(spark, monkeypatch):
+    """Some platforms set spark.sql.shuffle.partitions to a non-numeric
+    value such as "auto".  The narrow-input respread must then fall back to
+    the context's default parallelism instead of raising ValueError."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from tsengine.operators import similarity
+
+    real_get = RuntimeConfig.get
+
+    def stub_get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    rng = np.random.default_rng(3)
+    emb = spark.createDataFrame(
+        [(i, rng.standard_normal(64).tolist()) for i in range(32)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    cents = similarity.fixed_centroids(4, 64, seed=7)
+    monkeypatch.setattr(RuntimeConfig, "get", stub_get)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "auto"
+    plan = (
+        dedup._semantic_pairs(emb, cents, threshold=0.3)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in plan, plan

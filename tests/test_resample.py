@@ -4,9 +4,10 @@ interpolation.  Vectors from reference tests/analysis/timeseries_functions_tests
 
 import pytest
 
-from tests.helpers import assert_series_equal
+from tests.helpers import RED_FLAG_JOINS, assert_series_equal, executed_plan, parquet_series
 from tsengine.core import from_ts_lists
 from tsengine.operators.resample import distribute, distribute_linear
+from tsengine.plans.api import Engine
 
 
 def test_dttsl_1(spark):
@@ -123,3 +124,46 @@ def test_linear_interp_reset(spark):
 def test_linear_interp_single_point_empty(spark):
     df = from_ts_lists(spark, [[(500, 1.0)]])
     assert distribute_linear(df, time_int=100).count() == 0
+
+
+# ---- plan shapes: each input read once and shuffled once ----
+
+T0 = 1393628100
+
+
+@pytest.fixture
+def pq_series(spark, tmp_path):
+    data = [(s, T0 + 300 * i + 7 * s, float(i)) for s in range(3) for i in range(40)]
+    return parquet_series(spark, tmp_path / "series.parquet", data)
+
+
+@pytest.mark.parametrize(
+    "resample",
+    [
+        lambda df: distribute(df, seconds=600),
+        lambda df: distribute(df, seconds=600, e_from=T0 - 3600, e_to=T0 + 86400),
+        lambda df: distribute(df, seconds=600, fill_value=-1.0),
+        lambda df: distribute_linear(df, time_int=600),
+    ],
+    ids=["locf", "locf_bounds", "fill_value", "linear"],
+)
+def test_distribute_plan_one_scan_one_exchange(pq_series, resample):
+    """The grid rows come from the partitioned stream itself: no bounds
+    aggregate, no second scan, one hash exchange on series_id."""
+    plan = executed_plan(resample(pq_series))
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Aggregate" not in plan, plan
+    assert not any(f in plan for f in RED_FLAG_JOINS), plan
+
+
+def test_get_increments_plan_one_scan(spark, pq_series):
+    """In-range rows and the pre-window anchor come from one scan and one
+    window; distribute and increments reuse its partitioning."""
+    eng = Engine(spark, pq_series)
+    now = T0 + 86400
+    for kw in ({"range": "last_day"}, {"range": "last_day", "count": 5}):
+        plan = executed_plan(eng.get_increments(1, time_int=3600, now=now, **kw))
+        assert plan.count("FileScan parquet") == 1, plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert not any(f in plan for f in RED_FLAG_JOINS), plan

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine.operators import rollup as R
+from tsengine.session import shuffle_parallelism
 from tsengine.sources.snapshots import SnapshotTable
 
 _SRC_PROP = "source_to_id"
@@ -96,7 +97,7 @@ def _ranged(df: DataFrame, n: int | None = None) -> DataFrame:
       of small incremental refreshes).  A single file trivially holds only
       whole days, so the day-wholeness contract is preserved."""
     if n is None:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = shuffle_parallelism(df.sparkSession)
     n = max(1, min(int(n), 1024))
     if n == 1:
         return df.repartition(1)

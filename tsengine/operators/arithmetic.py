@@ -5,20 +5,22 @@ Scalar ops (tf:588-721): plain column arithmetic; the scalar wrapper's
 ``scalar_power`` truncates its exponent to int (tf:705, pinned by
 timeseries_functions_tests.py:496-511).
 
-Pairwise ops (ts_pair_operation, tf:727-756): an INNER equi-join on
+Pairwise ops (ts_pair_operation, tf:727-756): INNER-join semantics on
 (series_id, epoch) — pandas index alignment + dropna ≡ inner join — with the
 reference's scalar-broadcast special case: when exactly one side of a series
 pair has length 1, that side acts as a scalar over the other side's epochs
-(tf:743-750).  Series lengths come from a tiny one-row-per-series aggregate
-that is broadcast-joined, so the classification adds no extra shuffle of the
-big frames.
+(tf:743-750).  No join is planned: both inputs are read once into one tagged
+union, hash-partitioned on series_id once; a window over that partitioning
+gives each series' per-side lengths and single values, and a group by
+(series_id, epoch) on the same partitioning emits the aligned products or
+the broadcast values.
 """
 
 from __future__ import annotations
 
 from operator import add, mul, sub
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -78,45 +80,47 @@ def pair_op(df1: DataFrame, df2: DataFrame, op: str) -> DataFrame:
       the other side's epochs (tf:743-750);
     - NaN results dropped (tf:752); division additionally drops ±inf
       (tf:982-986).
+
+    Plan: one tagged union of both inputs, one ``series_id`` window for the
+    per-side row counts and single values, then a group by
+    ``(series_id, epoch)`` that the window's partitioning already satisfies.
+    Each group emits the left x right product of its values (the inner
+    join's multiplicity on duplicate epochs) or the scalar broadcast over
+    the multi-row side; a series on one side only has an empty list on the
+    other and emits nothing.  Null inputs are left out of the collected
+    lists; their results would be null and dropped anyway.
     """
     if op not in _PAIR_FNS:
         raise TsError(f"unknown pair op: {op}")
     fn = _PAIR_FNS[op]
 
-    n1 = df1.groupBy("series_id").agg(F.count("*").alias("_n1"))
-    n2 = df2.groupBy("series_id").agg(F.count("*").alias("_n2"))
-    sizes = F.broadcast(n1.join(n2, "series_id", "inner"))
-
-    both = (F.col("_n1") == 1) == (F.col("_n2") == 1)  # both single or both multi
-
-    # case 1+2: index-aligned inner join (covers both-multi and both-single)
-    aligned_sids = sizes.filter(both).select("series_id")
-    aligned = (
-        df1.join(F.broadcast(aligned_sids), "series_id", "left_semi")
-        .withColumnRenamed("value", "_v1")
-        .join(df2.withColumnRenamed("value", "_v2"), ["series_id", "epoch"], "inner")
-        .select("series_id", "epoch", fn(F.col("_v1"), F.col("_v2")).alias("value"))
+    u = df1.select("series_id", "epoch", "value", F.lit(True).alias("_l")).unionByName(
+        df2.select("series_id", "epoch", "value", F.lit(False).alias("_l"))
     )
-
-    # case 3: df1 single, df2 multi -> scalar from df1 over df2's epochs
-    s1 = (
-        df1.join(sizes.filter((F.col("_n1") == 1) & (F.col("_n2") != 1)), "series_id")
-        .select("series_id", F.col("value").alias("_s"))
+    w = Window.partitionBy("series_id")
+    left, right = F.col("_l"), ~F.col("_l")
+    u = u.select(
+        "series_id", "epoch", "value", "_l",
+        F.count_if(left).over(w).alias("_n1"),
+        F.count_if(right).over(w).alias("_n2"),
+        F.max(F.when(left, F.col("value"))).over(w).alias("_k1"),
+        F.max(F.when(right, F.col("value"))).over(w).alias("_k2"),
     )
-    c3 = df2.join(F.broadcast(s1), "series_id").select(
-        "series_id", "epoch", fn(F.col("_s"), F.col("value")).alias("value")
+    g = u.groupBy("series_id", "epoch").agg(
+        F.first("_n1").alias("_n1"),
+        F.first("_n2").alias("_n2"),
+        F.first("_k1").alias("_k1"),
+        F.first("_k2").alias("_k2"),
+        F.collect_list(F.when(left, F.col("value"))).alias("_a"),
+        F.collect_list(F.when(right, F.col("value"))).alias("_b"),
     )
-
-    # case 4: df2 single, df1 multi
-    s2 = (
-        df2.join(sizes.filter((F.col("_n2") == 1) & (F.col("_n1") != 1)), "series_id")
-        .select("series_id", F.col("value").alias("_s"))
+    s1, s2 = F.col("_n1") == 1, F.col("_n2") == 1
+    vals = (
+        F.when(s1 == s2, F.flatten(F.transform("_a", lambda a: F.transform("_b", lambda b: fn(a, b)))))
+        .when(s1, F.transform("_b", lambda b: fn(F.col("_k1"), b)))
+        .otherwise(F.transform("_a", lambda a: fn(a, F.col("_k2"))))
     )
-    c4 = df1.join(F.broadcast(s2), "series_id").select(
-        "series_id", "epoch", fn(F.col("value"), F.col("_s")).alias("value")
-    )
-
-    out = aligned.unionByName(c3).unionByName(c4)
+    out = g.select("series_id", "epoch", F.explode(vals).alias("value"))
     out = out.filter(F.col("value").isNotNull() & ~F.isnan(F.col("value")))
     if op == "div":
         out = _drop_nonfinite(out)
@@ -212,8 +216,6 @@ def round_values(df: DataFrame, round_unit: float = 1.0) -> DataFrame:
 
 def clean_duplicated(df: DataFrame) -> DataFrame:
     """Drop consecutive duplicate values, keep first of each run (af:619-650)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("series_id").orderBy("epoch")
     prev = F.lag("value").over(w)
     return (

@@ -23,6 +23,7 @@ from tsengine.operators.textops import (
     fingerprint,
     shingle_rows_raw,
 )
+from tsengine.session import shuffle_parallelism
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -554,7 +555,7 @@ def _semantic_pairs(
         "ivf_cell",
         _norm(F.col(vec_col)).alias("nrm"),
     )
-    n_shuffle = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_shuffle = shuffle_parallelism(emb.sparkSession)
     if a.rdd.getNumPartitions() < n_shuffle:
         a = a.repartition(n_shuffle)
     x, y = a.alias("x"), a.alias("y")

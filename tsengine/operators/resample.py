@@ -9,10 +9,11 @@
   (analysis_functions.py:505-570): linear interpolation onto the grid, with
   meter-reset-aware interpolation from ``reset_value``.
 
-Scale notes: the grid is generated per series with sequence+explode from a
-one-row-per-series bounds frame, then gap-filled with a single window over
-``series_id`` — one shuffle, partitioned by series, never range-split
-mid-series (LOCF must see the whole series).
+Scale notes: the input is read once and hash-partitioned on ``series_id``
+once.  A window over that partitioning gives each series' bounds, its
+first row explodes the series' grid (sequence + inline) into the same
+stream, and the gap-fill windows run over the same partitioning — one
+shuffle, never range-split mid-series (LOCF must see the whole series).
 """
 
 from __future__ import annotations
@@ -23,36 +24,50 @@ from pyspark.sql import functions as F
 from tsengine.core import TsError
 
 
-def _grid_bounds(seconds_lit, lo, hi):
+def _grid_bounds(step: int, lo, hi):
     """Exact grid rounding (tf:284-291): e_from ceils to the next multiple,
     e_to floors then +step; python-range end-exclusive means the last grid
     point is ``floor(e_to/s)*s + s`` minus one step when on-grid... pinned:
     grid = [ceil(lo/s)*s, g1) step s where g1 = (floor(hi/s)+1)*s (+s if
     hi not on-grid). Inclusive last point = g1 - s."""
-    g0 = seconds_lit * F.floor(lo / seconds_lit)
-    g0 = F.when(lo % seconds_lit != 0, g0 + seconds_lit).otherwise(g0)
-    g1 = seconds_lit * (F.floor(hi / seconds_lit) + 1)
-    g1 = F.when(hi % seconds_lit != 0, g1 + seconds_lit).otherwise(g1)
-    return g0.cast("long"), (g1 - seconds_lit).cast("long")
+    s = F.lit(step)
+    g0 = s * F.floor(lo / s)
+    g0 = F.when(lo % s != 0, g0 + s).otherwise(g0)
+    g1 = s * (F.floor(hi / s) + 1)
+    g1 = F.when(hi % s != 0, g1 + s).otherwise(g1)
+    return g0.cast("long"), (g1 - s).cast("long")
 
 
-def _grid(df: DataFrame, seconds: int, e_to: int | None, e_from: int | None) -> DataFrame:
-    """One grid row per (series_id, grid epoch)."""
-    s = F.lit(int(seconds))
-    bounds = df.groupBy("series_id").agg(
-        F.min("epoch").alias("_lo"), F.max("epoch").alias("_hi")
+def _with_grid(df: DataFrame, step: int, bounds) -> DataFrame:
+    """The points of ``df`` tagged ``_g=0`` plus one null-valued ``_g=1``
+    row per grid epoch, in one stream hash-partitioned on ``series_id``.
+
+    ``bounds(lo, hi)`` maps a series' first and last observation epochs to
+    its first and last grid epoch (no grid if the last is below the first
+    or null).  The bounds come from a window, and the grid rows are
+    exploded from each series' first row, so the input is read and
+    shuffled once and every later window reuses its partitioning.
+    """
+    w = Window.partitionBy("series_id").orderBy("epoch")
+    x = df.select(
+        "series_id", "epoch", F.col("value").cast("double").alias("value"),
+        F.row_number().over(w).alias("_rn"),
+        F.max("epoch").over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("_hi"),
     )
-    lo = F.lit(int(e_from)) if e_from is not None else F.col("_lo")
-    hi = F.lit(int(e_to)) if e_to is not None else F.col("_hi")
-    g0, g1 = _grid_bounds(s, lo, hi)
-    return bounds.select(
-        "series_id",
-        F.explode(
-            F.when(g1 >= g0, F.sequence(g0, g1, F.lit(int(seconds)).cast("long"))).otherwise(
-                F.array().cast("array<long>")
-            )
-        ).alias("epoch"),
+    # on the first row (ascending epoch) its own epoch is the series minimum
+    g0, g1 = bounds(F.col("epoch"), F.col("_hi"))
+    epochs = F.when(g1 >= g0, F.sequence(g0, g1, F.lit(step).cast("long"))).otherwise(
+        F.array().cast("array<long>")
     )
+    pt = F.array(F.struct("epoch", "value", F.lit(0).alias("_g")))
+    gs = F.transform(
+        epochs,
+        lambda e: F.struct(e.alias("epoch"), F.lit(None).cast("double").alias("value"),
+                           F.lit(1).alias("_g")),
+    )
+    rows = F.when(F.col("_rn") == 1, F.concat(pt, gs)).otherwise(pt)
+    return x.select("series_id", F.inline(rows))
 
 
 def distribute(
@@ -75,18 +90,27 @@ def distribute(
     seconds = int(seconds)
     if seconds <= 0:
         raise TsError("seconds must be a positive integer")
-    grid = _grid(df, seconds, e_to, e_from)
+    u = _with_grid(df, seconds, lambda lo, hi: _grid_bounds(
+        seconds,
+        F.lit(int(e_from)) if e_from is not None else lo,
+        F.lit(int(e_to)) if e_to is not None else hi,
+    ))
 
     if fill_value is not None:
-        out = grid.join(df, ["series_id", "epoch"], "left")
-        return out.select(
+        # exact-match reindex: a point survives iff a grid row shares its
+        # epoch (duplicates kept, as a left join keeps them); a grid row
+        # survives iff no point does
+        at = Window.partitionBy("series_id", "epoch")
+        u = u.select(
+            "series_id", "epoch", "value", "_g",
+            F.max("_g").over(at).alias("_on"),
+            F.min("_g").over(at).alias("_alone"),
+        ).filter(F.when(F.col("_g") == 0, F.col("_on") == 1).otherwise(F.col("_alone") == 1))
+        return u.select(
             "series_id", "epoch", F.coalesce("value", F.lit(float(fill_value))).alias("value")
         )
 
-    # LOCF then bfill via one union + two frames of the same window.
-    pts = df.select("series_id", "epoch", "value", F.lit(0).alias("_g"))
-    g = grid.select("series_id", "epoch", F.lit(None).cast("double").alias("value"), F.lit(1).alias("_g"))
-    u = pts.unionByName(g)
+    # LOCF then bfill: two frames over the grid stream's partitioning.
     w = Window.partitionBy("series_id").orderBy("epoch", "_g")
     pad = F.last("value", ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, 0))
     u = u.withColumn("_pad", pad).filter(F.col("_g") == 1)
@@ -123,23 +147,14 @@ def distribute_linear(
         raise TsError("time_int must be a positive integer")
     rv = float(reset_value)
 
-    bounds = df.groupBy("series_id").agg(F.min("epoch").alias("_lo"), F.max("epoch").alias("_hi"))
-    g0 = F.lit(step) * F.floor(F.col("_lo") / F.lit(step))
-    g0 = F.when(F.col("_lo") % step != 0, g0 + step).otherwise(g0).cast("long")
-    # last emitted pivot is strictly below the last observation (af:560-563)
-    g1 = (F.lit(step) * F.floor((F.col("_hi") - 1) / F.lit(step))).cast("long")
-    grid = bounds.filter(F.col("_hi") > F.col("_lo")).select(
-        "series_id",
-        F.explode(
-            F.when(g1 >= g0, F.sequence(g0, g1, F.lit(step).cast("long"))).otherwise(
-                F.array().cast("array<long>")
-            )
-        ).alias("epoch"),
-    )
+    def bounds(lo, hi):
+        g0 = F.lit(step) * F.floor(lo / F.lit(step))
+        g0 = F.when(lo % step != 0, g0 + step).otherwise(g0).cast("long")
+        # last emitted pivot is strictly below the last observation (af:560-563)
+        g1 = (F.lit(step) * F.floor((hi - 1) / F.lit(step))).cast("long")
+        return g0, F.when(hi > lo, g1)
 
-    pts = df.select("series_id", "epoch", "value", F.lit(0).alias("_g"))
-    g = grid.select("series_id", "epoch", F.lit(None).cast("double").alias("value"), F.lit(1).alias("_g"))
-    u = pts.unionByName(g)
+    u = _with_grid(df, step, bounds)
     # Ordering (epoch, _g): a point at epoch e precedes the grid row at e, so
     # the prev-frame sees coincident points (af:543: ts[i] <= pivot) and the
     # next-frame (starting 1 row after the grid row) only sees strictly later

@@ -150,8 +150,8 @@ class Engine:
     ) -> DataFrame:
         """tf:1112-1215: closed interval + one extra pre-window point so the
         first in-window increment is computable (tf:1171-1179) — here the
-        extra point is the per-series last row BELOW the window, one window
-        function instead of a second store fetch."""
+        extra point is the per-series last row BELOW the window, taken by the
+        same window as the in-range rows instead of a second store fetch."""
         time_int = int(time_int)
         expand = _to_bool(expand)
         distr = _to_bool(distr)
@@ -166,24 +166,25 @@ class Engine:
         time_ref = time_int * (now // time_int)
 
         rng = timeutil.column_range(kwargs, now=time_ref, int_type="closed")
-        base = self.source.filter(F.col("series_id") == int(id_variable))
-        df = base.filter(rng.predicate())
-        if rng.limit is not None:
-            w = Window.partitionBy("series_id").orderBy(F.col("epoch").desc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= rng.limit)
-                .drop("_rn")
-            )
+        # one `epoch <= hi` scan and one descending window give both the
+        # in-range rows (the newest `limit` of them) and the anchor: the
+        # first row below `lo`, i.e. the one whose predecessor is in range
+        df = self.source.filter(F.col("series_id") == int(id_variable))
+        if rng.hi is not None:
+            df = df.filter(F.col("epoch") <= rng.hi)
+        w = Window.partitionBy("series_id").orderBy(F.col("epoch").desc())
+        df = df.select(
+            "series_id", "epoch", "value",
+            F.row_number().over(w).alias("_rn"),
+            F.lag("epoch").over(w).alias("_prev"),
+        )
+        keep = F.lit(True) if rng.limit is None else F.col("_rn") <= rng.limit
         if rng.lo is not None:
-            pre_w = Window.partitionBy("series_id").orderBy(F.col("epoch").desc())
-            pre = (
-                base.filter(F.col("epoch") < rng.lo)
-                .withColumn("_rn", F.row_number().over(pre_w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+            lo = F.lit(rng.lo)
+            keep = F.when(F.col("epoch") >= lo, keep).otherwise(
+                F.col("_prev").isNull() | (F.col("_prev") >= lo)
             )
-            df = df.unionByName(pre)
+        df = df.filter(keep).select("series_id", "epoch", "value")
 
         q_to = rng.hi if (rng.hi is not None and expand) else None
         q_from = rng.lo if (rng.lo is not None and expand) else None

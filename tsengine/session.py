@@ -80,6 +80,16 @@ def get_spark(
     return spark
 
 
+def shuffle_parallelism(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int.  Some platforms set it to
+    a non-numeric value (e.g. ``auto``); then fall back to the context's
+    default parallelism instead of failing."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def release_persistent_rdds(spark) -> int:
     """Unpersist every RDD still registered with the context (cached
     DataFrames AND localCheckpoint blocks, which ``catalog.clearCache``
