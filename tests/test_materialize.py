@@ -2,14 +2,18 @@
 appends (including mid-conversation appends via conv-state anchors),
 slice-local refresh (untouched tier files reused by reference), kill-resume
 reconciliation, idempotent refresh, lineage, per-tier retention, day-granular
-tier files, and scan-free refreshes under an explicit vocabulary."""
+tier files, scan-free refreshes under an explicit vocabulary, and one shared
+increment per source range between real-time reads and refreshes."""
 
 import os
+import random
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
-from tsengine.materialize import InjectedFailure, MaterializedTiers
+from tsengine.materialize import COMPONENTS, InjectedFailure, MaterializedTiers
 from tsengine.operators import rollup as R
 from tsengine.sources.snapshots import SnapshotTable
 
@@ -281,6 +285,174 @@ def test_read_realtime_matches_full_rebuild(spark, src_mat):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
 
 
+def _cycle_slices(spark):
+    """Four appends: new convs, mid-conversation continuations, a mix a
+    day later, then continuations of an old and a recent conv."""
+    t0 = 1_600_000_000
+    return [
+        _turns(spark, ["a", "b", "c"], n=30, gap=45),
+        _turns(spark, ["a", "b"], t0=t0 + 30 * 45, n=20, gap=45, idx0=30),
+        _turns(spark, ["c"], t0=t0 + 86400, n=10, gap=500, idx0=30)
+        .unionByName(_turns(spark, ["d"], t0=t0 + 86400, n=15)),
+        _turns(spark, ["a", "d"], t0=t0 + 2 * 86400, n=12, idx0=50),
+    ]
+
+
+def _lineage_key(mat):
+    return sorted((r["component"], r["source_from_id"], r["source_to_id"],
+                   r["input_rows"]) for r in mat.lineage_rows())
+
+
+def test_realtime_read_before_refresh_is_transparent(spark, tmp_path):
+    """Differential: append -> read_realtime -> refresh leaves exactly the
+    tier rows and lineage input rows of append -> refresh, over four cycles
+    with mid-conversation appends (the first read is over empty tiers), so
+    an increment the read built and the refresh reused is indistinguishable
+    from one the refresh built itself."""
+    stores = {}
+    for with_read in (False, True):
+        src = SnapshotTable(str(tmp_path / f"src{with_read}"))
+        mat = MaterializedTiers(src, str(tmp_path / f"mat{with_read}"))
+        for i, d in enumerate(_cycle_slices(spark)):
+            src.append(d)
+            if with_read:
+                assert mat.read_realtime(spark, R.TIER_ORDER[i % 3]).collect()
+            mat.refresh(spark)
+        stores[with_read] = mat
+    plain, shared = stores[False], stores[True]
+    for t in R.TIER_ORDER:
+        a, b = _norm(shared.read_tier(spark, t)), _norm(plain.read_tier(spark, t))
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
+    assert _lineage_key(shared) == _lineage_key(plain)
+
+
+def test_refresh_after_realtime_read_reuses_increment(spark, src_mat,
+                                                     monkeypatch):
+    """On a vocab-less store, a refresh right after a real-time read at the
+    same source head makes no ``rollup._vocab`` and no
+    ``SnapshotTable.incremental`` call: the read built and persisted the
+    increment.  A refresh with no read before it makes one incremental
+    read and two vocabulary scans, from empty and mid-conversation alike."""
+    calls = {"vocab": 0, "incremental": 0}
+    real_vocab, real_inc = R._vocab, SnapshotTable.incremental
+
+    def counting_vocab(df, col, max_size=256):
+        calls["vocab"] += 1
+        return real_vocab(df, col, max_size)
+
+    def counting_inc(self, spark, from_id, to_id=None):
+        calls["incremental"] += 1
+        return real_inc(self, spark, from_id, to_id)
+
+    monkeypatch.setattr(R, "_vocab", counting_vocab)
+    monkeypatch.setattr(SnapshotTable, "incremental", counting_inc)
+    src, mat = src_mat
+    d1, d2, d3 = _cycle_slices(spark)[:3]
+    src.append(d1)
+    mat.refresh(spark)
+    assert calls == {"vocab": 2, "incremental": 1}
+
+    src.append(d2)
+    assert mat.read_realtime(spark, "1h").collect()
+    assert calls == {"vocab": 4, "incremental": 2}
+    mat.refresh(spark)
+    assert calls == {"vocab": 4, "incremental": 2}
+
+    src.append(d3)
+    mat.refresh(spark)
+    assert calls == {"vocab": 6, "incremental": 3}
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_held_increment_released(spark, src_mat):
+    """The read-built increment stays cached until the refresh that uses it
+    releases it; a read over a new range releases the previous one."""
+    src, mat = src_mat
+    d1, d2, d3 = _cycle_slices(spark)[:3]
+    src.append(d1)
+    mat.refresh(spark)
+    before = _persisted(spark)
+
+    src.append(d2)
+    mat.read_realtime(spark, "1h").collect()
+    held = _persisted(spark)
+    assert held == before + 2  # latency plane + 1m rollup
+    src.append(d3)  # the next read's range (1, 3] replaces (1, 2]
+    mat.read_realtime(spark, "1d").collect()
+    assert _persisted(spark) == held
+    mat.refresh(spark)
+    assert _persisted(spark) == before
+
+
+def test_increment_handover_under_concurrent_callers(spark, tmp_path):
+    """Twelve threads on four cores ask for three source ranges at random,
+    with a tiny switch interval: every frame handed out is the held one or
+    was released, so after a final release nothing stays persisted (a lost
+    update of the held range would leak a persisted frame).  An explicit
+    vocabulary keeps building the increment job-free."""
+    src = SnapshotTable(str(tmp_path / "csrc"))
+    mat = MaterializedTiers(src, str(tmp_path / "cmat"),
+                            role_vocab=["assistant", "user"], tool_vocab=["bash"])
+    for d in _cycle_slices(spark)[:3]:
+        src.append(d)
+    handed, errors = [], []
+
+    def worker(seed):
+        rng = random.Random(seed)
+        try:
+            for _ in range(4):
+                handed.extend(mat._increment(spark, 0, rng.randint(1, 3)))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert len(handed) == 12 * 4 * 2
+    mat._release_increment()
+    leaked = [df for df in handed if df.storageLevel.useMemory or df.storageLevel.useDisk]
+    assert not leaked
+
+
+def test_kill_resume_with_held_increment(spark, src_mat):
+    """A refresh killed while it folds a read-built increment releases it,
+    and a plain re-run reconciles to the full-rebuild state with lineage
+    that tiles every component's source positions."""
+    src, mat = src_mat
+    d1, d2, d3 = _cycle_slices(spark)[:3]
+    src.append(d1)
+    mat.refresh(spark)
+    before = _persisted(spark)
+    src.append(d2)
+    mat.read_realtime(spark, "1m").collect()
+    with pytest.raises(InjectedFailure):
+        mat.refresh(spark, fail_after=2)  # 1m and 1h land at 2
+    assert _persisted(spark) == before
+    assert mat.positions() == {"1m": 2, "1h": 2, "1d": 1, "convstate": 1}
+
+    src.append(d3)
+    mat.refresh(spark)
+    assert set(mat.positions().values()) == {3}
+    _assert_tiers_equal(mat, spark, d1.unionByName(d2).unionByName(d3))
+    lin = mat.lineage_rows()
+    for c in COMPONENTS:
+        steps = sorted((r["source_from_id"], r["source_to_id"])
+                       for r in lin if r["component"] == c)
+        bounds = [0] + [to for _, to in steps]
+        assert [fr for fr, _ in steps] == bounds[:-1] and bounds[-1] == 3, (c, steps)
+
+
 def test_read_realtime_rejects_mixed_positions(spark, src_mat):
     """A killed refresh leaves components at mixed source positions; the
     conv-state anchors are then wrong for the leading tier, so read_realtime
@@ -361,6 +533,9 @@ def test_refresh_conf_scoped_to_engine_session(spark, src_mat, tmp_path):
     orig_set = spark.conf.set
     spark.conf.set = lambda k, v: (calls.append(k), orig_set(k, v))
     try:
+        # a real-time read over still-empty tiers builds the increment the
+        # refresh then appends from empty: it too must be engine-session
+        assert mat.read_realtime(spark, "1h").collect()
         mat.refresh(spark)
     finally:
         spark.conf.set = orig_set

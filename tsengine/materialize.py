@@ -11,7 +11,12 @@ Per refresh (source snapshot ``from`` -> ``to``):
    (conv_id, last_turn_idx, last_epoch) before :func:`rollup.with_latency`
    — the first appended turn's latency is computed against the last turn of
    the PREVIOUS refresh, then anchors are dropped;
-3. roll the increment up 1m -> 1h -> 1d (partial reaggregation, never raw);
+3. roll the increment up 1m -> 1h -> 1d (partial reaggregation, never raw).
+   Steps 1-3's latency plane and 1m rollup are built ONCE per source range
+   and persisted (:meth:`MaterializedTiers._increment`): a
+   :meth:`~MaterializedTiers.read_realtime` tail over ``(from, to]`` builds
+   them, the refresh to ``to`` reuses them, and every component of the
+   refresh shares them;
 4. fold each tier increment into the materialized tier with
    :func:`rollup.merge_tier` — but only over the *touched slice*: the
    increment's bucket range comes action-free from the source manifest's
@@ -49,6 +54,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import uuid
 
@@ -137,6 +143,10 @@ class MaterializedTiers:
         )
         # engine-scoped writer session (see _writer_session)
         self._wspark: SparkSession | None = None
+        # the one held source increment, ((session, from, to), lat, 1m)
+        # (see _increment); re-entrant so _increment can release under it
+        self._inc_lock = threading.RLock()
+        self._held: tuple | None = None
 
     def _writer_session(self, spark: SparkSession) -> SparkSession:
         """Session-scoped conf isolation for tier writes (VERDICT r04 task 7).
@@ -146,11 +156,11 @@ class MaterializedTiers:
         session during a concurrent refresh leaks it to unrelated writers in
         the same session.  ``newSession()`` shares the SparkContext (cached
         data, scheduler) while giving the engine its own runtime SQL conf, so
-        refresh plans built here write INT64 and the caller's session conf is
-        never touched.  Builder-time confs (shuffle partitions, AQE) live in
-        the shared SparkContext conf and are inherited; caller RUNTIME conf
-        overrides are deliberately not (engine writes should not depend on
-        them)."""
+        refresh plans and the shared source increment built here write
+        INT64 and the caller's session conf is never touched.  Builder-time
+        confs (shuffle partitions, AQE) live in the shared SparkContext conf
+        and are inherited; caller RUNTIME conf overrides are deliberately
+        not (engine writes should not depend on them)."""
         if (
             self._wspark is None
             or self._wspark.sparkContext is not spark.sparkContext
@@ -190,7 +200,11 @@ class MaterializedTiers:
 
     def lineage_rows(self) -> list[dict]:
         d = os.path.join(self.state_dir, "_lineage")
-        return [json.load(open(os.path.join(d, f))) for f in sorted(os.listdir(d))]
+        rows = []
+        for f in sorted(os.listdir(d)):
+            with open(os.path.join(d, f)) as fh:
+                rows.append(json.load(fh))
+        return rows
 
     # ---------------- increment plumbing ----------------
 
@@ -212,38 +226,72 @@ class MaterializedTiers:
                         hi = f["max_ts"] if hi is None else max(hi, f["max_ts"])
         return rows, byts, lo, hi
 
-    def _increment_with_latency(self, spark: SparkSession, from_id: int,
-                                to_id: int) -> DataFrame:
-        """Increment turns with the latency plane, continuous across the
-        snapshot boundary via conv-state anchor rows."""
-        inc = self.source.incremental(spark, from_id, to_id)
-        inc = inc.select("conv_id", "turn_idx", "role", "tool", "ts")
-        if self.convstate.current_snapshot_id() is None:
-            return R.with_latency(inc).withColumn("_anchor", F.lit(False))
-        state = self.convstate.read(spark)
-        anchors = (
-            state.join(inc.select("conv_id").distinct(), "conv_id")
-            .select(
-                "conv_id",
-                F.col("last_turn_idx").alias("turn_idx"),
-                F.lit(None).cast("string").alias("role"),
-                F.lit(None).cast("string").alias("tool"),
-                F.timestamp_seconds("last_epoch").alias("ts"),
-                F.lit(True).alias("_anchor"),
-            )
-        )
-        u = inc.withColumn("_anchor", F.lit(False)).unionByName(anchors)
-        return R.with_latency(u)
+    def _increment(self, spark: SparkSession, from_id: int,
+                   to_id: int) -> tuple[DataFrame, DataFrame]:
+        """The source increment ``(from_id, to_id]`` as (latency plane,
+        1m rollup), both persisted: built ONCE per source range and shared
+        by whichever of :meth:`read_realtime` and :meth:`refresh` asks for
+        it first, so an append followed by a real-time read and a refresh
+        scans, anchors and rolls up the appended turns once, not twice.
+
+        The latency plane is continuous across the snapshot boundary via
+        conv-state anchor rows (``_anchor`` marks them; the 1m rollup drops
+        them).  Both frames are built in the engine's writer session, so a
+        from-empty tier or conv-state append of them never writes through
+        the caller's session.  One range is held at a time: asking for
+        another releases the held one first (a lock guards the handover —
+        refresh advances components from a thread pool, and readers may
+        call concurrently); :meth:`refresh` releases it when done.  The
+        range identifies the content: a range's added files and the conv
+        state at its start never change."""
+        with self._inc_lock:
+            ws = self._writer_session(spark)
+            key = (ws, from_id, to_id)
+            if self._held is None or self._held[0] != key:
+                self._release_increment()
+                inc = self.source.incremental(ws, from_id, to_id)
+                inc = inc.select("conv_id", "turn_idx", "role", "tool", "ts")
+                u = inc.withColumn("_anchor", F.lit(False))
+                if self.convstate.current_snapshot_id() is not None:
+                    anchors = (
+                        self.convstate.read(ws)
+                        .join(inc.select("conv_id").distinct(), "conv_id")
+                        .select(
+                            "conv_id",
+                            F.col("last_turn_idx").alias("turn_idx"),
+                            F.lit(None).cast("string").alias("role"),
+                            F.lit(None).cast("string").alias("tool"),
+                            F.timestamp_seconds("last_epoch").alias("ts"),
+                            F.lit(True).alias("_anchor"),
+                        )
+                    )
+                    u = u.unionByName(anchors)
+                lat = R.with_latency(u).persist()
+                t1m = R.rollup_raw_to_tier(
+                    lat.filter(~F.col("_anchor")), "1m",
+                    role_vocab=self.role_vocab, tool_vocab=self.tool_vocab,
+                ).persist()
+                self._held = (key, lat, t1m)
+            return self._held[1], self._held[2]
+
+    def _release_increment(self) -> None:
+        """Unpersist the held increment, if any."""
+        with self._inc_lock:
+            if self._held is not None:
+                _, lat, t1m = self._held
+                lat.unpersist()
+                t1m.unpersist()
+                self._held = None
 
     # ---------------- refresh ----------------
 
     def _advance_component(self, spark: SparkSession, component: str,
-                           from_id: int, to_id: int,
-                           lat: DataFrame | None = None,
-                           inc_1m: DataFrame | None = None) -> None:
-        in_rows, in_bytes, min_ts, max_ts = self._added_stats(from_id, to_id)
-        if lat is None:
-            lat = self._increment_with_latency(spark, from_id, to_id)
+                           from_id: int, to_id: int, lat: DataFrame,
+                           inc_1m: DataFrame, added: tuple) -> None:
+        """Fold the increment ``(from_id, to_id]`` — its latency plane
+        ``lat``, 1m rollup ``inc_1m`` and :meth:`_added_stats` ``added`` —
+        into one component and commit it at ``to_id``."""
+        in_rows, in_bytes, min_ts, max_ts = added
         props = {_SRC_PROP: to_id}
 
         if component == "convstate":
@@ -278,16 +326,9 @@ class MaterializedTiers:
         # exists to avoid.  Narrow per-file bucket ranges are what make
         # slice reuse and file-granular retention real (the Iceberg
         # analogue: a time-based sort order on the tier table's writes).
-        if inc_1m is not None:
-            # shared per-refresh 1m rollup of the increment (persisted by
-            # refresh()): 1h/1d reaggregate from it instead of re-rolling
-            # the raw increment once per component
-            inc_tier = inc_1m
-        else:
-            turns = lat.filter(~F.col("_anchor"))
-            inc_tier = R.rollup_raw_to_tier(
-                turns, "1m", role_vocab=self.role_vocab, tool_vocab=self.tool_vocab
-            )
+        # 1h/1d reaggregate from the shared, persisted 1m rollup instead of
+        # re-rolling the raw increment once per component
+        inc_tier = inc_1m
         for t in R.TIER_ORDER[1:R.TIER_ORDER.index(component) + 1]:
             inc_tier = R.reaggregate(
                 inc_tier, t, role_vocab=self.role_vocab, tool_vocab=self.tool_vocab
@@ -374,7 +415,14 @@ class MaterializedTiers:
         a kill mid-flight leaves an arbitrary committed subset, which the
         positions loop already reconciles).  ``fail_after`` forces the
         sequential path (deterministic commit order for kill-resume
-        tests)."""
+        tests).
+
+        The increment (latency plane and 1m rollup) comes from
+        :meth:`_increment`, built once per source range: after a
+        :meth:`read_realtime` at the same source head it is already
+        persisted and the refresh reads no source file, runs no vocabulary
+        pre-scan and no anchor join.  Each range's manifest stats are read
+        once, not once per component."""
         head = self.source.current_snapshot_id()
         self.last_refresh_timings = {}
         if head is None:
@@ -389,37 +437,22 @@ class MaterializedTiers:
             if mn >= head:
                 return pos
             # reconcile laggards to the furthest component first (conv state
-            # is at the laggard position by commit order), then to head
+            # is at the laggard position by commit order), then to head.
+            # Every laggard sits at mn (positions never take more than two
+            # values), so one increment (mn, target] serves them all.
             target = mx if mx > mn else head
-            # the increment's latency plane AND its 1m rollup are shared by
-            # every component advancing over the same (from, target) —
-            # compute once, persist; 1h/1d reaggregate from the cached 1m
-            memo: dict[int, tuple[DataFrame, DataFrame]] = {}
-            pending = [c for c in COMPONENTS if pos[c] < target]
-            for c in pending:
-                if pos[c] not in memo:
-                    lat = self._increment_with_latency(
-                        spark, pos[c], target
-                    ).persist()
-                    t1m = R.rollup_raw_to_tier(
-                        lat.filter(~F.col("_anchor")), "1m",
-                        role_vocab=self.role_vocab,
-                        tool_vocab=self.tool_vocab,
-                    ).persist()
-                    memo[pos[c]] = (lat, t1m)
+            pending = [c for c in COMPONENTS if pos[c] == mn]
+            added = self._added_stats(mn, target)
 
             def _advance_one(c: str) -> None:
-                lat, t1m = memo[pos[c]]
                 t0 = time.perf_counter()
-                self._advance_component(
-                    spark, c, pos[c], target, lat=lat,
-                    inc_1m=None if c == "convstate" else t1m,
-                )
+                self._advance_component(spark, c, mn, target, lat, t1m, added)
                 self.last_refresh_timings[c] = round(
                     self.last_refresh_timings.get(c, 0.0)
                     + (time.perf_counter() - t0), 3)
 
             try:
+                lat, t1m = self._increment(spark, mn, target)
                 if fail_after is None and len(pending) > 1:
                     # the engine session already pins TIMESTAMP_MICROS
                     # (_writer_session), so _write_data's per-write
@@ -442,9 +475,7 @@ class MaterializedTiers:
                                 "component commits"
                             )
             finally:
-                for lat, t1m in memo.values():
-                    lat.unpersist()
-                    t1m.unpersist()
+                self._release_increment()
 
     # ---------------- reads & retention ----------------
 
@@ -549,14 +580,18 @@ class MaterializedTiers:
         source rows committed AFTER the tier's position, merged per bucket
         at read time.  Freshness without refresh cost — a dashboard query
         between refreshes sees every committed turn, yet nothing is
-        rewritten and no history is rescanned: the tail read is the same
-        manifest-incremental file diff refresh() uses, the boundary
-        latency comes from the same conv-state anchors, and the bucket
-        overlap (a half-filled bucket that exists in both the materialized
-        tier and the tail) is folded by :func:`rollup.merge_tier`'s
-        decomposable-aggregate merge.
+        rewritten and no history is rescanned.  The tail is the very
+        increment refresh() folds in: :meth:`_increment` builds the
+        ``(position, head]`` range's latency plane (conv-state anchors at
+        the boundary) and 1m rollup once, persisted, and the next refresh
+        to that head reuses them instead of rebuilding; 1h/1d reaggregate
+        from the 1m rollup.  The bucket overlap (a half-filled bucket that
+        exists in both the materialized tier and the tail) is folded by
+        :func:`rollup.merge_tier`'s decomposable-aggregate merge.
 
-        Read-only: tier tables, conv state and positions are untouched.
+        Read-only: tier tables, conv state and positions are untouched
+        (the held increment is a cache, released by the next refresh or by
+        a read over another range).
         Requires conv state to be at the tier's source position (true after
         any completed refresh; a kill mid-refresh leaves mixed positions —
         run refresh() first, which reconciles them anyway)."""
@@ -574,11 +609,7 @@ class MaterializedTiers:
                 f"{cs} but the tier is at {pos} (killed refresh?); run "
                 "refresh() to reconcile before real-time reads"
             )
-        lat = self._increment_with_latency(spark, pos, head)
-        inc = R.rollup_raw_to_tier(
-            lat.filter(~F.col("_anchor")), "1m",
-            role_vocab=self.role_vocab, tool_vocab=self.tool_vocab,
-        )
+        _, inc = self._increment(spark, pos, head)
         for t in R.TIER_ORDER[1:R.TIER_ORDER.index(tier) + 1]:
             inc = R.reaggregate(
                 inc, t, role_vocab=self.role_vocab, tool_vocab=self.tool_vocab
