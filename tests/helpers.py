@@ -42,3 +42,12 @@ def parquet_series(spark, path, data):
 
     series_frame(spark, data).write.parquet(str(path))
     return spark.read.parquet(str(path))
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far: the count of Spark's
+    ``CodegenMetrics`` compilation-time histogram.  A source found in the
+    generated-code cache is not compiled again, so the count rises only on
+    cache misses."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

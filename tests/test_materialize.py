@@ -145,6 +145,34 @@ def test_kill_resume_reconciles(spark, src_mat):
         assert sum(n for _, _, n in steps) == 2 * 30 + 20 + 20, (c, steps)
 
 
+def test_lineage_records_are_fsynced(spark, src_mat, monkeypatch):
+    """Each lineage record reaches the disk before it is renamed into place,
+    so a crash cannot leave an empty record for lineage_rows() to choke on:
+    on the writing thread, the last file operation before the rename of a
+    lineage file is an fsync (refresh advances components in threads)."""
+    src, mat = src_mat
+    src.append(_turns(spark, ["a", "b"], n=20))
+    last, synced = {}, []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        last[threading.get_ident()] = "fsync"
+        return real_fsync(fd)
+
+    def replace(src_path, dst_path, **kw):
+        if os.path.basename(os.path.dirname(dst_path)) == "_lineage":
+            synced.append(last.get(threading.get_ident()) == "fsync")
+        last[threading.get_ident()] = "replace"
+        return real_replace(src_path, dst_path, **kw)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    mat.refresh(spark)
+    monkeypatch.undo()
+    assert synced == [True] * len(COMPONENTS)
+    assert len(mat.lineage_rows()) == len(COMPONENTS)
+
+
 def test_refresh_idempotent(spark, src_mat):
     src, mat = src_mat
     src.append(_turns(spark, ["a"]))

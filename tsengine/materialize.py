@@ -56,14 +56,13 @@ import json
 import os
 import threading
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine.operators import rollup as R
 from tsengine.session import shuffle_parallelism
-from tsengine.sources.snapshots import SnapshotTable
+from tsengine.sources.snapshots import SnapshotTable, write_json_atomic
 
 _SRC_PROP = "source_to_id"
 COMPONENTS = ("1m", "1h", "1d", "convstate")
@@ -109,13 +108,6 @@ def _ranged(df: DataFrame, n: int | None = None) -> DataFrame:
         return df.repartition(1)
     day = F.floor(F.col("bucket") / F.lit(86400))
     return df.repartitionByRange(n, day)
-
-
-def _write_json_atomic(path: str, obj: dict) -> None:
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 class MaterializedTiers:
@@ -187,7 +179,7 @@ class MaterializedTiers:
     def _lineage(self, component: str, from_id: int, to_id: int,
                  in_rows: int, in_bytes: int, out_rows: int, out_bytes: int,
                  reused_files: int, rewritten_files: int) -> None:
-        _write_json_atomic(
+        write_json_atomic(
             os.path.join(self.state_dir, "_lineage",
                          f"{component}__{from_id}_{to_id}.json"),
             {"component": component, "source_from_id": from_id,

@@ -14,6 +14,27 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
+# Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``)
+# keeps 100 compiled classes by default.  One dashboard page (four
+# downsample widths, a Gorilla-decoded tier read, three formula classes)
+# cycles through ~175 generated sources, more than 100, so LRU eviction
+# makes every page recompile all of them with Janino (170-179 per page on
+# the benchmark's dashboard workload).  With room for 1000 a repeated page
+# compiles only the sources that inline per-request literals, epoch
+# bounds and series ids (20-32 per page).  The larger cache holds little:
+# retained heap after GC at the end of a dashboard run grew 3-10 MB.
+CODEGEN_CACHE_ENTRIES = "1000"
+
+
+def default_driver_memory() -> str:
+    """Driver heap for this box: half its physical memory in whole GB,
+    between 1 and 8 GB.  Where ``os.sysconf`` cannot tell, 8 GB."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "8g"
+    return f"{max(1, min(8, total // 2 // (1 << 30)))}g"
+
 
 def get_spark(
     app_name: str = "tsengine",
@@ -28,6 +49,14 @@ def get_spark(
       deterministic; calendar bucketing applies Europe/Madrid explicitly
       (reference analysis_utils.py:182-237).
     - Arrow enabled for the pandas-UDF compression kernels.
+    - generated-code cache sized to the engine's working set
+      (:data:`CODEGEN_CACHE_ENTRIES`), so a repeated request reuses its
+      compiled whole-stage classes instead of recompiling them.  A static
+      conf: it takes effect only when this call starts the JVM.
+    - driver heap from the box (:func:`default_driver_memory`), unless
+      ``TSENGINE_DRIVER_MEMORY`` or ``extra_conf`` sets it.
+
+    ``extra_conf`` is applied last and overrides any of these.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or os.environ.get("TSENGINE_MASTER", f"local[{cpus}]")
@@ -70,7 +99,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("TSENGINE_DRIVER_MEMORY", "8g"))
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
+        .config("spark.driver.memory",
+                os.environ.get("TSENGINE_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.driver.extraJavaOptions", jvm_opts)
     )
     for k, v in (extra_conf or {}).items():

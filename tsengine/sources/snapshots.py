@@ -60,7 +60,11 @@ class CommitConflict(RuntimeError):
     against the new current snapshot."""
 
 
-def _write_json_atomic(path: str, obj: dict) -> None:
+def write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` as JSON to ``path`` durably and all at once: a temp
+    file is written and fsynced, then renamed over ``path``, so a crash
+    leaves either the old file or the complete new one, never a torn or
+    empty one."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(obj, f)
@@ -302,7 +306,7 @@ class SnapshotTable:
         with manifests, so an out-of-order or lost pointer write is benign."""
         cur = self._pointer()
         if cur is None or sid > cur:
-            _write_json_atomic(os.path.join(self.meta_dir, "current.json"),
+            write_json_atomic(os.path.join(self.meta_dir, "current.json"),
                                {"snapshot_id": sid})
 
     def _retrying_commit(self, op: str, files: list[dict], schema: str,
