@@ -20,6 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench import hostprobe  # noqa: E402
+
 
 HEADLINE = [
     "q_usage_day",        # flagship: cum-meter -> distribute -> increments -> split -> sum
@@ -103,34 +105,12 @@ def _tier_match_rate(spark, raw, role_vocab, tool_vocab, n_sample=50):
     return rates
 
 
-def _steal_probe(sec: str = "3") -> dict | None:
-    """Host CPU-steal share while saturating every core (bench/steal_probe.py).
-    Recorded in the output JSON so a snapshot taken during one of this box's
-    documented hypervisor-steal episodes (16-24 % measured in round 5; the
-    identical code reads 28.7 s quiet vs 47 s mid-burst) carries its own
-    explanation.  Runs OUTSIDE every timed region."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            [sys.executable,
-             os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "bench", "steal_probe.py"), sec],
-            capture_output=True, text=True, timeout=60,
-        )
-        d = json.loads(out.stdout.strip().splitlines()[-1])
-        return {"steal_pct": d.get("steal_pct"),
-                "memcpy_gbps": d.get("memcpy_gbps")}
-    except Exception:
-        return None
-
-
 def main():
     # bench-substrate control: the sandbox block device serializes shuffle IO
     # a real executor's NVMe would not; tmpfs shuffle dirs are opt-in in
     # get_spark and the bench opts in (library sessions stay on disk)
     os.environ.setdefault("TSENGINE_TMPFS_SHUFFLE", "1")
-    steal_before = _steal_probe()
+    host_before = hostprobe.reading()
     # Fault the whole heap at JVM start (outside every timed region): this
     # VM's lazily-committed memory makes first-touch faults ~100x, so an
     # un-pretouched session pays them inside whichever query allocates
@@ -347,6 +327,7 @@ def main():
     comp_bpp = round(blk["enc_bytes"] / blk["pts"], 3)
 
     total = round(sum(timings.values()), 3)
+    host_after = hostprobe.reading()
     out = {
         "metric": "headline_queries_total_sec",
         "value": total,
@@ -375,13 +356,15 @@ def main():
         "tier_block_bytes": blk_stats["bytes"],
         "tier_block_bytes_per_point": blk_stats["bytes_per_point"],
         "cpus": int(cpus),
-        # hypervisor steal share around the run (NOT inside any timed
-        # region): >= ~10 % means absolute timings here are substrate-
-        # attributed — see BENCH/BASELINE.md round-5 substrate note
-        "host_steal_pct_before": (steal_before or {}).get("steal_pct"),
-        "host_memcpy_gbps_before": (steal_before or {}).get("memcpy_gbps"),
-        "host_steal_pct_after": ((steal_after := _steal_probe()) or {}).get("steal_pct"),
-        "host_memcpy_gbps_after": (steal_after or {}).get("memcpy_gbps"),
+        # host quietness around the run (outside every timed region,
+        # perfbench/hostprobe.py): timings taken while it reads noisy are
+        # substrate-attributed
+        "host_steal_pct_before": host_before["steal_pct"],
+        "host_memcpy_gbps_before": host_before["memcpy_gbps"],
+        "host_verdict_before": host_before["verdict"],
+        "host_steal_pct_after": host_after["steal_pct"],
+        "host_memcpy_gbps_after": host_after["memcpy_gbps"],
+        "host_verdict_after": host_after["verdict"],
     }
     print(json.dumps(out))
 

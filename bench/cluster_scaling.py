@@ -26,9 +26,12 @@ import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from tsengine.session import ENGINE_CONF, get_spark  # noqa: E402
 
 JOB = r"""
-import json, os, sys, time
+import json, sys, time
 # NO repo path insert: tsengine must resolve from the --py-files zip, on the
 # driver and inside every executor's Python worker
 from pyspark.sql import SparkSession
@@ -45,8 +48,6 @@ for a in sys.argv[3:]:
         subset = tuple(int(x) for x in a[len("subset="):].split("/"))
 spark = SparkSession.builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
-app_id = spark.sparkContext.applicationId
-evt_dir = spark.conf.get("spark.eventLog.dir", None)
 raw = spark.read.parquet(tdir)
 if subset:
     from pyspark.sql import functions as F
@@ -59,7 +60,7 @@ rv = R._vocab(raw, "role"); tv = R._vocab(raw, "tool")
 spark.range(2_000_000).selectExpr("id % 1000 k", "id v").groupBy("k").sum("v").write.format("noop").mode("overwrite").save()
 
 execs = spark.sparkContext.defaultParallelism
-t0_wall_ms = time.time() * 1000  # stage filter: timed region only
+spark.sparkContext.setJobGroup("timed", "timed region")  # stage filter
 t0 = time.perf_counter()
 turns = R.with_latency(raw)
 tiers = R.build_all_tiers(turns, persist=True, role_vocab=rv, tool_vocab=tv)
@@ -71,45 +72,25 @@ if mode == "compress":
     C.compress_table(series, group_cols=("series_id",), epoch_col="epoch",
                      value_cols=("value",)).write.format("noop").mode("overwrite").save()
 dt = time.perf_counter() - t0
-spark.stop()
 
-# per-stage shuffle bytes from the event log (public Spark event schema):
-# TaskEnd carries the task's shuffle read/write byte metrics; StageCompleted
-# carries the stage name.  Aggregated driver-side after the session closes.
+# per-stage input and shuffle bytes of the timed region's jobs, from the
+# live status store (perfbench/spans.py ships in --py-files)
+from spans import read_stores
+st = read_stores(spark)
+spark.stop()
+timed = {sid for j in st["jobs"] if j.get("jobGroup") == "timed"
+         for sid in j["stageIds"]}
 stages = {}
-if evt_dir:
-    path = os.path.join(evt_dir.replace("file:", ""), app_id)
-    if not os.path.exists(path) and os.path.exists(path + ".inprogress"):
-        path += ".inprogress"
-    names = {}
-    timed = set()  # stage ids submitted inside the timed region
-    with open(path) as f:
-        for line in f:
-            try:
-                e = json.loads(line)
-            except ValueError:
-                continue
-            ev = e.get("Event")
-            if ev == "SparkListenerStageCompleted":
-                si = e["Stage Info"]
-                names[si["Stage ID"]] = si["Stage Name"].split("\n")[0]
-                if (si.get("Submission Time") or 0) >= t0_wall_ms:
-                    timed.add(si["Stage ID"])
-            elif ev == "SparkListenerTaskEnd":
-                sid = e["Stage ID"]
-                tm = e.get("Task Metrics") or {}
-                sw = (tm.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written", 0)
-                srm = tm.get("Shuffle Read Metrics") or {}
-                sr = srm.get("Remote Bytes Read", 0) + srm.get("Local Bytes Read", 0)
-                ib = (tm.get("Input Metrics") or {}).get("Bytes Read", 0)
-                cur = stages.setdefault(sid, [0, 0, 0])
-                cur[0] += sw; cur[1] += sr; cur[2] += ib
-    stages = {
-        sid: {"name": names.get(sid, "?"), "shuffle_write_bytes": v[0],
-              "shuffle_read_bytes": v[1], "input_bytes": v[2]}
-        for sid, v in sorted(stages.items())
-        if (v[0] or v[1]) and sid in timed
-    }
+for s in st["stages"]:  # one entry per stage attempt
+    if s["stageId"] in timed:
+        cur = stages.setdefault(s["stageId"], {
+            "name": s["name"].split("\n")[0], "shuffle_write_bytes": 0,
+            "shuffle_read_bytes": 0, "input_bytes": 0})
+        cur["shuffle_write_bytes"] += s["shuffleWriteBytes"]
+        cur["shuffle_read_bytes"] += s["shuffleReadBytes"]
+        cur["input_bytes"] += s["inputBytes"]
+stages = {sid: v for sid, v in sorted(stages.items())
+          if v["shuffle_write_bytes"] or v["shuffle_read_bytes"]}
 out = {"execs": execs, "turns": n, "sec": dt, "pps": n / dt, "mode": mode,
        "shuffle_write_total": sum(s["shuffle_write_bytes"] for s in stages.values()),
        "shuffle_read_total": sum(s["shuffle_read_bytes"] for s in stages.values()),
@@ -185,13 +166,11 @@ def run_level(n_exec: int, exec_cores: int, zip_path: str, job_path: str,
     # partition count at every level (identical plan and task grain, only
     # the core count varies) — pass ``parts`` to pin it.
     shuffle_parts = parts or max(parts_per_core * n_exec * exec_cores, 8)
-    evt_dir = "/tmp/tsengine_evtlog"
-    os.makedirs(evt_dir, exist_ok=True)
     cmd = [
         "taskset", "-c", ",".join(map(str, pin)),
         spark_submit_bin(),
         "--master", f"local-cluster[{n_exec},{exec_cores},{mem_mb}]",
-        "--py-files", zip_path,
+        "--py-files", f"{zip_path},{os.path.join(REPO, 'perfbench', 'spans.py')}",
         "--conf", f"spark.executor.memory={mem_mb - 256}m",
         "--conf", "spark.driver.memory=3g",
         # substrate mitigations measured in BENCH/BASELINE.md: fault each
@@ -200,18 +179,7 @@ def run_level(n_exec: int, exec_cores: int, zip_path: str, job_path: str,
         "--conf", f"spark.executor.extraJavaOptions={JVM_OPTS}",
         "--conf", f"spark.driver.extraJavaOptions={JVM_OPTS}",
         "--conf", f"spark.sql.shuffle.partitions={shuffle_parts}",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.session.timeZone=UTC",
-        "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
-        "--conf", "spark.ui.enabled=false",
-        # event log feeds the per-stage shuffle-bytes report (parsed by the
-        # job after spark.stop(); async JSON writes, negligible overhead)
-        "--conf", "spark.eventLog.enabled=true",
-        "--conf", f"spark.eventLog.dir=file:{evt_dir}",
-        # single plain-JSON log (Spark 4 defaults to rolling zstd v2): the
-        # job parses it in-process after spark.stop()
-        "--conf", "spark.eventLog.rolling.enabled=false",
-        "--conf", "spark.eventLog.compress=false",
+        *(a for k, v in ENGINE_CONF.items() for a in ("--conf", f"{k}={v}")),
         job_path, job_arg, *(extra_args or []),
     ]
     env = dict(os.environ)
@@ -258,8 +226,6 @@ def main():
     tdir = args.tdir or f"/tmp/tsengine_bench_transcripts_{args.n_conv}"
 
     if not os.path.exists(os.path.join(tdir, "_SUCCESS")):
-        sys.path.insert(0, REPO)
-        from tsengine.session import get_spark
         from tsengine.synth import write_transcripts
 
         spark = get_spark(app_name="cluster-scaling-gen", master="local[16]")

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Bench regression gate: run bench.py with the driver's protocol and compare
-per-query timings against the newest committed BENCH_r*.json.
+per-query timings against the newest committed BENCH_r*.json taken with the
+same core count and scale factor; with no such baseline it refuses.
 
 Both round-2 regressions (session-wide 16 shuffle partitions; minhash
 exploded-distinct) were invisible to ad-hoc builder measurements because they
@@ -23,23 +24,30 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from perfbench import hostprobe  # noqa: E402
+
 GATE = float(os.environ.get("TSENGINE_BENCH_GATE", "1.5"))
 # below this many seconds a ratio is noise (host steal bursts), not a signal
 MIN_ABS_SEC = float(os.environ.get("TSENGINE_BENCH_GATE_MIN_SEC", "1.0"))
 
 
-def latest_baseline() -> tuple[str, dict]:
+def latest_baseline(cpus, sf) -> tuple[str, dict]:
+    """Newest BENCH_r*.json taken with the same core count and scale factor
+    as the current run: timings from another box shape are no baseline."""
     cands = sorted(
         glob.glob(os.path.join(REPO, "BENCH_r*.json")),
         key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
+        reverse=True,
     )
-    if not cands:
-        raise SystemExit("no BENCH_r*.json baseline found")
-    path = cands[-1]
-    with open(path) as f:
-        doc = json.load(f)
-    queries = doc.get("parsed", doc).get("queries", {})
-    return path, queries
+    for path in cands:
+        with open(path) as f:
+            doc = json.load(f)
+        doc = doc.get("parsed", doc)
+        if doc.get("cpus") == cpus and doc.get("sf") == sf:
+            return path, doc.get("queries", {})
+    raise SystemExit(f"no like-for-like baseline (cpus={cpus}, sf={sf})")
 
 
 def run_bench() -> dict:
@@ -60,50 +68,37 @@ def run_bench() -> dict:
     return json.loads(line)
 
 
-def probe_steal() -> dict:
-    """Quantify host CPU steal around the measurement (bench/steal_probe.py):
-    a gate FAIL taken while the hypervisor is stealing >= 10 % of the box is
-    a substrate reading, not a regression signal — record the context so the
-    snapshot is interpretable later."""
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench", "steal_probe.py"), "5"],
-        capture_output=True, text=True,
-    )
+def probe() -> dict | None:
+    """One host-quietness reading (perfbench/hostprobe.py); None when the
+    probe itself raised."""
     try:
-        return json.loads(out.stdout.strip().splitlines()[-1])
+        return hostprobe.reading()
     except Exception:
-        return {"steal_pct": None, "error": out.stderr[-300:]}
+        return None
 
 
-def host_reading(probes: list) -> str:
-    """Classify the host around a gate run from its steal-probe readings:
-    "noisy" when any reading shows steal >= 10 % or a memory bus below
-    11 GB/s, else "unknown" when any reading is missing (a failed probe is
-    no evidence of a quiet host), else "quiet"."""
-    pairs = [((p or {}).get("steal_pct"), (p or {}).get("memcpy_gbps")) for p in probes]
-    if any((s is not None and s >= 10) or (m is not None and m < 11.0)
-           for s, m in pairs):
+def host_reading(readings: list) -> str:
+    """Combined verdict of the readings around a gate run: "noisy" when any
+    reading is noisy, else "quiet" only when every reading is quiet, else
+    "unknown" (a failed probe is no evidence of a quiet host)."""
+    verdicts = [(r or {}).get("verdict") for r in readings]
+    if "noisy" in verdicts:
         return "noisy"
-    if any(s is None or m is None for s, m in pairs):
-        return "unknown"
-    return "quiet"
+    return "quiet" if all(v == "quiet" for v in verdicts) else "unknown"
 
 
 def main() -> int:
     if len(sys.argv) > 2 and sys.argv[1] == "--compare":
         with open(sys.argv[2]) as f:
             current = json.load(f)
-        steal = None
+        host = None
     else:
-        pre = probe_steal()
+        pre = probe()
         current = run_bench()
-        post = probe_steal()
-        steal = {"before": pre, "after": post}
-        print(f"host steal: {pre.get('steal_pct')}% before, "
-              f"{post.get('steal_pct')}% after; memcpy "
-              f"{pre.get('memcpy_gbps')}/{post.get('memcpy_gbps')} GB/s "
-              f"(quiet ref 14.7)")
-    base_path, base = latest_baseline()
+        host = {"before": pre, "after": probe()}
+        for when, r in host.items():
+            print(f"host {when}: {json.dumps(r)}")
+    base_path, base = latest_baseline(current.get("cpus"), current.get("sf"))
     cur_q = current.get("queries", {})
     regressions, improved = [], []
     for name, prev in sorted(base.items()):
@@ -124,17 +119,17 @@ def main() -> int:
     out_path = os.path.join(REPO, "BENCH", "bench_gate_last.json")
     with open(out_path, "w") as f:
         json.dump({"baseline": os.path.basename(base_path), "current": current,
-                   "host_steal": steal,
+                   "host": host,
                    "regressions": [r[0] for r in regressions]}, f, indent=1)
     if regressions:
-        host = host_reading([steal["before"], steal["after"]]) if steal else None
+        verdict = host_reading(list(host.values())) if host else None
         note = {
-            "noisy": " — host contended (steal >= 10% or memory bus < 11 GB/s), "
-                     "reading is substrate-attributed",
-            "unknown": " — host probe unavailable, contention unknown",
-        }.get(host)
-        print(f"FAIL: {len(regressions)} regressions (details {out_path})"
-              + (note + "; re-run when bench/steal_probe.py says quiet" if note else ""))
+            "noisy": " — host contended, reading is substrate-attributed; "
+                     "re-run when perfbench/hostprobe.py reads quiet",
+            "unknown": " — host reading unknown (probe failed or no "
+                       "reference for this host)",
+        }.get(verdict, "")
+        print(f"FAIL: {len(regressions)} regressions (details {out_path}){note}")
         return 1
     print("OK: no regressions")
     return 0

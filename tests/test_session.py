@@ -100,3 +100,9 @@ def test_default_driver_memory_without_sysconf(monkeypatch):
 
     monkeypatch.setattr(session.os, "sysconf", unknown)
     assert session.default_driver_memory() == "8g"
+
+
+def test_session_carries_engine_conf(spark):
+    """A get_spark session carries every fixed engine setting, the ones the
+    scaling bench passes to its spark-submit sessions too."""
+    assert {k: spark.conf.get(k) for k in session.ENGINE_CONF} == session.ENGINE_CONF

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine import schema
@@ -143,11 +143,6 @@ def assert_castable(df: DataFrame, value_col: str = "value") -> DataFrame:
     if bad:
         raise TsError("Non scalar values found")
     return casted.withColumn(value_col, F.col("_casted")).drop("_casted")
-
-
-def series_window() -> Window:
-    """The canonical per-series time-ordered window."""
-    return Window.partitionBy("series_id").orderBy("epoch")
 
 
 def events_as_series(spark: SparkSession, sf_dir: str) -> DataFrame:

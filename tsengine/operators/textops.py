@@ -99,11 +99,6 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.select("doc_id", *[f"hits_{lg}" for lg in langs], pred.alias("lang_pred"))
 
 
-def md5_long(col: Column) -> Column:
-    """First 60 bits of md5 as a non-negative BIGINT — engine-portable hash."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Document fingerprint: md5 of the whitespace-normalized lowercase text
     (content-defined identity for exact dedup joins) + its 60-bit int form."""
@@ -322,27 +317,6 @@ def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
         n_phone.cast("long").alias("n_phones"),
         t3.alias("text_clean"),
     )
-
-
-def shingles_expr(text: Column, k: int = 3) -> Column:
-    """Word k-shingles as strings ('w1 w2 w3'), distinct, from the token
-    stream.  Pure array functions — no UDF.
-
-    Column-level variant (no DataFrame to project onto), so it avoids the
-    per-element token recompute differently than :func:`shingle_rows_raw`:
-    the shingle list is built by zipping k SHIFTED SLICES of the token array
-    — the tokenization expression appears k times total per row, not once
-    per shingle index.  Prefer :func:`shingle_rows_raw` where a projection
-    is available."""
-    toks = F.transform(tokens_expr(text), lambda x: F.lower(x))
-    n = F.size(toks)
-    m = F.greatest(n - (k - 1), F.lit(0))
-    zipped = F.slice(toks, k, m)
-    for off in range(k - 2, -1, -1):
-        zipped = F.zip_with(
-            F.slice(toks, off + 1, m), zipped, lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.array_distinct(zipped)
 
 
 def contamination_check(

@@ -314,10 +314,3 @@ class Engine:
     def query(self, text: str) -> DataFrame:
         """Evaluate a compound formula to a (lazy) DataFrame."""
         return self.evaluator.run(text)
-
-    def query_to_list(self, text: str):
-        """Evaluate + materialize as the reference's JSON-able payload
-        ([[epoch, value], ...] per series, tf:1076-1108)."""
-        from tsengine.core import to_ts_lists
-
-        return to_ts_lists(self.query(text))

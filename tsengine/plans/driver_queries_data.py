@@ -300,6 +300,29 @@ ROLE_VOCAB = ["click", "error", "purchase", "signup", "view"]
 TOOL_VOCAB = ["big", "small"]
 
 
+def project_tier(out):
+    """Common driver projection of a tier frame: pivoted role/tool dist
+    counts + 6dp-rounded value plane, encoding-proof for the value-hash
+    compare.  Buckets whose only turn is a conversation's first have no
+    latency: min/max/sum/mean are NULL, coalesced to 0.0 on BOTH sides
+    (cnt_lat=0 marks them) so the value-hash never mixes None/NaN
+    encodings."""
+    dist = [
+        F.coalesce(F.element_at(F.col("role_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"r_{v}")
+        for v in ROLE_VOCAB
+    ] + [
+        F.coalesce(F.element_at(F.col("tool_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"t_{v}")
+        for v in TOOL_VOCAB
+    ]
+    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
+    return out.select(
+        "conv_id", "bucket", "cnt", "cnt_lat",
+        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
+        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
+        *dist,
+    )
+
+
 def q_transcript_rollup_1m(spark, sf_dir):
     """North-star tier rollup (with_latency -> rollup_raw_to_tier) made
     fully value-checkable: the transcript table is derived deterministically
@@ -321,26 +344,9 @@ def q_transcript_rollup_1m(spark, sf_dir):
         F.when(F.col("value") >= 50, "big").otherwise("small").alias("tool"),
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    out = R.rollup_raw_to_tier(
+    return project_tier(R.rollup_raw_to_tier(
         R.with_latency(t), "1m", role_vocab=ROLE_VOCAB, tool_vocab=TOOL_VOCAB
-    )
-    dist_cols = [
-        F.coalesce(F.element_at(F.col("role_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"r_{v}")
-        for v in ROLE_VOCAB
-    ] + [
-        F.coalesce(F.element_at(F.col("tool_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"t_{v}")
-        for v in TOOL_VOCAB
-    ]
-    # buckets whose only turn is a conversation's first have no latency:
-    # min/max/sum/mean are NULL — coalesce to 0.0 on BOTH sides (cnt_lat=0
-    # marks them) so the value-hash never mixes None/NaN encodings
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-        *dist_cols,
-    )
+    ))
 
 
 def q_salted_rollup_1m(spark, sf_dir):

@@ -22,6 +22,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB, project_tier
+
 # literal week boundaries inside the events table's fixed Jan-2024 range
 _CUT1 = "2024-01-08 00:00:00"
 _CUT2 = "2024-01-15 00:00:00"
@@ -145,27 +147,6 @@ def _transcripts(spark, sf_dir):
     )
 
 
-def _project_tier(out):
-    """Common driver projection of a tier frame: pivoted dist counts +
-    6dp-rounded value plane, encoding-proof for the value-hash compare."""
-    from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB
-
-    dist = [
-        F.coalesce(F.element_at(F.col("role_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"r_{v}")
-        for v in ROLE_VOCAB
-    ] + [
-        F.coalesce(F.element_at(F.col("tool_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"t_{v}")
-        for v in TOOL_VOCAB
-    ]
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-        *dist,
-    )
-
-
 def q_materialized_tier_1h(spark, sf_dir):
     """End-to-end incremental continuous aggregate: transcripts land in a
     snapshot table in TWO appends that split every conversation mid-stream
@@ -178,7 +159,6 @@ def q_materialized_tier_1h(spark, sf_dir):
     import os
 
     from tsengine.materialize import MaterializedTiers
-    from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB
     from tsengine.sources.snapshots import SnapshotTable
 
     key = ("mat1h", sf_dir)
@@ -195,21 +175,7 @@ def q_materialized_tier_1h(spark, sf_dir):
         src.append(t.filter(F.col("turn_idx") > 30))
         mat.refresh(spark)
         _memo[key] = mat
-    out = _memo[key].read_tier(spark, "1h")
-    dist = [
-        F.coalesce(F.element_at(F.col("role_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"r_{v}")
-        for v in ROLE_VOCAB
-    ] + [
-        F.coalesce(F.element_at(F.col("tool_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"t_{v}")
-        for v in TOOL_VOCAB
-    ]
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-        *dist,
-    )
+    return project_tier(_memo[key].read_tier(spark, "1h"))
 
 
 def q_materialized_1d_retention(spark, sf_dir):
@@ -219,8 +185,6 @@ def q_materialized_1d_retention(spark, sf_dir):
     coarse tier must still cover the expired window bit-for-bit (oracle:
     full-table 1d rollup), proving the aggregates outlive the raw data that
     produced them."""
-    from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB
-
     q_materialized_tier_1h(spark, sf_dir)  # ensure the shared build exists
     mat = _memo[("mat1h", sf_dir)]
     key = ("mat1d_ret", sf_dir)
@@ -231,21 +195,7 @@ def q_materialized_1d_retention(spark, sf_dir):
         cut_age = now - _CUT2_EPOCH
         mat.apply_retention({"raw": cut_age, "1m": cut_age}, now_epoch=now)
         _memo[key] = True
-    out = mat.read_tier(spark, "1d")
-    dist = [
-        F.coalesce(F.element_at(F.col("role_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"r_{v}")
-        for v in ROLE_VOCAB
-    ] + [
-        F.coalesce(F.element_at(F.col("tool_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"t_{v}")
-        for v in TOOL_VOCAB
-    ]
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-        *dist,
-    )
+    return project_tier(mat.read_tier(spark, "1d"))
 
 
 def q_stream_ingest_1h(spark, sf_dir):
@@ -263,7 +213,6 @@ def q_stream_ingest_1h(spark, sf_dir):
     import shutil
 
     from tsengine.materialize import MaterializedTiers
-    from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB
     from tsengine.sources.snapshots import SnapshotTable
     from tsengine.streaming import continuous as S
 
@@ -293,21 +242,7 @@ def q_stream_ingest_1h(spark, sf_dir):
         )
         assert S.last_stream_batch_id(tbl) == 1  # two micro-batches committed
         _memo[key] = mat
-    out = _memo[key].read_tier(spark, "1h")
-    dist = [
-        F.coalesce(F.element_at(F.col("role_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"r_{v}")
-        for v in ROLE_VOCAB
-    ] + [
-        F.coalesce(F.element_at(F.col("tool_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"t_{v}")
-        for v in TOOL_VOCAB
-    ]
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-        *dist,
-    )
+    return project_tier(_memo[key].read_tier(spark, "1h"))
 
 
 def q_realtime_tier_1h(spark, sf_dir):
@@ -321,7 +256,6 @@ def q_realtime_tier_1h(spark, sf_dir):
     import os
 
     from tsengine.materialize import MaterializedTiers
-    from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB
     from tsengine.sources.snapshots import SnapshotTable
 
     key = ("realtime1h", sf_dir)
@@ -341,7 +275,7 @@ def q_realtime_tier_1h(spark, sf_dir):
     mat = _memo[key]
     out = mat.read_realtime(spark, "1h")
     assert mat.positions()["1h"] == 1  # read-only: no tier commit happened
-    return _project_tier(out)
+    return project_tier(out)
 
 
 def q_tier_routed_6h(spark, sf_dir):
@@ -355,7 +289,7 @@ def q_tier_routed_6h(spark, sf_dir):
     q_materialized_tier_1h(spark, sf_dir)  # ensure the shared build exists
     mat = _memo[("mat1h", sf_dir)]
     assert MaterializedTiers.route_tier(21600) == "1h"
-    return _project_tier(mat.read_resampled(spark, 21600))
+    return project_tier(mat.read_resampled(spark, 21600))
 
 
 # ---------------------------------------------------------------- oracles
@@ -371,8 +305,6 @@ ORACLE = {
 
 
 def _mat_sql(width: int) -> str:
-    from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB
-
     role = ", ".join(
         f"CAST(sum(CASE WHEN role = '{v}' THEN 1 ELSE 0 END) AS BIGINT) AS r_{v}"
         for v in ROLE_VOCAB

@@ -25,6 +25,18 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 # retained heap after GC at the end of a dashboard run grew 3-10 MB.
 CODEGEN_CACHE_ENTRIES = "1000"
 
+# Settings every engine session carries, whoever builds it: get_spark's
+# builder and the multi-executor scaling bench's spark-submit flags.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.ui.enabled": "false",
+    "spark.sql.codegen.cache.maxEntries": CODEGEN_CACHE_ENTRIES,
+}
+
 
 def default_driver_memory() -> str:
     """Driver heap for this box: half its physical memory in whole GB,
@@ -56,7 +68,8 @@ def get_spark(
     - driver heap from the box (:func:`default_driver_memory`), unless
       ``TSENGINE_DRIVER_MEMORY`` or ``extra_conf`` sets it.
 
-    ``extra_conf`` is applied last and overrides any of these.
+    The fixed settings among these are :data:`ENGINE_CONF`.  ``extra_conf``
+    is applied last and overrides any of these.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or os.environ.get("TSENGINE_MASTER", f"local[{cpus}]")
@@ -93,13 +106,7 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             shuffle_partitions or os.environ.get("TSENGINE_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS),
         )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
+        .config(map=ENGINE_CONF)
         .config("spark.driver.memory",
                 os.environ.get("TSENGINE_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.driver.extraJavaOptions", jvm_opts)

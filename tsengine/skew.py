@@ -1,5 +1,5 @@
 """Skew handling for hot conversations (BASELINE.json north_rule: "salted
-repartitioning for hot conversations") + partitioning helpers.
+repartitioning for hot conversations").
 
 At 10^12 turns a few conv_ids can carry 100x the median turn count (the
 synth generator reproduces this, tsengine/synth.py).  Two mechanisms:
@@ -60,11 +60,3 @@ def salted_rollup(turns: DataFrame, width: int, buckets: int = 16) -> DataFrame:
     )
     return final.withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
 
-
-def repartition_for_series_ops(df: DataFrame, key: str = "conv_id",
-                               n: int | None = None) -> DataFrame:
-    """Partition so every series is WHOLE within a partition group — required
-    by LOCF/gap-fill (SURVEY.md §7.3 hard part 2).  Range partitioning keeps
-    pruning-friendly order; window functions then shuffle-free-reuse it."""
-    cols = [F.col(key)]
-    return df.repartitionByRange(*(([n] if n else []) + cols)).sortWithinPartitions(key)
