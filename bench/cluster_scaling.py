@@ -19,10 +19,13 @@ Protocol:
 from __future__ import annotations
 
 import argparse
+import atexit
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -232,8 +235,12 @@ def main():
         write_transcripts(spark, tdir, n_conv=args.n_conv, base_turns=60, hot_factor=40)
         spark.stop()
 
-    zip_path = build_zip("/tmp/tsengine_pyfiles.zip")
-    job_path = "/tmp/tsengine_cluster_job.py"
+    # this run's package zip and job scripts: a private directory, so runs
+    # from two checkouts can go side by side (the transcripts stay shared)
+    work = tempfile.mkdtemp(prefix="tsengine_cluster_")
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    zip_path = build_zip(os.path.join(work, "tsengine_pyfiles.zip"))
+    job_path = os.path.join(work, "tsengine_cluster_job.py")
     with open(job_path, "w") as f:
         f.write(JOB)
 
@@ -269,7 +276,7 @@ def main():
 
     ctrl = {}
     if not args.skip_control:
-        ctrl_path = "/tmp/tsengine_cluster_ctrl.py"
+        ctrl_path = os.path.join(work, "tsengine_cluster_ctrl.py")
         with open(ctrl_path, "w") as f:
             f.write(CTRL_JOB)
         for n in levels:

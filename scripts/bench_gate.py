@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Bench regression gate: run bench.py with the driver's protocol and compare
 per-query timings against the newest committed BENCH_r*.json taken with the
-same core count and scale factor; with no such baseline it refuses.
+same core count and scale factor; with no such baseline it refuses before
+it runs anything.
 
 Both round-2 regressions (session-wide 16 shuffle partitions; minhash
 exploded-distinct) were invisible to ad-hoc builder measurements because they
@@ -50,10 +51,25 @@ def latest_baseline(cpus, sf) -> tuple[str, dict]:
     raise SystemExit(f"no like-for-like baseline (cpus={cpus}, sf={sf})")
 
 
-def run_bench() -> dict:
+def bench_env() -> dict:
+    """bench.py's environment, with its defaults for the input scale and
+    the core count."""
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    return env
+
+
+def run_shape(env: dict) -> tuple[int, float]:
+    """(cpus, sf) that bench.py will record for a run in ``env``
+    (bench.py main: int(SPARK_GRAFT_CPUS), sf from the SF dir's name)."""
+    sf_dir = env["SPARK_GRAFT_SF_DIR"]
+    sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
+    return int(env["SPARK_GRAFT_CPUS"]), sf
+
+
+def run_bench() -> dict:
+    env = bench_env()
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         env=env,
@@ -92,13 +108,16 @@ def main() -> int:
         with open(sys.argv[2]) as f:
             current = json.load(f)
         host = None
+        base_path, base = latest_baseline(current.get("cpus"), current.get("sf"))
     else:
+        # the run's shape is known before it starts: refuse an unlike
+        # baseline without spending the bench
+        base_path, base = latest_baseline(*run_shape(bench_env()))
         pre = probe()
         current = run_bench()
         host = {"before": pre, "after": probe()}
         for when, r in host.items():
             print(f"host {when}: {json.dumps(r)}")
-    base_path, base = latest_baseline(current.get("cpus"), current.get("sf"))
     cur_q = current.get("queries", {})
     regressions, improved = [], []
     for name, prev in sorted(base.items()):

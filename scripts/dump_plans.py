@@ -41,6 +41,16 @@ PLAN_SET = [
 ]
 
 RED_FLAGS = ("CartesianProduct", "BroadcastNestedLoopJoin")
+# shuffle exchanges (not BroadcastExchange) and parquet scans of a
+# formatted plan: the INDEX.md columns, pinned by tests/test_plan_index.py
+EXCHANGE_RE = re.compile(r"\(\d+\) Exchange\b")
+SCAN_RE = re.compile(r"\(\d+\) Scan parquet")
+
+
+def plan_counts(plan: str) -> tuple[int, int, list[str]]:
+    """(exchanges, parquet scans, red-flag joins) of a formatted plan."""
+    return (len(EXCHANGE_RE.findall(plan)), len(SCAN_RE.findall(plan)),
+            [fl for fl in RED_FLAGS if fl in plan])
 
 
 def formatted_plan(df) -> str:
@@ -77,9 +87,7 @@ def main() -> None:
         plan = formatted_plan(df)
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
-        n_ex = len(re.findall(r"\(\d+\) Exchange\b", plan))
-        n_scan = len(re.findall(r"\(\d+\) Scan parquet", plan))
-        flags = [fl for fl in RED_FLAGS if fl in plan]
+        n_ex, n_scan, flags = plan_counts(plan)
         index.append(f"| {name} | {n_ex} | {n_scan} | "
                      f"{', '.join(flags) if flags else 'none'} |")
         print(f"{name}: exchanges={n_ex} scans={n_scan} flags={flags or 'none'}")

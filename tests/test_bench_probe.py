@@ -86,3 +86,26 @@ def test_gate_compares_like_for_like_only(tmp_path, monkeypatch, capsys):
     (tmp_path / "BENCH").mkdir()
     assert gate.main() == 0
     assert "baseline: BENCH_r03.json" in capsys.readouterr().out
+
+
+def test_gate_refuses_before_running_the_bench(tmp_path, monkeypatch):
+    """In run mode the shape comes from the bench's environment, so with no
+    like-for-like baseline the gate refuses without running bench.py or the
+    host probe."""
+    gate = _load("scripts/bench_gate.py")
+    monkeypatch.setattr(gate, "REPO", str(tmp_path))
+    _bench(tmp_path / "BENCH_r05.json", 32, 0.1, 2.0)
+
+    def must_not_run():
+        raise AssertionError("ran before refusing")
+
+    monkeypatch.setattr(gate, "run_bench", must_not_run)
+    monkeypatch.setattr(gate, "probe", must_not_run)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1/")
+    monkeypatch.setattr(sys, "argv", ["bench_gate.py"])
+    with pytest.raises(SystemExit,
+                       match=r"no like-for-like baseline \(cpus=4, sf=0\.1\)") as e:
+        gate.main()
+    assert e.value.code != 0
+    assert not (tmp_path / "BENCH").exists()

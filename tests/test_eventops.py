@@ -1,6 +1,7 @@
 """Sessionization and M4 downsampling: hand-computed vectors + tie-break
 determinism."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from tsengine.operators.eventops import (
@@ -576,17 +577,7 @@ def test_skew_guard_hot_key(spark):
     assert plain.where(F.col("overflow")).count() == 0
     assert "Join" not in plain._jdf.queryExecution().optimizedPlan().toString()
 
-    # --- ewma (same shape for cusum/holt/lttb via _guarded) ---
-    vdf = df.withColumn("value", F.col("ep").cast("double")) \
-            .withColumnRenamed("user_id", "series_id")
-    ew = E.ewma(vdf, max_per_key=100)
-    hot = ew.where(F.col("series_id") == 99).collect()
-    assert len(hot) == 1 and hot[0]["overflow"] is True and hot[0]["ewma"] is None
-    ok = ew.where((F.col("series_id") == 1) & ~F.col("overflow")).count()
-    assert ok == 10
-    plain_ew = E.ewma(vdf)
-    assert plain_ew.columns == ew.columns  # schema identical with/without cap
-    assert plain_ew.where(F.col("overflow")).count() == 0
+    # (the per-series kernels: test_skew_guard_hot_key_series_kernels)
 
     # --- cohort_retention: excluded users -> one summary row ---
     cr = E.cohort_retention(df, width_sec=100, max_per_key=100).collect()
@@ -602,3 +593,38 @@ def test_skew_guard_hot_key(spark):
         uni, width_sec=100, max_per_key=100
     ).columns
     assert plain_cr.where(F.col("overflow")).count() == 0
+
+
+@pytest.mark.parametrize(
+    "op", ["ewma", "lttb_downsample", "cusum", "holt_smooth"])
+def test_skew_guard_hot_key_series_kernels(spark, op):
+    """Every per-series applyInPandas kernel under a cap: the single hot key
+    (1000x the median count) is one all-NULL row flagged overflow, the
+    other keys compute as without a cap, and the cap leaves the output
+    columns unchanged."""
+    from tsengine.operators import eventops as E
+
+    rows = []
+    for s in range(1, 6):  # 5 uniform series, 10 points each
+        rows += [(s, i * 10, float(i * s)) for i in range(10)]
+    rows += [(99, i, float(i % 13)) for i in range(10_000)]
+    df = spark.createDataFrame(rows, "series_id long, ep long, value double")
+    fn = getattr(E, op)
+
+    capped = fn(df, max_per_key=100)
+    hot = capped.where(F.col("series_id") == 99).collect()
+    assert len(hot) == 1 and hot[0]["overflow"] is True
+    assert all(hot[0][c] is None for c in capped.columns
+               if c not in ("series_id", "overflow"))
+    ok = capped.where(F.col("series_id") != 99)
+    assert ok.where(F.col("overflow")).count() == 0
+    assert ok.count() == 50  # 10 points each; lttb passes short series through
+
+    plain = fn(df)
+    assert plain.columns == capped.columns
+    assert plain.where(F.col("overflow")).count() == 0
+    assert plain.where(F.col("series_id") == 99).count() == (
+        100 if op == "lttb_downsample" else 10_000)
+    assert (sorted(map(tuple, ok.drop("overflow").collect()))
+            == sorted(map(tuple, plain.where(F.col("series_id") != 99)
+                          .drop("overflow").collect())))

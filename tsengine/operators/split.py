@@ -42,7 +42,13 @@ MIDNIGHT_DST_TZS = frozenset({
 
 
 def split(df: DataFrame, period: str = "day", tz_name: str = DEFAULT_TZ) -> DataFrame:
-    """Add a ``bucket`` column = beginning-epoch of the row's calendar period."""
+    """Add a ``bucket`` column = beginning-epoch of the row's calendar period.
+
+    Each (series_id, bucket) pair is one sub-series of the reference's
+    flattened ts_list.  The frame stays keyed by that pair: an aggregate
+    groups on both columns (``aggregates.inner_*(..., group_cols=...)``),
+    and only a consumer that sees sub-series by list position ranks them
+    first (``plans.api._rekey_split``)."""
     if period not in VALID_PERIODS:
         raise TsError(f"Invalid period given: {period}")
     return df.withColumn("bucket", bucket_epoch_expr("epoch", period, tz_name))

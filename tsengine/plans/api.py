@@ -12,6 +12,7 @@ pushes into the scan; the count limit becomes a per-series top-k window.
 
 from __future__ import annotations
 
+import functools
 import json
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -34,18 +35,24 @@ def _to_bool(v):
 
 
 def _rekey_split(df: DataFrame) -> DataFrame:
-    """After split(), each (series_id, bucket) pair IS a sub-series of the
+    """Rank a split frame's sub-series into list positions.
+
+    After split(), each (series_id, bucket) pair IS a sub-series of the
     reference's FLATTENED ts_list (tf:1020), and pairwise ops match lists by
     POSITION (tf:795-799).  Re-key sub-series to their flatten position
     (dense_rank over (series_id, bucket) — the reference's list order, then
     pandas-groupby bucket order, tf:1042-1047).
 
+    Only a consumer that aligns sub-series by position or returns them needs
+    the rank; :func:`_positional` applies it at the registry boundary.  The
+    merged ``inner_*`` aggregates group on (series_id, bucket) directly and
+    never rank.
+
     Scale shape: the rank is computed over the DISTINCT (series_id, bucket)
     frame — tiny (one row per sub-series) — and broadcast-joined back, so
-    the data itself never passes through a single-partition global window
-    (the previous Window.orderBy(...) with no partitionBy collapsed the
-    whole frame onto one task).  At scale keep the (series_id, bucket)
-    columns instead — split_agg does."""
+    the data itself never passes through a single-partition global window.
+    The join carries the upstream pipeline twice, which is why the
+    ``inner_*`` path avoids it."""
     keys = (
         df.select("series_id", "bucket").distinct()
         .withColumn(
@@ -59,12 +66,39 @@ def _rekey_split(df: DataFrame) -> DataFrame:
     )
 
 
+def _is_split(x) -> bool:
+    # the split frame is the only registry frame with a bucket column
+    return isinstance(x, DataFrame) and "bucket" in x.columns
+
+
+def _ranked(x):
+    return _rekey_split(x) if _is_split(x) else x
+
+
+def _positional(fn):
+    """Registry boundary for every consumer that sees sub-series by list
+    position: a split frame argument is ranked (:func:`_rekey_split`)
+    before ``fn`` runs."""
+
+    @functools.wraps(fn)
+    def call(*args, **kw):
+        return fn(*[_ranked(a) for a in args], **kw)
+
+    return call
+
+
 def _merged(fn):
     """Reference aggregate semantics: inner_*/last merge per-series results
     into ONE frame (merge_agg_func, tf:433-447) whose index is the per-series
-    stamps; downstream pairwise ops then align on epoch alone."""
+    stamps; downstream pairwise ops then align on epoch alone.
+
+    Over a split frame each (series_id, bucket) pair is one sub-series, so
+    an inner_* aggregate groups on both columns: the same rows as grouping
+    on the sub-series' list positions, without computing them."""
 
     def call(df, **kw):
+        if _is_split(df):
+            kw["group_cols"] = ["series_id", "bucket"]
         out = fn(df, **kw)
         return out.select(F.lit(0).cast("long").alias("series_id"), "epoch", "value")
 
@@ -205,7 +239,7 @@ class Engine:
         group_by = kwargs.pop("group_by", None)
         inc = self.get_increments(id_variable, **kwargs)
         if group_by:
-            return _merged(agg.inner_sum)(_rekey_split(spl.split(inc, period=group_by)))
+            inc = spl.split(inc, period=group_by)
         return _merged(agg.inner_sum)(inc)
 
     # ---------------------------------------------------------------- registry
@@ -273,7 +307,9 @@ class Engine:
             )
 
         def split_fn(df, period="day"):
-            return _rekey_split(spl.split(df, period=period))
+            # keyed by (series_id, bucket); positions are assigned only
+            # where a consumer needs them (_positional, query)
+            return spl.split(df, period=period)
 
         def scalar(fn):
             def call(df, number):
@@ -295,6 +331,7 @@ class Engine:
             "inner_min": _merged(agg.inner_min),
             "inner_mean": _merged(agg.inner_mean),
             "inner_std": _merged(agg.inner_std),
+            # last has no group_cols: its split argument is ranked first
             "last": _merged(lambda df, number=1: agg.last(df, number=int(number))),
             "scalar_product": scalar(arith.scalar_product),
             "scalar_sum": scalar(arith.scalar_sum),
@@ -309,8 +346,11 @@ class Engine:
             "get_increments": lambda id_variable, **kw: self.get_increments(id_variable, **kw),
             "usage": lambda id_variable, **kw: self.usage(id_variable, **kw),
         }
-        return reg
+        return {k: fn if k.startswith("inner_") else _positional(fn)
+                for k, fn in reg.items()}
 
     def query(self, text: str) -> DataFrame:
-        """Evaluate a compound formula to a (lazy) DataFrame."""
-        return self.evaluator.run(text)
+        """Evaluate a compound formula to a (lazy) DataFrame.  A split
+        result is returned by list position, like every positional
+        consumer sees it."""
+        return _ranked(self.evaluator.run(text))
