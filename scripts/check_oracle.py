@@ -35,6 +35,9 @@ class is enumerated per query, never blanket.  Every query outside the class
 keeps the exact 6-dp string contract.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+
+Checks the engine of the checkout the script sits in, from any working
+directory; Spark is sized from the box by ``get_spark``.
 """
 
 from __future__ import annotations
@@ -43,7 +46,8 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -143,9 +147,10 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    cpus = os.environ.get("TSENGINE_ORACLE_CPUS", "8")
-    spark = get_spark(app_name="oracle-check", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    # the Python workers import this checkout's tsengine too
+    paths = [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    os.environ["PYTHONPATH"] = os.pathsep.join(paths)
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
 
     for t in TABLES:

@@ -10,7 +10,8 @@ the same text as committed artifacts so the shapes are reviewable without
 a Spark session.
 
 Usage: python scripts/dump_plans.py [sf_dir]      (default /root/testdata/sf0.01)
-Writes BENCH/plans/<query>.txt plus an INDEX.md with red-flag grep results.
+Writes BENCH/plans/<query>.txt plus an INDEX.md with red-flag grep results,
+from the checkout the script sits in, whatever the working directory.
 """
 
 from __future__ import annotations
@@ -23,7 +24,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 # the queries whose plans carry the scale story (VERDICT plan-audit set,
-# the tier chain, the compressed-tier read path and the formula layer)
+# the tier chain, the compressed-tier read path, the formula layer and the
+# LLM-pipeline set: curation, priority sampling, LSH near-dups, dup spans)
 PLAN_SET = [
     "q_usage_day",
     "q_distribute_linear",
@@ -38,6 +40,10 @@ PLAN_SET = [
     "q_semantic_dedup",
     "q_transcript_rollup_1m",
     "q_tier_compressed_read",
+    "q_corpus_curation",
+    "q_priority_sample",
+    "q_lsh_near_dups",
+    "q_duplicate_spans",
 ]
 
 RED_FLAGS = ("CartesianProduct", "BroadcastNestedLoopJoin")
@@ -68,7 +74,10 @@ def main() -> None:
     from tsengine.session import get_spark
     import __spark_entry__ as entry
 
-    spark = get_spark(app_name="dump-plans", master="local[8]")
+    # the Python workers import this checkout's tsengine too
+    paths = [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    os.environ["PYTHONPATH"] = os.pathsep.join(paths)
+    spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry.queries()
 

@@ -2,8 +2,10 @@
 appends (including mid-conversation appends via conv-state anchors),
 slice-local refresh (untouched tier files reused by reference), kill-resume
 reconciliation, idempotent refresh, lineage, per-tier retention, day-granular
-tier files, scan-free refreshes under an explicit vocabulary, and one shared
-increment per source range between real-time reads and refreshes."""
+tier files, scan-free refreshes under an explicit vocabulary, one shared
+increment per source range between real-time reads and refreshes, and the
+at-rest format (zstd, no stored ``vmean``) including states written with
+``vmean`` stored."""
 
 import os
 import random
@@ -13,7 +15,9 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from tsengine.materialize import COMPONENTS, InjectedFailure, MaterializedTiers
+from tsengine.materialize import (
+    COMPONENTS, InjectedFailure, MaterializedTiers, _ranged,
+)
 from tsengine.operators import rollup as R
 from tsengine.sources.snapshots import SnapshotTable
 
@@ -624,3 +628,89 @@ def test_tier_block_store_roundtrip_and_pruning(spark, src_mat):
     exp2 = mat.read_tier(spark, "1h").select(*cols)
     got2 = mat.read_tier_compressed(spark, "1h")
     assert got2.exceptAll(exp2).count() == 0 and exp2.exceptAll(got2).count() == 0
+
+
+def _footers(root):
+    """{path: (column paths, column-chunk codecs)} of every parquet file
+    under ``root``, read from the footers."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True):
+        meta = pq.ParquetFile(f).metadata
+        cols = {meta.schema.column(i).path for i in range(meta.num_columns)}
+        codecs = {meta.row_group(g).column(i).compression
+                  for g in range(meta.num_row_groups)
+                  for i in range(meta.num_columns)}
+        out[f] = (cols, codecs)
+    return out
+
+
+def test_at_rest_format_zstd_and_no_stored_mean(spark, src_mat):
+    """Every engine table file (source, tiers, conv state, tier blocks) is
+    zstd-compressed, and each tier value is stored once: no tier file
+    holds ``vmean`` and no block file holds its stream — the read paths
+    still return it."""
+    src, mat = src_mat
+    src.append(_turns(spark, ["a", "b"], n=200, gap=700))
+    mat.refresh(spark)
+    src.append(_turns(spark, ["a"], t0=1_600_000_000 + 200 * 700, n=20,
+                      gap=700, idx0=200))
+    mat.refresh(spark)  # a replace_files commit next to the first append
+    mat.freeze_tier_blocks(spark, "1h")
+
+    tables = {"source": src.path, "convstate": mat.convstate.path,
+              "blocks": mat.block_table("1h").path}
+    tables.update({t: mat.tiers[t].path for t in R.TIER_ORDER})
+    for name, root in tables.items():
+        files = _footers(root)
+        assert files, name
+        for f, (cols, codecs) in files.items():
+            assert codecs == {"ZSTD"}, (name, f, codecs)
+            if name in R.TIER_ORDER:
+                assert "vmean" not in cols, (name, f)
+            if name == "blocks":
+                assert not {"first_vmean", "blk_vmean"} & cols, (name, f)
+                assert "blk_vsum" in cols, (name, f)
+    for t in R.TIER_ORDER:
+        assert mat.read_tier(spark, t).columns == list(R.TIER_COLS)
+    assert "vmean" in mat.read_tier_compressed(spark, "1h").columns
+
+
+def test_tier_state_with_stored_mean_reads_and_refreshes(spark, src_mat):
+    """A tier state written with ``vmean`` stored (the earlier at-rest
+    format) reads, reads in real time and refreshes to the same rows as a
+    fresh build; after the refresh the tier mixes files of both formats."""
+    import pyarrow.parquet as pq
+
+    src, mat = src_mat
+    d1 = _turns(spark, ["a", "b", "c"], n=300, gap=700)  # about 2.4 days
+    src.append(d1)
+    mat.refresh(spark)
+    for t in R.TIER_ORDER:
+        tbl = mat.tiers[t]
+        stored = mat.read_tier(spark, t)
+        assert "vmean" in stored.columns
+        tbl.overwrite(_ranged(stored, 4), properties=tbl.properties())
+        man = tbl.snapshot(tbl.current_snapshot_id())
+        assert all("vmean" in pq.ParquetFile(os.path.join(tbl.path, f["path"]))
+                   .schema_arrow.names for f in man["files"]), t
+    _assert_tiers_equal(mat, spark, d1, "stored vmean")
+
+    # a continuation on the last day only: earlier day files are reused
+    d2 = _turns(spark, ["c"], t0=1_600_000_000 + 300 * 700, n=20, gap=60,
+                idx0=300)
+    src.append(d2)
+    full = R.build_all_tiers(R.with_latency(d1.unionByName(d2).drop("text")))
+    for t in R.TIER_ORDER:
+        a, b = _norm(mat.read_realtime(spark, t)), _norm(full[t])
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
+    mat.refresh(spark)
+    _assert_tiers_equal(mat, spark, d1.unionByName(d2), "mixed formats")
+    tbl = mat.tiers["1m"]
+    man = tbl.snapshot(tbl.current_snapshot_id())
+    has_mean = {"vmean" in pq.ParquetFile(os.path.join(tbl.path, f["path"]))
+                .schema_arrow.names for f in man["files"]}
+    assert has_mean == {True, False}

@@ -32,6 +32,10 @@ SHAPES = {
     "q_semantic_dedup": (3, 1),
     "q_transcript_rollup_1m": (2, 1),
     "q_tier_compressed_read": (0, 1),
+    "q_corpus_curation": (4, 5),
+    "q_priority_sample": (2, 2),
+    "q_lsh_near_dups": (10, 8),
+    "q_duplicate_spans": (2, 2),
 }
 
 

@@ -347,9 +347,11 @@ class MaterializedTiers:
                 return None
             return max(1, min(days, int(rows_ub)))
 
+        # vmean is derived on read (read_tier), never stored
         if tbl.current_snapshot_id() is None:
             sid = tbl.append(
-                _ranged(inc_tier, _parts(_days(min_ts, max_ts), in_rows)),
+                _ranged(inc_tier.drop("vmean"),
+                        _parts(_days(min_ts, max_ts), in_rows)),
                 properties=props,
             )
             reused = overlap = []
@@ -378,12 +380,12 @@ class MaterializedTiers:
                     if f["min_ts"] is not None:
                         lo_all = f["min_ts"] if lo_all is None else min(lo_all, f["min_ts"])
                         hi_all = f["max_ts"] if hi_all is None else max(hi_all, f["max_ts"])
-            slice_df = tbl._read_files(
+            slice_df = R.with_mean(tbl._read_files(
                 spark, [os.path.join(tbl.path, p) for p in overlap], cur["schema"]
-            )
+            ))
             merged = R.merge_tier(slice_df, inc_tier)
             sid = tbl.replace_files(
-                _ranged(merged,
+                _ranged(merged.drop("vmean"),
                         _parts(_days(lo_all, hi_all), slice_rows + in_rows)),
                 overlap, properties=props)
         man = tbl.snapshot(sid)
@@ -474,15 +476,19 @@ class MaterializedTiers:
     def read_tier(self, spark: SparkSession, tier: str,
                   lo: int | None = None, hi: int | None = None) -> DataFrame:
         """Materialized tier rows; lo/hi (epoch seconds on the bucket) prune
-        files manifest-side before the residual filter."""
-        return self.tiers[tier].read(spark, lo=lo, hi=hi)
+        files manifest-side before the residual filter.  ``vmean`` is not
+        stored: it is derived here from ``vsum``/``cnt_lat``
+        (:func:`rollup.with_mean`), which also replaces the stored copy in
+        files written before it was dropped."""
+        return R.with_mean(self.tiers[tier].read(spark, lo=lo, hi=hi))
 
     # ------------- Gorilla block-column tier storage (VERDICT r04 task 4)
 
     #: numeric tier plane carried by the block store; role/tool dist maps
     #: stay in the parquet row store (Gorilla XOR is a float-stream codec;
-    #: the maps are already dictionary-encoded well by parquet)
-    BLOCK_VALUE_COLS = ("cnt", "cnt_lat", "vmin", "vmax", "vsum", "vmean")
+    #: the maps are already dictionary-encoded well by parquet), and vmean
+    #: is derived on read like the row store's
+    BLOCK_VALUE_COLS = ("cnt", "cnt_lat", "vmin", "vmax", "vsum")
 
     def block_table(self, tier: str) -> SnapshotTable:
         """Snapshot table holding the tier's Gorilla block rows, one block
@@ -562,8 +568,8 @@ class MaterializedTiers:
             "conv_id", F.lit(tier).alias("tier"), "bucket",
             F.col("cnt").cast("long").alias("cnt"),
             F.col("cnt_lat").cast("long").alias("cnt_lat"),
-            "vmin", "vmax", "vsum", "vmean",
-        )
+            "vmin", "vmax", "vsum",
+        ).withColumn("vmean", R.mean_col())
 
     def read_realtime(self, spark: SparkSession, tier: str,
                       lo: int | None = None, hi: int | None = None) -> DataFrame:

@@ -21,6 +21,24 @@ from pyspark.sql import functions as F
 
 TIERS = {"1m": 60, "1h": 3600, "1d": 86400}
 TIER_ORDER = ["1m", "1h", "1d"]
+#: columns of every tier frame, in order
+TIER_COLS = ("conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax",
+             "vsum", "vmean", "role_dist", "tool_dist")
+
+
+def mean_col():
+    """The one mean expression, ``vsum / nullif(cnt_lat, 0)``: every
+    producer of ``vmean`` (rollups, :func:`merge_tier`, the tier read
+    paths, the skew rollup) derives it here, so a stored and a derived
+    ``vmean`` are bit-identical."""
+    return F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0))
+
+
+def with_mean(tier_rows: DataFrame) -> DataFrame:
+    """Tier rows with ``vmean`` (re)derived from ``vsum``/``cnt_lat``, in
+    :data:`TIER_COLS` order.  ``withColumn`` replaces a stored ``vmean``,
+    so rows written with or without one read the same."""
+    return tier_rows.withColumn("vmean", mean_col()).select(*TIER_COLS)
 
 
 def with_latency(transcripts: DataFrame) -> DataFrame:
@@ -194,14 +212,7 @@ def rollup_raw_to_tier(
         "tool_dist",
         _assemble_map(tool_vocab, "_t") if tool_vocab is not None else _count_map("_tools"),
     )
-    out = (
-        out.withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
-        .withColumn("tier", F.lit(tier))
-    )
-    return out.select(
-        "conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax", "vsum",
-        "vmean", "role_dist", "tool_dist",
-    )
+    return with_mean(out.withColumn("tier", F.lit(tier)))
 
 
 def reaggregate(
@@ -262,14 +273,8 @@ def reaggregate(
         if tool_vocab is not None
         else _merge_maps("_tool_maps"),
     )
-    out = (
-        out.withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
-        .withColumn("tier", F.lit(tier))
-        .withColumnRenamed("bucket2", "bucket")
-    )
-    return out.select(
-        "conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax", "vsum",
-        "vmean", "role_dist", "tool_dist",
+    return with_mean(
+        out.withColumn("tier", F.lit(tier)).withColumnRenamed("bucket2", "bucket")
     )
 
 
@@ -306,12 +311,8 @@ def merge_tier(*tiers: DataFrame) -> DataFrame:
         )
         .withColumn("role_dist", _merge_maps("_role_maps"))
         .withColumn("tool_dist", _merge_maps("_tool_maps"))
-        .withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
     )
-    return out.select(
-        "conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax", "vsum",
-        "vmean", "role_dist", "tool_dist",
-    )
+    return with_mean(out)
 
 
 def build_all_tiers(

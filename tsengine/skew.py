@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsengine.operators.rollup import mean_col
+
 
 def add_salt(df: DataFrame, key: str = "conv_id", buckets: int = 16,
              salt_col: str = "_salt", by: str = "turn_idx") -> DataFrame:
@@ -58,5 +60,5 @@ def salted_rollup(turns: DataFrame, width: int, buckets: int = 16) -> DataFrame:
         F.max("vmax").alias("vmax"),
         F.sum("vsum").alias("vsum"),
     )
-    return final.withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
+    return final.withColumn("vmean", mean_col())
 

@@ -227,12 +227,15 @@ class SnapshotTable:
         out_dir = os.path.join(self.data_dir, commit_id)
         # Spark's default INT96 parquet timestamps carry no min/max footer
         # stats, which would blind manifest pruning — write INT64 micros.
+        # Every engine table is zstd-compressed, set here as a write option
+        # so the caller's own writes keep their session codec.
         spark = df.sparkSession
         key = "spark.sql.parquet.outputTimestampType"
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "TIMESTAMP_MICROS")
         try:
-            df.write.mode("errorifexists").parquet(out_dir)
+            (df.write.mode("errorifexists").option("compression", "zstd")
+             .parquet(out_dir))
         finally:
             if prev is None:
                 spark.conf.unset(key)
