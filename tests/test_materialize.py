@@ -590,17 +590,18 @@ def test_refresh_conf_scoped_to_engine_session(spark, src_mat, tmp_path):
 
 
 def test_tier_block_store_roundtrip_and_pruning(spark, src_mat):
-    """Gorilla block-column tier storage (VERDICT r04 task 4): freezing a
-    tier re-encodes its numeric plane as per-(conv, day) block rows, and
-    read_tier_compressed decodes IN-PLAN to exactly the row store's values;
-    day-bounded reads stay equal under manifest pruning; a stale block
-    store (tier advanced after freeze) is rejected."""
+    """Each tier is stored once: read_tier_compressed is the numeric plane
+    of read_tier (its columns minus the dist maps), unbounded and under
+    day bounds, and freeze_tier_blocks reports the row store's own
+    manifest counts."""
     src, mat = src_mat
     d1 = _turns(spark, ["a", "b", "c"], n=400, gap=700)  # spans several days
     src.append(d1)
     mat.refresh(spark)
     stats = mat.freeze_tier_blocks(spark, "1h")
-    assert stats["points"] > 0 and stats["bytes"] > 0
+    man = mat.tiers["1h"].snapshot(mat.tiers["1h"].current_snapshot_id())
+    assert stats["points"] == sum(f["rows"] for f in man["files"]) > 0
+    assert stats["bytes"] == sum(f["bytes"] for f in man["files"]) > 0
 
     cols = ["conv_id", "tier", "bucket", "cnt", "cnt_lat",
             "vmin", "vmax", "vsum", "vmean"]
@@ -614,20 +615,30 @@ def test_tier_block_store_roundtrip_and_pruning(spark, src_mat):
     hi = lo + 2 * 86400 - 1
     exp_b = mat.read_tier(spark, "1h", lo=lo, hi=hi).select(*cols)
     got_b = mat.read_tier_compressed(spark, "1h", lo=lo, hi=hi)
+    assert 0 < got_b.count() < got.count()
     assert got_b.exceptAll(exp_b).count() == 0 and exp_b.exceptAll(got_b).count() == 0
 
-    # staleness contract: advancing the tier invalidates the frozen blocks
-    src.append(_turns(spark, ["later"], n=20, idx0=0))
+
+def test_state_dir_holds_only_manifest_listed_files(spark, src_mat):
+    """Freezing the 1m and 1h tiers writes no second copy: after a refresh
+    and both freezes, every parquet file under the state directory is
+    listed in the current manifest of a tier or of conv state."""
+    import glob
+
+    src, mat = src_mat
+    src.append(_turns(spark, ["a", "b", "c"], n=200, gap=700))
     mat.refresh(spark)
-    with pytest.raises(ValueError, match="freeze_tier_blocks"):
-        mat.read_tier_compressed(spark, "1h")
-    # explicit opt-in still reads the frozen snapshot
-    assert mat.read_tier_compressed(spark, "1h", allow_stale=True).count() > 0
-    # re-freeze reconciles
-    mat.freeze_tier_blocks(spark, "1h")
-    exp2 = mat.read_tier(spark, "1h").select(*cols)
-    got2 = mat.read_tier_compressed(spark, "1h")
-    assert got2.exceptAll(exp2).count() == 0 and exp2.exceptAll(got2).count() == 0
+    for t in ("1m", "1h"):
+        mat.freeze_tier_blocks(spark, t)
+
+    listed = set()
+    for tbl in [*mat.tiers.values(), mat.convstate]:
+        man = tbl.snapshot(tbl.current_snapshot_id())
+        listed |= {os.path.normpath(os.path.join(tbl.path, f["path"]))
+                   for f in man["files"]}
+    on_disk = {os.path.normpath(f) for f in glob.glob(
+        os.path.join(mat.state_dir, "**", "*.parquet"), recursive=True)}
+    assert on_disk and on_disk <= listed, sorted(on_disk - listed)[:3]
 
 
 def _footers(root):
@@ -649,10 +660,9 @@ def _footers(root):
 
 
 def test_at_rest_format_zstd_and_no_stored_mean(spark, src_mat):
-    """Every engine table file (source, tiers, conv state, tier blocks) is
+    """Every engine table file (source, tiers, conv state) is
     zstd-compressed, and each tier value is stored once: no tier file
-    holds ``vmean`` and no block file holds its stream — the read paths
-    still return it."""
+    holds ``vmean`` — the read paths still return it."""
     src, mat = src_mat
     src.append(_turns(spark, ["a", "b"], n=200, gap=700))
     mat.refresh(spark)
@@ -661,8 +671,7 @@ def test_at_rest_format_zstd_and_no_stored_mean(spark, src_mat):
     mat.refresh(spark)  # a replace_files commit next to the first append
     mat.freeze_tier_blocks(spark, "1h")
 
-    tables = {"source": src.path, "convstate": mat.convstate.path,
-              "blocks": mat.block_table("1h").path}
+    tables = {"source": src.path, "convstate": mat.convstate.path}
     tables.update({t: mat.tiers[t].path for t in R.TIER_ORDER})
     for name, root in tables.items():
         files = _footers(root)
@@ -671,9 +680,6 @@ def test_at_rest_format_zstd_and_no_stored_mean(spark, src_mat):
             assert codecs == {"ZSTD"}, (name, f, codecs)
             if name in R.TIER_ORDER:
                 assert "vmean" not in cols, (name, f)
-            if name == "blocks":
-                assert not {"first_vmean", "blk_vmean"} & cols, (name, f)
-                assert "blk_vsum" in cols, (name, f)
     for t in R.TIER_ORDER:
         assert mat.read_tier(spark, t).columns == list(R.TIER_COLS)
     assert "vmean" in mat.read_tier_compressed(spark, "1h").columns

@@ -36,7 +36,7 @@ def test_repeated_page_compiles_nothing(spark):
 
 
 def test_repeated_dashboard_request_compiles_nothing(spark, tmp_path):
-    """The dashboard's request mix (four downsample widths, a Gorilla-decoded
+    """The dashboard's request mix (four downsample widths, a numeric-plane
     tier read, the three formula classes), asked twice with the same
     parameters: the second pass compiles no class."""
     from tests.test_materialize import _turns

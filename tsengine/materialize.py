@@ -482,94 +482,42 @@ class MaterializedTiers:
         files written before it was dropped."""
         return R.with_mean(self.tiers[tier].read(spark, lo=lo, hi=hi))
 
-    # ------------- Gorilla block-column tier storage (VERDICT r04 task 4)
-
-    #: numeric tier plane carried by the block store; role/tool dist maps
-    #: stay in the parquet row store (Gorilla XOR is a float-stream codec;
-    #: the maps are already dictionary-encoded well by parquet), and vmean
-    #: is derived on read like the row store's
-    BLOCK_VALUE_COLS = ("cnt", "cnt_lat", "vmin", "vmax", "vsum")
+    # ------------- the retired Gorilla tier block store's names
 
     def block_table(self, tier: str) -> SnapshotTable:
-        """Snapshot table holding the tier's Gorilla block rows, one block
-        per (conv_id, day); manifest stats index the day column, so
-        time-bounded compressed reads prune whole days of blocks."""
+        """The table the tier's Gorilla block rows were once frozen into.
+        No engine code writes to it now (each tier is stored once, as the
+        zstd row store); it stays only because the benchmark harness
+        (``perfbench/workloads.tier_bytes``) sums its bytes, which read 0."""
         return SnapshotTable(
             os.path.join(self.state_dir, f"tier={tier}-blocks"), ts_col="day"
         )
 
     def freeze_tier_blocks(self, spark: SparkSession, tier: str) -> dict:
-        """Re-encode the tier's numeric plane as Gorilla block columns —
-        the 100-TB storage form: per (conv_id, day) one row with a shared
-        delta-of-delta timestamp stream and one XOR stream per value
-        column, readable IN-PLAN via read_tier_compressed's mapInPandas
-        decode (no offline tool, no driver loop).
-
-        Freeze is a snapshot overwrite of the block table stamped with the
-        tier's source position, so staleness is detectable at read time.
-        Returns {"snapshot_id", "points", "bytes", "bytes_per_point"} —
-        points from the ROW store's manifest (action-free), bytes from the
-        block store's manifest."""
-        wspark = self._writer_session(spark)
-        num = [F.col(c).cast("double").alias(c) for c in self.BLOCK_VALUE_COLS]
-        rows = (
-            self.tiers[tier].read(wspark)
-            .select("conv_id", "bucket", *num)
-            .withColumn("day", (F.col("bucket") - F.col("bucket") % 86400).cast("long"))
-        )
-        from tsengine import compress as C
-
-        blocks = C.compress_table(
-            rows, group_cols=("conv_id", "day"), epoch_col="bucket",
-            value_cols=self.BLOCK_VALUE_COLS,
-        )
-        tbl = self.block_table(tier)
-        sid = tbl.overwrite(blocks, properties={_SRC_PROP: self._position(tier)})
-        man = tbl.snapshot(sid)
-        row_man = self.tiers[tier].snapshot(self.tiers[tier].current_snapshot_id())
-        points = sum(f["rows"] for f in row_man["files"])
-        nbytes = sum(f["bytes"] for f in man["files"])
+        """Writes nothing: the zstd row store is the tier's one at-rest copy,
+        so there is no second form to freeze.  Returns the row store's
+        {"snapshot_id", "points", "bytes", "bytes_per_point"} from its
+        manifest, with no Spark action."""
+        tbl = self.tiers[tier]
+        sid = tbl.current_snapshot_id()
+        files = [] if sid is None else tbl.snapshot(sid)["files"]
+        points = sum(f["rows"] for f in files)
+        nbytes = sum(f["bytes"] for f in files)
         return {
             "snapshot_id": sid, "points": points, "bytes": nbytes,
             "bytes_per_point": round(nbytes / max(points, 1), 3),
         }
 
     def read_tier_compressed(self, spark: SparkSession, tier: str,
-                             lo: int | None = None, hi: int | None = None,
-                             allow_stale: bool = False) -> DataFrame:
-        """Numeric tier plane decoded from the Gorilla block store, same
-        (conv_id, tier, bucket, cnt..vmean) shape as read_tier minus the
-        dist maps.  lo/hi prune blocks manifest-side on the day column
-        before the in-plan decode; the residual bucket filter lands AFTER
-        decompression (a block straddling the bound decodes whole, rows
-        outside the range are dropped).  Raises when the row tier has
-        advanced past the frozen position unless allow_stale=True."""
-        tbl = self.block_table(tier)
-        frozen = int(tbl.properties().get(_SRC_PROP, -1))
-        if not allow_stale and frozen != self._position(tier):
-            raise ValueError(
-                f"block store for tier {tier!r} is at source position "
-                f"{frozen} but the row tier is at {self._position(tier)}; "
-                "re-run freeze_tier_blocks (or pass allow_stale=True)"
-            )
-        dlo = None if lo is None else (lo // 86400) * 86400
-        blocks = tbl.read(spark, lo=dlo, hi=hi)
-        from tsengine import compress as C
-
-        out = C.decompress_table(
-            blocks, group_cols=("conv_id", "day"), epoch_col="bucket",
-            value_cols=self.BLOCK_VALUE_COLS,
+                             lo: int | None = None,
+                             hi: int | None = None) -> DataFrame:
+        """The tier's numeric plane: :meth:`read_tier` (same manifest
+        pruning on lo/hi) without the role/tool dist maps.  It reads the
+        one compressed copy, so it cannot go stale against the tier."""
+        return self.read_tier(spark, tier, lo=lo, hi=hi).select(
+            "conv_id", "tier", "bucket", "cnt", "cnt_lat",
+            "vmin", "vmax", "vsum", "vmean",
         )
-        if lo is not None:
-            out = out.filter(F.col("bucket") >= int(lo))
-        if hi is not None:
-            out = out.filter(F.col("bucket") <= int(hi))
-        return out.select(
-            "conv_id", F.lit(tier).alias("tier"), "bucket",
-            F.col("cnt").cast("long").alias("cnt"),
-            F.col("cnt_lat").cast("long").alias("cnt_lat"),
-            "vmin", "vmax", "vsum",
-        ).withColumn("vmean", R.mean_col())
 
     def read_realtime(self, spark: SparkSession, tier: str,
                       lo: int | None = None, hi: int | None = None) -> DataFrame:

@@ -339,19 +339,13 @@ FROM l GROUP BY 1, 2
 
 
 def q_tier_compressed_read(spark, sf_dir):
-    """Gorilla block-column tier storage read path (VERDICT r04 task 4):
-    after the shared incremental build, the 1h tier's numeric plane is
-    FROZEN into per-(conv, day) Gorilla block rows (shared delta-of-delta
-    timestamp stream + one XOR stream per value column) and read back
-    through the in-plan mapInPandas decoder.  The oracle rolls up the raw
-    events table directly, so a wrong block split, bit-packing defect, or
-    decode drift is a value mismatch — this proves the COMPRESSED form is
-    the readable storage form, not an offline artifact."""
+    """Numeric-plane read of the 1h tier's one at-rest copy (the zstd
+    parquet row store), after the shared incremental build: the tier's
+    rows without the role/tool dist maps, ``vmean`` derived on read.  The
+    oracle rolls up the raw events table directly, so a dropped or
+    mis-derived numeric column is a value mismatch."""
     q_materialized_tier_1h(spark, sf_dir)  # ensure the shared build exists
     mat = _memo[("mat1h", sf_dir)]
-    key = ("blocks1h", sf_dir)
-    if key not in _memo:
-        _memo[key] = mat.freeze_tier_blocks(spark, "1h")
     out = mat.read_tier_compressed(spark, "1h")
     z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
     return out.select(
@@ -363,7 +357,7 @@ def q_tier_compressed_read(spark, sf_dir):
 
 def _mat_sql_numeric(width: int) -> str:
     """Numeric-plane variant of _mat_sql (no role/tool pivots) for the
-    block-store read, which carries the latency plane only."""
+    numeric tier read, which carries the latency plane only."""
     return f"""
 WITH t AS (
   SELECT CAST(user_id AS VARCHAR) AS conv_id,

@@ -36,7 +36,7 @@ files whose [min_ts, max_ts] intersects the predicate, and the residual
 filter still runs in Spark for row-group/row-level exactness.
 
 This is the engine's one table format: appended transcripts, materialized
-tiers, conv state and Gorilla block stores are all SnapshotTables.  It
+tiers and conv state are all SnapshotTables.  It
 stands in for Iceberg without a catalog, and is deliberately single-table,
 optimistic-concurrency (CommitConflict on a lost race), and
 JSON-manifest-simple.
