@@ -24,7 +24,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the reference's `usage`
     rollup shape (inner_sum(split(increments(distribute(...)), period=day)),
     tf:1218-1223) over the events series."""
-    from tsengine.plans.driver_queries import q_usage_day
+    from driver_queries.series import q_usage_day
 
     return q_usage_day(spark, "/root/testdata/sf0.001")
 
@@ -73,7 +73,7 @@ _GATE_WINDOW = [
     "q_stream_ingest_1h",
     "q_snapshot_compact",
     "q_snapshot_incremental",
-    "q_tier_compressed_read",  # r05: Gorilla block-column tier read path
+    "q_tier_compressed_read",  # numeric-plane read of the one zstd tier store
     # --- dedup / similarity ---
     "q_dedup_clusters",
     "q_minhash",
@@ -110,28 +110,14 @@ def _ordered(mapping: dict) -> dict:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, plus the
     training-data pipeline ops (dedup / text / similarity / multimodal)."""
-    from tsengine.plans import (
-        driver_queries,
-        driver_queries_data,
-        driver_queries_snapshots,
-    )
+    from driver_queries import QUERIES
 
-    out = dict(driver_queries.QUERIES)
-    out.update(driver_queries_data.QUERIES)
-    out.update(driver_queries_snapshots.QUERIES)
-    return _ordered(out)
+    return _ordered(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB ANSI equivalents for each queries() entry (keys missing here
     get the driver's weaker rows-only check)."""
-    from tsengine.plans import (
-        driver_queries,
-        driver_queries_data,
-        driver_queries_snapshots,
-    )
+    from driver_queries import ORACLE
 
-    out = dict(driver_queries.ORACLE)
-    out.update(driver_queries_data.ORACLE)
-    out.update(driver_queries_snapshots.ORACLE)
-    return _ordered(out)
+    return _ordered(ORACLE)

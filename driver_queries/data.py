@@ -9,6 +9,7 @@ DuckDB CAST('0x'||substr(md5(x),1,15) AS BIGINT) — verified.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from tsengine.operators import dedup, multimodal, similarity, textops
@@ -25,6 +26,12 @@ def _docs(spark, sf_dir):
 
 def _emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def _vectors(spark, sf_dir):
+    return _emb(spark, sf_dir).withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -205,9 +212,7 @@ def q_semantic_dedup(spark, sf_dir):
     """SemDeDup over the embeddings table with the deterministic literal
     codebook: cell assignment, in-cell cosine pairs and the connected-
     components closure are all mirrored exactly in the DuckDB oracle."""
-    emb = _emb(spark, sf_dir).withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _vectors(spark, sf_dir)
     cents = similarity.fixed_centroids(SEMDEDUP_CELLS, 64, seed=7)
     out = dedup.semantic_dedup(emb, cents, threshold=SEMDEDUP_THRESHOLD)
     return out.select(
@@ -216,17 +221,13 @@ def q_semantic_dedup(spark, sf_dir):
 
 
 def q_knn_bruteforce(spark, sf_dir):
-    emb = _emb(spark, sf_dir).withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _vectors(spark, sf_dir)
     qv = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     return similarity.cosine_topk_bruteforce(emb, qv, k=25)
 
 
 def q_embedding_near_dups(spark, sf_dir):
-    emb = _emb(spark, sf_dir).withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _vectors(spark, sf_dir)
     return dedup.embedding_near_dups(emb, threshold=0.5, planes=6)
 
 
@@ -255,9 +256,7 @@ def q_ann_join(spark, sf_dir):
     (vec_id % 50 == 0) in one plan — shared literal codebook, per-query
     nprobe cell expansion, broadcast probe join, rank window.  DuckDB
     mirror recomputes assignment, probes, cosine and rank identically."""
-    emb = _emb(spark, sf_dir).withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.where(F.col("vec_id") % ANN_MOD == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -276,9 +275,7 @@ def q_knn_ivf(spark, sf_dir):
     and cosine scoring are all mirrored exactly in the DuckDB oracle.  The
     k-means-trained codebook path stays pytest-covered
     (tests/test_dataops.py::test_ivf_matches_bruteforce_on_probed_cells)."""
-    emb = _emb(spark, sf_dir).withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
+    emb = _vectors(spark, sf_dir)
     qv = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     cents = similarity.fixed_centroids(IVF_CELLS, 64, seed=7)
     return similarity.ivf_topk(emb, qv, cents, k=IVF_K, nprobe=IVF_NPROBE)
@@ -300,26 +297,83 @@ ROLE_VOCAB = ["click", "error", "purchase", "signup", "view"]
 TOOL_VOCAB = ["big", "small"]
 
 
-def project_tier(out):
-    """Common driver projection of a tier frame: pivoted role/tool dist
-    counts + 6dp-rounded value plane, encoding-proof for the value-hash
-    compare.  Buckets whose only turn is a conversation's first have no
-    latency: min/max/sum/mean are NULL, coalesced to 0.0 on BOTH sides
-    (cnt_lat=0 marks them) so the value-hash never mixes None/NaN
-    encodings."""
-    dist = [
-        F.coalesce(F.element_at(F.col("role_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"r_{v}")
-        for v in ROLE_VOCAB
-    ] + [
-        F.coalesce(F.element_at(F.col("tool_dist"), F.lit(v)), F.lit(0).cast("long")).alias(f"t_{v}")
-        for v in TOOL_VOCAB
+# (map column, output prefix, vocabulary) of the tiers' count columns
+_DISTS = (("role", "r", ROLE_VOCAB), ("tool", "t", TOOL_VOCAB))
+
+
+def project_tier(out, dists=True):
+    """Common driver projection of a tier frame: the 6dp-rounded value
+    plane and, with ``dists``, the role/tool dist maps pivoted to count
+    columns, encoding-proof for the value-hash compare.  Buckets whose only
+    turn is a conversation's first have no latency: min/max/sum/mean are
+    NULL, coalesced to 0.0 on BOTH sides (cnt_lat=0 marks them) so the
+    value-hash never mixes None/NaN encodings.  Oracle: tier_sql."""
+    plane = [
+        F.coalesce(F.round(c, 6), F.lit(0.0)).alias(c)
+        for c in ("vmin", "vmax", "vsum", "vmean")
     ]
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-        *dist,
+    counts = [
+        F.coalesce(F.element_at(F.col(f"{k}_dist"), F.lit(v)), F.lit(0).cast("long"))
+        .alias(f"{p}_{v}")
+        for k, p, vocab in _DISTS for v in vocab
+    ] if dists else []
+    return out.select("conv_id", "bucket", "cnt", "cnt_lat", *plane, *counts)
+
+
+def tier_sql(width, dists=True):
+    """DuckDB mirror of project_tier over the ``width``-second tier rolled
+    up straight from the events-derived ``transcripts``."""
+    src = cols = counts = ""
+    if dists:
+        src = """
+         event_type AS role,
+         CASE WHEN value >= 50 THEN 'big' ELSE 'small' END AS tool,"""
+        cols = " role, tool,"
+        counts = "".join(
+            f",\n       CAST(sum(CASE WHEN {k} = '{v}' THEN 1 ELSE 0 END) AS BIGINT) AS {p}_{v}"
+            for k, p, vocab in _DISTS for v in vocab
+        )
+    return f"""
+WITH t AS (
+  SELECT CAST(user_id AS VARCHAR) AS conv_id,
+         CAST(floor(epoch(ts)) AS BIGINT) AS epoch,{src}
+         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS turn_idx
+  FROM events),
+l AS (
+  SELECT conv_id, epoch,{cols}
+         CAST(epoch - lag(epoch) OVER (PARTITION BY conv_id ORDER BY turn_idx)
+              AS DOUBLE) AS value
+  FROM t)
+SELECT conv_id, {width}*(epoch//{width}) AS bucket,
+       count(*) AS cnt, count(value) AS cnt_lat,
+       coalesce(round(min(value), 6), 0.0) AS vmin,
+       coalesce(round(max(value), 6), 0.0) AS vmax,
+       coalesce(round(sum(value), 6), 0.0) AS vsum,
+       coalesce(round(avg(value), 6), 0.0) AS vmean{counts}
+FROM l GROUP BY 1, 2
+"""
+
+
+def _turns(spark, sf_dir, *cols):
+    """The events table as transcripts: conv_id = user_id, turns numbered
+    by (ts, event_id), plus ``cols`` over each event row."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        F.row_number().over(w).alias("turn_idx"),
+        *cols,
+    )
+
+
+def transcripts(spark, sf_dir):
+    """The tier source: role = event_type, tool = big/small by value, empty
+    text; the shape tier_sql mirrors."""
+    return _turns(
+        spark, sf_dir,
+        F.col("event_type").alias("role"),
+        F.lit("").alias("text"),
+        F.when(F.col("value") >= 50, "big").otherwise("small").alias("tool"),
+        F.col("ts").cast("timestamp").alias("ts"),
     )
 
 
@@ -330,22 +384,11 @@ def q_transcript_rollup_1m(spark, sf_dir):
     and the role/tool distribution maps are flattened to per-key count
     columns so the DuckDB oracle can pin them.  The synthetic-transcripts
     variant stays bit-for-bit pinned in tests/test_rollup.py."""
-    from pyspark.sql import Window
-
     from tsengine.operators import rollup as R
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.lit("").alias("text"),
-        F.when(F.col("value") >= 50, "big").otherwise("small").alias("tool"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
     return project_tier(R.rollup_raw_to_tier(
-        R.with_latency(t), "1m", role_vocab=ROLE_VOCAB, tool_vocab=TOOL_VOCAB
+        R.with_latency(transcripts(spark, sf_dir)), "1m",
+        role_vocab=ROLE_VOCAB, tool_vocab=TOOL_VOCAB,
     ))
 
 
@@ -354,25 +397,12 @@ def q_salted_rollup_1m(spark, sf_dir):
     EXACTLY the rows of the direct rollup (count/min/max/sum compose across
     salt buckets), so it shares q_transcript_rollup_1m's numeric-plane
     oracle verbatim."""
-    from pyspark.sql import Window
-
     from tsengine import skew
     from tsengine.operators import rollup as R
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
+    t = _turns(spark, sf_dir, F.col("ts").cast("timestamp").alias("ts"))
     out = skew.salted_rollup(R.with_latency(t), width=60, buckets=8)
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-    )
+    return project_tier(out, dists=False)
 
 
 def _typed_events(spark, sf_dir):
@@ -631,8 +661,6 @@ def q_corpus_curation(spark, sf_dir):
     already-oracle-checked operator; this query proves they compose (and
     Catalyst plans the whole chain together).  The DuckDB oracle chains
     the same four mirrors."""
-    from pyspark.sql import Window
-
     from tsengine.operators import sampling
     from tsengine.operators.textops import contamination_check
 
@@ -680,8 +708,6 @@ def q_dup_rate_by_source(spark, sf_dir):
     which sources get the expensive near-dup pass: exact-fingerprint
     canonical per doc (min doc id per fp), then per-source doc counts,
     canonical counts and dup fraction.  DuckDB window/group mirror."""
-    from pyspark.sql import Window
-
     docs = _docs(spark, sf_dir)
     fp = textops.fingerprint(docs).select("doc_id", "fp_md5")
     canon = fp.withColumn(
@@ -791,21 +817,15 @@ def q_conversation_stats(spark, sf_dir):
     turn counts, role-alternation violations, latency plane, tool fraction,
     text payload — every column value-checked against the DuckDB window
     mirror."""
-    from pyspark.sql import Window
-
     from tsengine.operators import rollup as R
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
+    return R.conversation_stats(_turns(
+        spark, sf_dir,
         F.col("event_type").alias("role"),
         F.concat(F.lit("turn-"), F.col("event_id").cast("string")).alias("text"),
         F.when(F.col("value") >= 50, "big").otherwise("").alias("tool"),
         F.col("ts").cast("timestamp").alias("ts"),
-    )
-    return R.conversation_stats(t)
+    ))
 
 
 def q_latency_transitions(spark, sf_dir):
@@ -814,19 +834,13 @@ def q_latency_transitions(spark, sf_dir):
     response time, assistant->user is think time; blending them is the
     classic latency-metric mistake.  DuckDB lag-window + quantile_cont
     mirror."""
-    from pyspark.sql import Window
-
     from tsengine.operators import rollup as R
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
+    return R.latency_by_transition(_turns(
+        spark, sf_dir,
         F.col("event_type").alias("role"),
         F.col("ts").cast("timestamp").alias("ts"),
-    )
-    return R.latency_by_transition(t)
+    ))
 
 
 HOLT_A, HOLT_B = 0.3, 0.1
@@ -2214,15 +2228,10 @@ def q_dedup_turns(spark, sf_dir):
     cleaner.  Text is bucketed (event_type + value quartile) so real
     consecutive duplicates exist in the data; DuckDB mirrors the lag
     compare + re-rank exactly."""
-    from pyspark.sql import Window
-
     from tsengine.operators import convops
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
+    t = _turns(
+        spark, sf_dir,
         F.col("event_type").alias("role"),
         F.concat_ws(
             "-", F.col("event_type"),
@@ -2262,15 +2271,10 @@ def q_truncate_context(spark, sf_dir):
     (pin_first=1) plus the longest turn SUFFIX whose estimated token count
     fits a 64-token budget — one descending running sum per conversation.
     DuckDB mirrors the token estimate, the reverse cumsum and the re-rank."""
-    from pyspark.sql import Window
-
     from tsengine.operators import convops
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
+    t = _turns(
+        spark, sf_dir,
         F.col("event_type").alias("role"),
         F.concat(F.lit("turn-"), F.col("event_id").cast("string")).alias("text"),
     )
@@ -2312,15 +2316,10 @@ def q_conv_forks(spark, sf_dir):
     the cell split, the pair join, the max-depth collapse and the marker
     rows bit-for-bit; NULL marker fields are encoded as '~template~'/-1 in
     both engines (the comparison layer has no NULL-int convention)."""
-    from pyspark.sql import Window
-
     from tsengine.operators import convops
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
+    t = _turns(
+        spark, sf_dir,
         F.col("event_type").alias("role"),
         F.col("event_type").alias("text"),
     )
@@ -2400,13 +2399,8 @@ def _tool_transcripts(spark, sf_dir):
     """Events -> transcript shape with a sparse tool column: a turn is a
     tool CALL when value >= 50 (deterministic, ~half the turns), tool name
     = event_type.  Shared by q_tool_transitions / q_tool_loops."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
+    return _turns(
+        spark, sf_dir,
         F.when(F.col("value") >= 50, F.col("event_type")).alias("tool"),
         # events.parquet carries TIMESTAMP_NTZ; normalize so ts.cast(long)
         # inside the operator resolves (session tz is UTC repo-wide)
@@ -2610,15 +2604,21 @@ WHERE round(list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm), 6) >= 0.5
 ORACLE["q_embedding_near_dups"] = _near_dup_sql()
 
 
+def _codebook_rows(cells: int) -> str:
+    """similarity.fixed_centroids(cells, 64, seed=7) as (cell, DOUBLE[])
+    VALUES rows: the literal codebook every IVF/SemDeDup oracle mirrors."""
+    cents = similarity.fixed_centroids(cells, 64, seed=7)
+    return ",\n    ".join(
+        f"({i}, CAST([{', '.join(repr(x) for x in c)}] AS DOUBLE[]))"
+        for i, c in enumerate(cents)
+    )
+
+
 def _semantic_dedup_sql() -> str:
     """Mirror of q_semantic_dedup: literal codebook cells (argmin L2, ties
     to the lowest cell — ORDER BY dist, cell == the engine's strict-< chain),
     in-cell cosine pairs >= threshold, recursive-CTE transitive closure."""
-    cents = similarity.fixed_centroids(SEMDEDUP_CELLS, 64, seed=7)
-    rows = ",\n    ".join(
-        f"({i}, CAST([{', '.join(repr(x) for x in c)}] AS DOUBLE[]))"
-        for i, c in enumerate(cents)
-    )
+    rows = _codebook_rows(SEMDEDUP_CELLS)
     return f"""
 WITH RECURSIVE cents(cell, c) AS (VALUES
     {rows}),
@@ -2646,29 +2646,7 @@ FROM embeddings em LEFT JOIN comp c USING (vec_id)
 
 ORACLE["q_semantic_dedup"] = _semantic_dedup_sql()
 
-ORACLE["q_transcript_rollup_1m"] = f"""
-WITH t AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS epoch,
-         event_type AS role,
-         CASE WHEN value >= 50 THEN 'big' ELSE 'small' END AS tool,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS turn_idx
-  FROM events),
-l AS (
-  SELECT conv_id, epoch, role, tool,
-         CAST(epoch - lag(epoch) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-              AS DOUBLE) AS value
-  FROM t)
-SELECT conv_id, 60*(epoch//60) AS bucket,
-       count(*) AS cnt, count(value) AS cnt_lat,
-       coalesce(round(min(value), 6), 0.0) AS vmin,
-       coalesce(round(max(value), 6), 0.0) AS vmax,
-       coalesce(round(sum(value), 6), 0.0) AS vsum,
-       coalesce(round(avg(value), 6), 0.0) AS vmean,
-       {", ".join(f"CAST(sum(CASE WHEN role = '{v}' THEN 1 ELSE 0 END) AS BIGINT) AS r_{v}" for v in ROLE_VOCAB)},
-       {", ".join(f"CAST(sum(CASE WHEN tool = '{v}' THEN 1 ELSE 0 END) AS BIGINT) AS t_{v}" for v in TOOL_VOCAB)}
-FROM l GROUP BY 1, 2
-"""
+ORACLE["q_transcript_rollup_1m"] = tier_sql(60)
 
 
 def _ivf_sql() -> str:
@@ -2676,11 +2654,7 @@ def _ivf_sql() -> str:
     assignment = argmin squared-L2 with ties to the lowest cell (strict-<
     chain in ivf_assign == ORDER BY dist, cell LIMIT 1 here); nprobe cells
     ranked by distance-to-query the same way."""
-    cents = similarity.fixed_centroids(IVF_CELLS, 64, seed=7)
-    rows = ",\n    ".join(
-        f"({i}, CAST([{', '.join(repr(x) for x in c)}] AS DOUBLE[]))"
-        for i, c in enumerate(cents)
-    )
+    rows = _codebook_rows(IVF_CELLS)
     return f"""
 WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings ORDER BY vec_id LIMIT 1),
 cents(cell, c) AS (VALUES
@@ -2704,11 +2678,7 @@ ORACLE["q_knn_ivf"] = _ivf_sql()
 
 
 def _ann_join_sql() -> str:
-    cents = similarity.fixed_centroids(IVF_CELLS, 64, seed=7)
-    rows = ",\n    ".join(
-        f"({i}, CAST([{', '.join(repr(x) for x in c)}] AS DOUBLE[]))"
-        for i, c in enumerate(cents)
-    )
+    rows = _codebook_rows(IVF_CELLS)
     return f"""
 WITH cents(cell, c) AS (VALUES
     {rows}),
@@ -2741,28 +2711,9 @@ FROM r WHERE rank <= {ANN_K}
 
 ORACLE["q_ann_join"] = _ann_join_sql()
 
-# salted two-phase rollup == direct rollup: same numeric-plane oracle as
-# q_transcript_rollup_1m (role/tool dropped — the salted query carries only
-# the latency plane)
-ORACLE["q_salted_rollup_1m"] = """
-WITH t AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS epoch,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS turn_idx
-  FROM events),
-l AS (
-  SELECT conv_id, epoch,
-         CAST(epoch - lag(epoch) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-              AS DOUBLE) AS value
-  FROM t)
-SELECT conv_id, 60*(epoch//60) AS bucket,
-       count(*) AS cnt, count(value) AS cnt_lat,
-       coalesce(round(min(value), 6), 0.0) AS vmin,
-       coalesce(round(max(value), 6), 0.0) AS vmax,
-       coalesce(round(sum(value), 6), 0.0) AS vsum,
-       coalesce(round(avg(value), 6), 0.0) AS vmean
-FROM l GROUP BY 1, 2
-"""
+# salted two-phase rollup == direct rollup: the numeric-plane oracle of
+# q_transcript_rollup_1m (the salted query carries only the latency plane)
+ORACLE["q_salted_rollup_1m"] = tier_sql(60, dists=False)
 
 
 def _image_features_sql() -> str:

@@ -72,6 +72,34 @@ dist AS (SELECT series_id, epoch,
 """
 
 
+def _api_grid_cte(lo: int, hi: int, anchor: bool = False) -> str:
+    """API_SERIES's points in the closed window [lo, hi], LOCF+bfill onto the
+    hourly grid over exactly [lo, hi] (both on-grid: tf:284-291 rounding
+    degenerates to the closed range).  ``anchor`` adds the single last point
+    before the window, which pads the leading grid points (E2)."""
+    if anchor:
+        pts = f"""base AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS epoch, value FROM events
+              WHERE user_id = {API_SERIES}),
+win AS (SELECT * FROM base WHERE epoch >= {lo} AND epoch <= {hi}),
+pre AS (SELECT * FROM base WHERE epoch < {lo} ORDER BY epoch DESC LIMIT 1),
+pts AS (SELECT * FROM win UNION ALL SELECT * FROM pre)"""
+    else:
+        pts = f"""pts AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS epoch, value FROM events
+             WHERE user_id = {API_SERIES} AND floor(epoch(ts)) >= {lo}
+               AND floor(epoch(ts)) <= {hi})"""
+    return f"""{pts},
+grid AS (SELECT unnest(generate_series({lo}, {hi}, 3600)) AS epoch,
+                CAST(NULL AS DOUBLE) AS value, 1 AS g),
+u AS (SELECT epoch, value, 0 AS g FROM pts UNION ALL SELECT * FROM grid),
+padded AS (SELECT epoch, g,
+    last_value(value IGNORE NULLS) OVER (ORDER BY epoch, g
+        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pad FROM u),
+dist AS (SELECT epoch,
+    first_value(pad IGNORE NULLS) OVER (ORDER BY epoch
+        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value
+    FROM padded WHERE g = 1)"""
+
+
 def _bucket_sql(epoch_expr: str, period: str, tz: str = "Europe/Madrid") -> str:
     """Calendar bucket with the minute-0 shift quirk (au:182-237) in DuckDB."""
     em = f"(60*(({epoch_expr})//60))"
@@ -190,31 +218,25 @@ def q_meter_total(spark, sf_dir):
     return _r6(incr.meter_increments_total(_cum_series(spark, sf_dir)))
 
 
-def q_count_state_change(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+def _event_types(spark, sf_dir):
+    """The events table as a categorical series: value = event_type."""
+    return spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("user_id").alias("series_id"),
         F.col("ts").cast("timestamp").cast("long").alias("epoch"),
         F.col("event_type").alias("value"),
     )
-    return agg.count_state_change(ev, "click", value_col="value")
+
+
+def q_count_state_change(spark, sf_dir):
+    return agg.count_state_change(_event_types(spark, sf_dir), "click", value_col="value")
 
 
 def q_clean_duplicated(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("user_id").alias("series_id"),
-        F.col("ts").cast("timestamp").cast("long").alias("epoch"),
-        F.col("event_type").alias("value"),
-    )
-    return arith.clean_duplicated(ev)
+    return arith.clean_duplicated(_event_types(spark, sf_dir))
 
 
 def q_delete_critical(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("user_id").alias("series_id"),
-        F.col("ts").cast("timestamp").cast("long").alias("epoch"),
-        F.col("event_type").alias("value"),
-    )
-    return arith.delete_critical_values(ev, "error")
+    return arith.delete_critical_values(_event_types(spark, sf_dir), "error")
 
 
 def q_histogram(spark, sf_dir):
@@ -406,24 +428,10 @@ def q_group_by_legacy(spark, sf_dir):
 
 ORACLE: dict[str, str] = {}
 
-# E1: epoch in [now-week, now], LOCF+bfill onto the hourly grid over exactly
-# [e_from=now-week, e_to=now] (both on-grid: tf:284-291 rounding degenerates
-# to the closed range), series re-keyed to 0
+# E1: the week window on the grid, series re-keyed to 0
 _GV_LO, _GV_HI = API_NOW - 604800, API_NOW
 ORACLE["q_get_variable"] = f"""
-WITH pts AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS epoch, value FROM events
-             WHERE user_id = {API_SERIES} AND floor(epoch(ts)) >= {_GV_LO}
-               AND floor(epoch(ts)) <= {_GV_HI}),
-grid AS (SELECT unnest(generate_series({_GV_LO}, {_GV_HI}, 3600)) AS epoch,
-                CAST(NULL AS DOUBLE) AS value, 1 AS g),
-u AS (SELECT epoch, value, 0 AS g FROM pts UNION ALL SELECT * FROM grid),
-padded AS (SELECT epoch, g,
-    last_value(value IGNORE NULLS) OVER (ORDER BY epoch, g
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pad FROM u),
-dist AS (SELECT epoch,
-    first_value(pad IGNORE NULLS) OVER (ORDER BY epoch
-        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value
-    FROM padded WHERE g = 1)
+WITH {_api_grid_cte(_GV_LO, _GV_HI)}
 SELECT CAST(0 AS BIGINT) AS series_id, epoch, round(value, 6) AS value
 FROM dist
 -- empty-series edge (reference semantics): no source points in range ->
@@ -432,25 +440,10 @@ FROM dist
 WHERE EXISTS (SELECT 1 FROM pts)
 """
 
-# E2: closed day window + the single pre-window anchor, hourly grid over
-# [now-day, now], LOCF (anchor pads the leading grid points), then lag-diff
+# E2: the anchored day window on the grid, then lag-diff
 _GI_LO, _GI_HI = API_NOW - 86400, API_NOW
 ORACLE["q_get_increments"] = f"""
-WITH base AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS epoch, value FROM events
-              WHERE user_id = {API_SERIES}),
-win AS (SELECT * FROM base WHERE epoch >= {_GI_LO} AND epoch <= {_GI_HI}),
-pre AS (SELECT * FROM base WHERE epoch < {_GI_LO} ORDER BY epoch DESC LIMIT 1),
-pts AS (SELECT * FROM win UNION ALL SELECT * FROM pre),
-grid AS (SELECT unnest(generate_series({_GI_LO}, {_GI_HI}, 3600)) AS epoch,
-                CAST(NULL AS DOUBLE) AS value, 1 AS g),
-u AS (SELECT epoch, value, 0 AS g FROM pts UNION ALL SELECT * FROM grid),
-padded AS (SELECT epoch, g,
-    last_value(value IGNORE NULLS) OVER (ORDER BY epoch, g
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pad FROM u),
-dist AS (SELECT epoch,
-    first_value(pad IGNORE NULLS) OVER (ORDER BY epoch
-        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value
-    FROM padded WHERE g = 1),
+WITH {_api_grid_cte(_GI_LO, _GI_HI, anchor=True)},
 inc AS (SELECT epoch, value,
     lag(value) OVER (ORDER BY epoch) AS prev FROM dist)
 SELECT CAST(0 AS BIGINT) AS series_id, epoch,
@@ -461,21 +454,7 @@ FROM inc WHERE prev IS NOT NULL
 # E3 via the Engine: the E2 pipeline over the closed week window, grouped
 # into Madrid calendar weeks, merged sum (series re-keyed to 0)
 ORACLE["q_engine_usage_week"] = f"""
-WITH base AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS epoch, value FROM events
-              WHERE user_id = {API_SERIES}),
-win AS (SELECT * FROM base WHERE epoch >= {_GV_LO} AND epoch <= {_GV_HI}),
-pre AS (SELECT * FROM base WHERE epoch < {_GV_LO} ORDER BY epoch DESC LIMIT 1),
-pts AS (SELECT * FROM win UNION ALL SELECT * FROM pre),
-grid AS (SELECT unnest(generate_series({_GV_LO}, {_GV_HI}, 3600)) AS epoch,
-                CAST(NULL AS DOUBLE) AS value, 1 AS g),
-u AS (SELECT epoch, value, 0 AS g FROM pts UNION ALL SELECT * FROM grid),
-padded AS (SELECT epoch, g,
-    last_value(value IGNORE NULLS) OVER (ORDER BY epoch, g
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pad FROM u),
-dist AS (SELECT epoch,
-    first_value(pad IGNORE NULLS) OVER (ORDER BY epoch
-        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value
-    FROM padded WHERE g = 1),
+WITH {_api_grid_cte(_GV_LO, _GV_HI, anchor=True)},
 inc AS (SELECT epoch, value,
     lag(value) OVER (ORDER BY epoch) AS prev FROM dist),
 inc2 AS (SELECT epoch,
@@ -489,19 +468,7 @@ FROM inc2 GROUP BY {_bucket_sql('epoch', 'week')}
 # U1: the E1 grid grouped into calendar days (minute-0 shift: every on-hour
 # grid epoch shifts back 60 s before the Madrid date_trunc), merged mean
 ORACLE["q_compound_formula"] = f"""
-WITH pts AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS epoch, value FROM events
-             WHERE user_id = {API_SERIES} AND floor(epoch(ts)) >= {_GV_LO}
-               AND floor(epoch(ts)) <= {_GV_HI}),
-grid AS (SELECT unnest(generate_series({_GV_LO}, {_GV_HI}, 3600)) AS epoch,
-                CAST(NULL AS DOUBLE) AS value, 1 AS g),
-u AS (SELECT epoch, value, 0 AS g FROM pts UNION ALL SELECT * FROM grid),
-padded AS (SELECT epoch, g,
-    last_value(value IGNORE NULLS) OVER (ORDER BY epoch, g
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pad FROM u),
-dist AS (SELECT epoch,
-    first_value(pad IGNORE NULLS) OVER (ORDER BY epoch
-        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value
-    FROM padded WHERE g = 1)
+WITH {_api_grid_cte(_GV_LO, _GV_HI)}
 SELECT CAST(0 AS BIGINT) AS series_id, max(epoch) AS epoch,
        round(avg(value), 6) AS value
 FROM dist

@@ -22,7 +22,9 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from tsengine.plans.driver_queries_data import ROLE_VOCAB, TOOL_VOCAB, project_tier
+from driver_queries.data import (
+    ROLE_VOCAB, TOOL_VOCAB, project_tier, tier_sql, transcripts,
+)
 
 # literal week boundaries inside the events table's fixed Jan-2024 range
 _CUT1 = "2024-01-08 00:00:00"
@@ -130,23 +132,6 @@ def q_snapshot_compact(spark, sf_dir):
     return _project(_memo[key].read(spark))
 
 
-def _transcripts(spark, sf_dir):
-    """The events-derived transcript frame (same mapping as
-    q_transcript_rollup_1m: conv=user, turns ordered by (ts, event_id))."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.row_number().over(w).alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.lit("").alias("text"),
-        F.when(F.col("value") >= 50, "big").otherwise("small").alias("tool"),
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-
-
 def q_materialized_tier_1h(spark, sf_dir):
     """End-to-end incremental continuous aggregate: transcripts land in a
     snapshot table in TWO appends that split every conversation mid-stream
@@ -163,7 +148,7 @@ def q_materialized_tier_1h(spark, sf_dir):
 
     key = ("mat1h", sf_dir)
     if key not in _memo:
-        t = _transcripts(spark, sf_dir)
+        t = transcripts(spark, sf_dir)
         root = tempfile.mkdtemp(prefix="tseng_mat_")
         src = SnapshotTable(os.path.join(root, "source"), ts_col="ts")
         mat = MaterializedTiers(
@@ -218,7 +203,7 @@ def q_stream_ingest_1h(spark, sf_dir):
 
     key = ("stream1h", sf_dir)
     if key not in _memo:
-        t = _transcripts(spark, sf_dir)
+        t = transcripts(spark, sf_dir)
         root = tempfile.mkdtemp(prefix="tseng_stream_")
         src_dir = os.path.join(root, "in")
         os.makedirs(src_dir)
@@ -260,7 +245,7 @@ def q_realtime_tier_1h(spark, sf_dir):
 
     key = ("realtime1h", sf_dir)
     if key not in _memo:
-        t = _transcripts(spark, sf_dir)
+        t = transcripts(spark, sf_dir)
         root = tempfile.mkdtemp(prefix="tseng_rt_")
         src = SnapshotTable(os.path.join(root, "source"), ts_col="ts")
         mat = MaterializedTiers(
@@ -292,6 +277,17 @@ def q_tier_routed_6h(spark, sf_dir):
     return project_tier(mat.read_resampled(spark, 21600))
 
 
+def q_tier_compressed_read(spark, sf_dir):
+    """Numeric-plane read of the 1h tier's one at-rest copy (the zstd
+    parquet row store), after the shared incremental build: the tier's
+    rows without the role/tool dist maps, ``vmean`` derived on read.  The
+    oracle rolls up the raw events table directly, so a dropped or
+    mis-derived numeric column is a value mismatch."""
+    q_materialized_tier_1h(spark, sf_dir)  # ensure the shared build exists
+    mat = _memo[("mat1h", sf_dir)]
+    return project_tier(mat.read_tier_compressed(spark, "1h"), dists=False)
+
+
 # ---------------------------------------------------------------- oracles
 
 _EVT_SQL = "SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value FROM events"
@@ -304,87 +300,12 @@ ORACLE = {
 }
 
 
-def _mat_sql(width: int) -> str:
-    role = ", ".join(
-        f"CAST(sum(CASE WHEN role = '{v}' THEN 1 ELSE 0 END) AS BIGINT) AS r_{v}"
-        for v in ROLE_VOCAB
-    )
-    tool = ", ".join(
-        f"CAST(sum(CASE WHEN tool = '{v}' THEN 1 ELSE 0 END) AS BIGINT) AS t_{v}"
-        for v in TOOL_VOCAB
-    )
-    return f"""
-WITH t AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS epoch,
-         event_type AS role,
-         CASE WHEN value >= 50 THEN 'big' ELSE 'small' END AS tool,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS turn_idx
-  FROM events),
-l AS (
-  SELECT conv_id, epoch, role, tool,
-         CAST(epoch - lag(epoch) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-              AS DOUBLE) AS value
-  FROM t)
-SELECT conv_id, {width}*(epoch//{width}) AS bucket,
-       count(*) AS cnt, count(value) AS cnt_lat,
-       coalesce(round(min(value), 6), 0.0) AS vmin,
-       coalesce(round(max(value), 6), 0.0) AS vmax,
-       coalesce(round(sum(value), 6), 0.0) AS vsum,
-       coalesce(round(avg(value), 6), 0.0) AS vmean,
-       {role},
-       {tool}
-FROM l GROUP BY 1, 2
-""".replace("{width}", str(width))
-
-
-def q_tier_compressed_read(spark, sf_dir):
-    """Numeric-plane read of the 1h tier's one at-rest copy (the zstd
-    parquet row store), after the shared incremental build: the tier's
-    rows without the role/tool dist maps, ``vmean`` derived on read.  The
-    oracle rolls up the raw events table directly, so a dropped or
-    mis-derived numeric column is a value mismatch."""
-    q_materialized_tier_1h(spark, sf_dir)  # ensure the shared build exists
-    mat = _memo[("mat1h", sf_dir)]
-    out = mat.read_tier_compressed(spark, "1h")
-    z = lambda c: F.coalesce(F.round(c, 6), F.lit(0.0))  # noqa: E731
-    return out.select(
-        "conv_id", "bucket", "cnt", "cnt_lat",
-        z("vmin").alias("vmin"), z("vmax").alias("vmax"),
-        z("vsum").alias("vsum"), z("vmean").alias("vmean"),
-    )
-
-
-def _mat_sql_numeric(width: int) -> str:
-    """Numeric-plane variant of _mat_sql (no role/tool pivots) for the
-    numeric tier read, which carries the latency plane only."""
-    return f"""
-WITH t AS (
-  SELECT CAST(user_id AS VARCHAR) AS conv_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS epoch,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS turn_idx
-  FROM events),
-l AS (
-  SELECT conv_id, epoch,
-         CAST(epoch - lag(epoch) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-              AS DOUBLE) AS value
-  FROM t)
-SELECT conv_id, {width}*(epoch//{width}) AS bucket,
-       count(*) AS cnt, count(value) AS cnt_lat,
-       coalesce(round(min(value), 6), 0.0) AS vmin,
-       coalesce(round(max(value), 6), 0.0) AS vmax,
-       coalesce(round(sum(value), 6), 0.0) AS vsum,
-       coalesce(round(avg(value), 6), 0.0) AS vmean
-FROM l GROUP BY 1, 2
-""".replace("{width}", str(width))
-
-
-ORACLE["q_tier_compressed_read"] = _mat_sql_numeric(3600)
-ORACLE["q_materialized_tier_1h"] = _mat_sql(3600)
-ORACLE["q_materialized_1d_retention"] = _mat_sql(86400)
-ORACLE["q_stream_ingest_1h"] = _mat_sql(3600)
-ORACLE["q_realtime_tier_1h"] = _mat_sql(3600)
-ORACLE["q_tier_routed_6h"] = _mat_sql(21600)
+ORACLE["q_tier_compressed_read"] = tier_sql(3600, dists=False)
+ORACLE["q_materialized_tier_1h"] = tier_sql(3600)
+ORACLE["q_materialized_1d_retention"] = tier_sql(86400)
+ORACLE["q_stream_ingest_1h"] = tier_sql(3600)
+ORACLE["q_realtime_tier_1h"] = tier_sql(3600)
+ORACLE["q_tier_routed_6h"] = tier_sql(21600)
 
 QUERIES = {
     "q_snapshot_time_travel": q_snapshot_time_travel,

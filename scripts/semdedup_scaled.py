@@ -46,7 +46,7 @@ def main():
 
     import duckdb
 
-    from tsengine.plans import driver_queries_data as dq
+    from driver_queries import data as dq
     from tsengine.session import get_spark
 
     # Scale the codebook and threshold: both the Spark query and the

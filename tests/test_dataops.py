@@ -449,7 +449,7 @@ def test_corpus_curation_plan_hygiene(spark):
     """The four-stage curation composition must stay join-planned: no
     CartesianProduct / BroadcastNestedLoopJoin anywhere in the chained
     quality + dedup + decontamination + sampling plan."""
-    from tsengine.plans.driver_queries_data import q_corpus_curation
+    from driver_queries.data import q_corpus_curation
 
     plan = (
         q_corpus_curation(spark, "/root/testdata/sf0.001")
@@ -487,7 +487,7 @@ def test_ivf_recall_curve(spark):
     seed-deterministic).  Measured curve: nprobe 2/4/8 -> 0.425/0.625/0.775
     mean recall; pinned with tolerance, monotone, and exhaustive probing
     (nprobe = n_cells) must equal brute force exactly.  Documented next to
-    q_knn_ivf (driver_queries_data.py)."""
+    q_knn_ivf (driver_queries/data.py)."""
     import numpy as np
 
     from tsengine.operators import similarity as S

@@ -16,7 +16,7 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 # Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``)
 # keeps 100 compiled classes by default.  One dashboard page (four
-# downsample widths, a Gorilla-decoded tier read, three formula classes)
+# downsample widths, a numeric-plane tier read, three formula classes)
 # cycles through ~175 generated sources, more than 100, so LRU eviction
 # makes every page recompile all of them with Janino (170-179 per page on
 # the benchmark's dashboard workload).  With room for 1000 a repeated page
