@@ -9,6 +9,10 @@ DuckDB CAST('0x'||substr(md5(x),1,15) AS BIGINT) — verified.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -18,6 +22,19 @@ N_MINHASH = 8
 SIMHASH_BITS = 16
 
 # ---------------------------------------------------------------- engine side
+
+_tables_root: str | None = None
+
+
+def table_dir(name: str) -> str:
+    """A fresh directory for one table a query builds, inside this
+    process's one ``tseng_tables_*`` directory, which is removed when the
+    process exits."""
+    global _tables_root
+    if _tables_root is None:
+        _tables_root = tempfile.mkdtemp(prefix="tseng_tables_")
+        atexit.register(shutil.rmtree, _tables_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_tables_root)
 
 
 def _docs(spark, sf_dir):
@@ -182,8 +199,6 @@ def q_dedup_clusters(spark, sf_dir):
     LSH+confirm stages, and the iterative CC consumer re-reads them — a
     durable table survives executor loss where a localCheckpoint would not,
     and later incremental dedup batches append to the same pair table)."""
-    import tempfile
-
     from tsengine.operators.components import dedup_resolve
     from tsengine.sources.snapshots import SnapshotTable
 
@@ -195,9 +210,7 @@ def q_dedup_clusters(spark, sf_dir):
     # candidates are the small output of the heavy stage)
     cand = cand.localCheckpoint(eager=True)
     pairs = dedup.ngram_jaccard_pairs(docs, cand, threshold=0.5)
-    pair_tbl = SnapshotTable(
-        tempfile.mkdtemp(prefix="tseng_pairs_"), ts_col=None
-    )
+    pair_tbl = SnapshotTable(table_dir("pairs"), ts_col=None)
     pair_tbl.append(pairs)
     out = dedup_resolve(docs, pair_tbl.read(spark))
     return out.select(

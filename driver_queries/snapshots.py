@@ -3,27 +3,26 @@ materialized-tier layer (tsengine.sources.snapshots / tsengine.materialize)
 — the north rule's "continuous aggregates over an Iceberg table, resumable,
 with retention" made value-checkable through the driver gate.
 
-Each query deterministically builds a snapshot table under /tmp from the
-sf_dir events parquet (literal date / turn cutoffs, no wall clock), drives
-the engine mechanism under test (time travel, append-diff incremental read,
-manifest-only retention truncation, incremental tier refresh with
-conv-state anchors), and projects a result a DuckDB oracle can pin directly
-against the SAME source parquet — so a wrong manifest, a lost file, a
-broken anchor join or a bad merge_tier fold all surface as value-hash
-mismatches, not just pytest failures.
+Each query deterministically builds a snapshot table in a temp directory
+from the sf_dir events parquet (literal date / turn cutoffs, no wall
+clock), drives the engine mechanism under test (time travel, append-diff
+incremental read, manifest-only retention truncation, incremental tier
+refresh with conv-state anchors), and projects a result a DuckDB oracle
+can pin directly against the SAME source parquet — so a wrong manifest, a
+lost file, a broken anchor join or a bad merge_tier fold all surface as
+value-hash mismatches, not just pytest failures.
 
-Builds are memoized per (sf_dir, process); tables live in mkdtemp dirs so
-re-runs in a fresh process rebuild from scratch.
+Builds are memoized per (sf_dir, process); tables live under
+``data.table_dir``'s per-process directory, removed at exit, so re-runs in a
+fresh process rebuild from scratch.
 """
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from driver_queries.data import (
-    ROLE_VOCAB, TOOL_VOCAB, project_tier, tier_sql, transcripts,
+    ROLE_VOCAB, TOOL_VOCAB, project_tier, table_dir, tier_sql, transcripts,
 )
 
 # literal week boundaries inside the events table's fixed Jan-2024 range
@@ -53,7 +52,7 @@ def _weekly_table(spark, sf_dir):
     if key in _memo:
         return _memo[key]
     ev = _events(spark, sf_dir)
-    tbl = SnapshotTable(tempfile.mkdtemp(prefix="tseng_snap_"), ts_col="ts")
+    tbl = SnapshotTable(table_dir("snap"), ts_col="ts")
     lo = None
     for hi in (_CUT1, _CUT2, _CUT3, None):
         batch = ev
@@ -105,7 +104,7 @@ def q_snapshot_retention(spark, sf_dir):
         from tsengine.sources.snapshots import SnapshotTable
 
         src = _weekly_table(spark, sf_dir)
-        tbl = SnapshotTable(tempfile.mkdtemp(prefix="tseng_ret_"), ts_col="ts")
+        tbl = SnapshotTable(table_dir("ret"), ts_col="ts")
         for sid in range(1, 5):
             tbl.append(src.incremental(spark, sid - 1, sid))
         tbl.truncate_before(_CUT2_EPOCH)
@@ -124,7 +123,7 @@ def q_snapshot_compact(spark, sf_dir):
         from tsengine.sources.snapshots import SnapshotTable
 
         ev = _events(spark, sf_dir).filter(F.col("ts") < _CUT1)
-        tbl = SnapshotTable(tempfile.mkdtemp(prefix="tseng_cmp_"), ts_col="ts")
+        tbl = SnapshotTable(table_dir("cmp"), ts_col="ts")
         tbl.append(ev.filter(F.col("event_id") % 2 == 0).coalesce(1))
         tbl.append(ev.filter(F.col("event_id") % 2 == 1).coalesce(1))
         assert tbl.compact(spark, target_bytes=128 << 20) is not None
@@ -149,7 +148,7 @@ def q_materialized_tier_1h(spark, sf_dir):
     key = ("mat1h", sf_dir)
     if key not in _memo:
         t = transcripts(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="tseng_mat_")
+        root = table_dir("mat")
         src = SnapshotTable(os.path.join(root, "source"), ts_col="ts")
         mat = MaterializedTiers(
             src, os.path.join(root, "tiers"),
@@ -204,7 +203,7 @@ def q_stream_ingest_1h(spark, sf_dir):
     key = ("stream1h", sf_dir)
     if key not in _memo:
         t = transcripts(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="tseng_stream_")
+        root = table_dir("stream")
         src_dir = os.path.join(root, "in")
         os.makedirs(src_dir)
         for n, batch in enumerate(
@@ -246,7 +245,7 @@ def q_realtime_tier_1h(spark, sf_dir):
     key = ("realtime1h", sf_dir)
     if key not in _memo:
         t = transcripts(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="tseng_rt_")
+        root = table_dir("rt")
         src = SnapshotTable(os.path.join(root, "source"), ts_col="ts")
         mat = MaterializedTiers(
             src, os.path.join(root, "tiers"),

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import contextlib
+import gc
 import math
+import struct
+from types import SimpleNamespace
 
 
 def rows(df, cols=("series_id", "epoch", "value")):
@@ -24,6 +28,13 @@ def assert_series_equal(df, expected, cols=("series_id", "epoch", "value"), tol=
                 assert not (ev is None) and math.isclose(gv, ev, rel_tol=tol, abs_tol=tol), f"{g} != {e}"
             else:
                 assert gv == ev, f"{g} != {e}"
+
+
+def same_double(a: float, b: float) -> bool:
+    """Bit-equal doubles (so -0.0 != 0.0), any NaN equal to any NaN."""
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) and math.isnan(b)
+    return struct.pack("<d", a) == struct.pack("<d", b)
 
 
 # joins that pair every row with every row: never in a scale plan
@@ -51,3 +62,31 @@ def codegen_compiles(spark) -> int:
     cache misses."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@contextlib.contextmanager
+def py4j_commands(spark):
+    """Count the py4j commands the driver sends to the JVM while open;
+    ``with py4j_commands(spark) as c: ...`` then read ``c.n``.
+
+    py4j's object-release commands (``m``) are left out and Python's garbage
+    collector is paused, so the count depends on the code under test, not
+    on when earlier proxies happen to be collected."""
+    client = spark.sparkContext._gateway._gateway_client
+    count = SimpleNamespace(n=0)
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            count.n += 1
+        return send(command, *args, **kwargs)
+
+    collecting = gc.isenabled()
+    gc.disable()
+    client.send_command = counting
+    try:
+        yield count
+    finally:
+        del client.send_command
+        if collecting:
+            gc.enable()

@@ -7,6 +7,7 @@ import math
 import random
 
 import pytest
+from pyspark.sql.types import DoubleType
 
 from tests.helpers import (
     RED_FLAG_JOINS,
@@ -14,6 +15,7 @@ from tests.helpers import (
     executed_plan,
     parquet_series,
     rows,
+    same_double,
 )
 from tests.pair_reference import pair_op_reference
 from tsengine.core import TsError, from_ts_lists, series_frame
@@ -79,6 +81,21 @@ def test_scs_6(spark):
     out = scalar_sum(df, number=10)
     exp = [(0, i, 10.0 - i) for i in range(10)] + [(1, i, 10.0) for i in range(10)]
     assert_series_equal(out, exp)
+
+
+@pytest.mark.parametrize("op, fn", [(scalar_sum, lambda v, k: v + k),
+                                    (scalar_product, lambda v, k: v * k)])
+@pytest.mark.parametrize("k", [0.1, 1e-300])
+def test_scalar_literal_exact(spark, op, fn, k):
+    """A scalar that SQL would read as a DECIMAL (0.1) or that is tiny
+    (1e-300) gives bit-for-bit the double arithmetic, and ``value`` stays
+    DOUBLE."""
+    vals = [1.0, 3.0, -2.5, 1e300, 7e-301]
+    out = op(from_ts_lists(spark, [list(enumerate(vals))]), number=k)
+    assert out.schema["value"].dataType == DoubleType()
+    got = sorted((r["epoch"], r["value"]) for r in out.collect())
+    assert [e for e, _ in got] == list(range(len(vals)))
+    assert all(same_double(g, fn(v, k)) for (_, g), v in zip(got, vals)), got
 
 
 # ---- pairwise (ts_pair_operation, tf:727-756) ----

@@ -658,6 +658,27 @@ def test_semantic_pairs_probe_spread_on_narrow_input(spark):
     assert got_narrow == got_wide
 
 
+def test_semantic_pairs_width_check_runs_no_job(spark):
+    """Over a shuffled input, planning the in-cell pairs starts no Spark
+    job: the narrow-input check reads the planned width instead of
+    building the RDD, which would run the upstream shuffle.  The shuffle is
+    narrower than the session's parallelism, so it is still respread."""
+    from tsengine.operators import similarity
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, rng.standard_normal(64).tolist()) for i in range(64)],
+        "vec_id long, embedding array<double>",
+    ).repartition(2, "vec_id")
+    cents = similarity.fixed_centroids(4, 64, seed=7)
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup()
+    pairs = dedup._semantic_pairs(emb, cents, threshold=0.3)
+    assert tracker.getJobIdsForGroup() == before
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan, plan
+
+
 def test_semantic_pairs_non_numeric_shuffle_partitions(spark, monkeypatch):
     """Some platforms set spark.sql.shuffle.partitions to a non-numeric
     value such as "auto".  The narrow-input respread must then fall back to

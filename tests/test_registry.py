@@ -1,9 +1,11 @@
-"""The driver registry's contract, pinned without Spark: the 114
-``queries()`` keys in their committed order (the driver grades the first
-50, ``_GATE_WINDOW``), one oracle per query, and the registry kept outside
-the engine package."""
+"""The driver registry's contract: the 114 ``queries()`` keys in their
+committed order (the driver grades the first 50, ``_GATE_WINDOW``), one
+oracle per query and the registry kept outside the engine package, all
+pinned without Spark; and the tables a run builds removed when it exits."""
 
 import os
+import subprocess
+import sys
 
 import __spark_entry__ as entry
 
@@ -72,3 +74,34 @@ def test_registry_is_outside_the_engine():
                     if "driver_queries" in fh.read():
                         mentions.append(os.path.relpath(path, REPO))
     assert mentions == []
+
+
+_TABLES_RUN = """
+import sys
+
+import driver_queries.data as data
+import driver_queries.snapshots as snapshots
+from tsengine.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions="4")
+snapshots.q_snapshot_retention(spark, sys.argv[1]).count()
+data.q_dedup_clusters(spark, sys.argv[1]).count()
+print(data._tables_root)
+"""
+
+
+def test_registry_tables_removed_at_exit(tmp_path):
+    """A process that builds snapshot tables and the dedup pair table
+    leaves no ``tseng_*`` directory behind in its temp directory."""
+    from tests.test_plan_index import SF_DIR
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    path = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, TMPDIR=str(tmp), TSENGINE_DRIVER_MEMORY="1g", PYTHONPATH=path)
+    run = subprocess.run([sys.executable, "-c", _TABLES_RUN, SF_DIR], cwd=REPO,
+                         env=env, capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    root = run.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(root) == str(tmp)
+    assert not [p.name for p in tmp.iterdir() if p.name.startswith("tseng_")]

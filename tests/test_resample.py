@@ -3,8 +3,15 @@ interpolation.  Vectors from reference tests/analysis/timeseries_functions_tests
 (test_dttsl_1..4) and tests/compound/parser_tests.py (test_ap_2, test_ap_4)."""
 
 import pytest
+from pyspark.sql.types import DoubleType
 
-from tests.helpers import RED_FLAG_JOINS, assert_series_equal, executed_plan, parquet_series
+from tests.helpers import (
+    RED_FLAG_JOINS,
+    assert_series_equal,
+    executed_plan,
+    parquet_series,
+    same_double,
+)
 from tsengine.core import from_ts_lists
 from tsengine.operators.resample import distribute, distribute_linear
 from tsengine.plans.api import Engine
@@ -56,6 +63,20 @@ def test_fill_value_constant(spark):
         (0, 1393629000, -1.0),  # 1393628900 is off-grid: constant fill, no pad
     ]
     assert_series_equal(out, exp)
+
+
+@pytest.mark.parametrize("fill", [float("nan"), float("inf"), float("-inf"), -0.0, 0.1, 1e-300])
+def test_fill_value_literal_exact(spark, fill):
+    """The fill constant reaches the output as the very same double, the
+    non-finite values and the signed zero included, and ``value`` stays
+    DOUBLE."""
+    df = from_ts_lists(spark, [[(1393628100, 5.0), (1393628900, 7.0)]])
+    out = distribute(df, seconds=300, fill_value=fill)
+    assert out.schema["value"].dataType == DoubleType()
+    got = sorted((r["epoch"], r["value"]) for r in out.collect())
+    exp = [(1393628100, 5.0), (1393628400, fill), (1393628700, fill), (1393629000, fill)]
+    assert [e for e, _ in got] == [e for e, _ in exp]
+    assert all(same_double(g, e) for (_, g), (_, e) in zip(got, exp)), got
 
 
 def test_ap_4_meter28_distribute(spark):

@@ -1,12 +1,13 @@
 """Session factory: the generated-code cache holds a request mix's working
-set, so a repeated request compiles no class again, and the driver heap
-follows the box's memory."""
+set, so a repeated request compiles no class again, a formula plan is
+built in a few hundred driver round trips, and the driver heap follows the
+box's memory."""
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from tests.helpers import codegen_compiles, parquet_series
+from tests.helpers import codegen_compiles, parquet_series, py4j_commands
 from tsengine import session
 
 # literals no other test inlines, so the first pass below starts cold
@@ -35,13 +36,34 @@ def test_repeated_page_compiles_nothing(spark):
     assert c2 - c1 == 0
 
 
+def _formulas(spark, tmp_path, t0):
+    """The dashboard's three formula classes over a small events table:
+    kind -> (engine, formula text)."""
+    from tsengine.plans.api import Engine
+
+    ev = parquet_series(spark, tmp_path / "events.parquet",
+                        [(s, t0 + 900 * i, float(i % 7 + s))
+                         for s in range(2) for i in range(900)])
+    w = Window.partitionBy("series_id").orderBy("epoch").rowsBetween(
+        Window.unboundedPreceding, 0)
+    plain = Engine(spark, ev)
+    meter = Engine(spark, ev.withColumn("value", F.sum("value").over(w)))
+    now = t0 + 8 * 86400
+    gv = "get_variable({s}; time_int = 3600; now = %d; range = last_week)" % now
+    gi = "get_increments({s}; time_int = 3600; now = %d; range = last_week)" % now
+    return {
+        "split_agg": (plain, f"inner_max(split({gv.format(s=0)}; period = day))"),
+        "usage": (meter, f"inner_sum(split({gi.format(s=0)}; period = day))"),
+        "product": (plain, f"product({gv.format(s=0)}; {gv.format(s=1)})"),
+    }
+
+
 def test_repeated_dashboard_request_compiles_nothing(spark, tmp_path):
     """The dashboard's request mix (four downsample widths, a numeric-plane
     tier read, the three formula classes), asked twice with the same
     parameters: the second pass compiles no class."""
     from tests.test_materialize import _turns
     from tsengine.materialize import MaterializedTiers
-    from tsengine.plans.api import Engine
     from tsengine.sources.snapshots import SnapshotTable
 
     t0 = 1_600_000_000
@@ -53,23 +75,12 @@ def test_repeated_dashboard_request_compiles_nothing(spark, tmp_path):
     lo = t0 - t0 % 86400 + 86400
     hi = lo + 2 * 86400 - 1
 
-    ev = parquet_series(spark, tmp_path / "events.parquet",
-                        [(s, t0 + 900 * i, float(i % 7 + s))
-                         for s in range(2) for i in range(900)])
-    w = Window.partitionBy("series_id").orderBy("epoch").rowsBetween(
-        Window.unboundedPreceding, 0)
-    cum = ev.withColumn("value", F.sum("value").over(w))
-    plain, meter = Engine(spark, ev), Engine(spark, cum)
-    now = t0 + 8 * 86400
-    gv = "get_variable({s}; time_int = 3600; now = %d; range = last_week)" % now
-    gi = "get_increments({s}; time_int = 3600; now = %d; range = last_week)" % now
     requests = [
         *(lambda wd=wd: mat.read_resampled(spark, wd, lo=lo, hi=hi)
           for wd in (300, 3600, 21600, 86400)),
         lambda: mat.read_tier_compressed(spark, "1h", lo=lo, hi=hi),
-        lambda: plain.query(f"inner_max(split({gv.format(s=0)}; period = day))"),
-        lambda: meter.query(f"inner_sum(split({gi.format(s=0)}; period = day))"),
-        lambda: plain.query(f"product({gv.format(s=0)}; {gv.format(s=1)})"),
+        *(lambda e=engine, t=text: e.query(t)
+          for engine, text in _formulas(spark, tmp_path, t0).values()),
     ]
 
     def page():
@@ -79,6 +90,20 @@ def test_repeated_dashboard_request_compiles_nothing(spark, tmp_path):
     c1 = codegen_compiles(spark)
     assert page() == first and all(first)
     assert codegen_compiles(spark) - c1 == 0
+
+
+def test_formula_plans_fit_py4j_budget(spark, tmp_path):
+    """Building each of the dashboard's three formula classes (a split
+    aggregate, a usage sum over a cumulative meter, a pairwise product)
+    sends at most 300 py4j commands: no per-call stack capture, and each
+    operator projection is one SQL expression list rather than one call
+    per Column node.  Only the plan is built; nothing runs."""
+    sent = {}
+    for kind, (engine, text) in _formulas(spark, tmp_path, 1_600_000_000).items():
+        with py4j_commands(spark) as c:
+            engine.query(text)
+        sent[kind] = c.n
+    assert all(n <= 300 for n in sent.values()), sent
 
 
 @pytest.mark.parametrize("phys_gb, heap", [

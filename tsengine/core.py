@@ -10,6 +10,7 @@ distributed data is an anti-pattern).
 
 from __future__ import annotations
 
+import math
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,6 +23,22 @@ SERIES_COLS = ("series_id", "epoch", "value")
 
 class TsError(ValueError):
     """Engine-level semantic error (the reference's {'error': ...} values)."""
+
+
+def sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal holding exactly the same double.
+
+    A bare ``0.1`` in SQL text is a DECIMAL, and ``repr`` gives ``nan`` and
+    ``inf``, which SQL cannot parse.  A finite value is written as its
+    shortest round-trip digits with a ``D`` suffix, parenthesised so that a
+    negative value never follows a minus sign as ``--``; NaN and the
+    infinities are casts of Spark's own spelling of them."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"({x!r}D)"
 
 
 def series_frame(

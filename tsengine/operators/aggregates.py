@@ -19,22 +19,13 @@ from pyspark.sql import functions as F
 
 from tsengine.core import TsError
 
-_AGGS = {
-    "sum": F.sum,
-    "max": F.max,
-    "min": F.min,
-    "mean": F.avg,
-    "std": F.stddev_pop,
-}
+# inner_<kind> -> the Spark SQL aggregate it runs
+_AGGS = {"sum": "sum", "max": "max", "min": "min", "mean": "avg", "std": "stddev_pop"}
 
 
 def _inner(df: DataFrame, kind: str, group_cols: list[str] | None = None) -> DataFrame:
-    groups = group_cols or ["series_id"]
-    agg = _AGGS[kind]
-    return (
-        df.groupBy(*groups)
-        .agg(F.max("epoch").alias("epoch"), agg("value").alias("value"))
-        .select(*groups, "epoch", "value")
+    return df.groupBy(*(group_cols or ["series_id"])).agg(
+        F.expr("max(epoch) AS epoch"), F.expr(f"{_AGGS[kind]}(value) AS value")
     )
 
 
@@ -69,11 +60,9 @@ def last(df: DataFrame, number: int = 1) -> DataFrame:
     Top-k per group via row_number over descending epoch — Catalyst plans a
     single shuffle + per-partition sort; no collect.
     """
-    n = int(number)
-    w = Window.partitionBy("series_id").orderBy(F.col("epoch").desc())
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n)
+        df.selectExpr("*", "row_number() OVER (PARTITION BY series_id ORDER BY epoch DESC) AS _rn")
+        .where(f"_rn <= {int(number)}")
         .drop("_rn")
     )
 

@@ -18,58 +18,54 @@ the broadcast values.
 
 from __future__ import annotations
 
-from operator import add, mul, sub
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tsengine.core import TsError, sql_double
 
-def _div(a, b):
-    # ANSI-safe division: the reference's x/0 -> inf -> dropped / 0/0 -> NaN
-    # -> dropped (tf:982-986) becomes try_divide -> NULL -> dropped.
-    return F.try_divide(a, b)
-
-from tsengine.core import TsError
-
-_INF = float("inf")
-
-
-def _drop_nonfinite(df: DataFrame, col: str = "value") -> DataFrame:
-    c = F.col(col)
-    return df.filter(c.isNotNull() & ~F.isnan(c) & (c != _INF) & (c != -_INF))
+# the results a scalar op (tf:605-606) or a division (tf:982-986) keeps:
+# not null, not NaN, not ±inf
+_FINITE = (f"value IS NOT NULL AND NOT isnan(value) AND value != {sql_double(float('inf'))}"
+           f" AND value != {sql_double(float('-inf'))}")
 
 
 def scalar_product(df: DataFrame, number: float = 1.0) -> DataFrame:
     """value * k (tf:614-632)."""
-    return _scalar(df, lambda v: v * F.lit(float(number)))
+    return _scalar(df, f"{{}} * {sql_double(number)}")
 
 
 def scalar_sum(df: DataFrame, number: float = 0.0) -> DataFrame:
     """value + k (tf:636-654)."""
-    return _scalar(df, lambda v: v + F.lit(float(number)))
+    return _scalar(df, f"{{}} + {sql_double(number)}")
 
 
 def scalar_division(df: DataFrame, number: float = 1.0) -> DataFrame:
     """value / k; ±inf dropped (tf:658-676, tf:605-606)."""
-    return _scalar(df, lambda v: _div(v, F.lit(float(number))))
+    return _scalar(df, f"try_divide({{}}, {sql_double(number)})")
 
 
 def scalar_sub(df: DataFrame, number: float = 0.0) -> DataFrame:
     """value - k (tf:680-698)."""
-    return _scalar(df, lambda v: v - F.lit(float(number)))
+    return _scalar(df, f"{{}} - {sql_double(number)}")
 
 
 def scalar_power(df: DataFrame, number: float = 1.0) -> DataFrame:
     """value ** int(k) — exponent truncated to int (tf:702-721)."""
-    return _scalar(df, lambda v: F.pow(v, F.lit(int(float(number)))))
+    return _scalar(df, f"power({{}}, {int(float(number))})")
 
 
-def _scalar(df: DataFrame, fn) -> DataFrame:
-    out = df.select("series_id", "epoch", fn(F.col("value").cast("double")).alias("value"))
-    return _drop_nonfinite(out)
+def _scalar(df: DataFrame, op: str) -> DataFrame:
+    """``op``: SQL text with ``{}`` where the DOUBLE value goes."""
+    return df.selectExpr(
+        "series_id", "epoch", f"{op.format('CAST(value AS DOUBLE)')} AS value"
+    ).where(_FINITE)
 
 
-_PAIR_FNS = {"add": add, "sub": sub, "mul": mul, "div": _div}
+# SQL of each pairwise op over two DOUBLE operands.  ANSI-safe division: the
+# reference's x/0 -> inf -> dropped / 0/0 -> NaN -> dropped (tf:982-986)
+# becomes try_divide -> NULL -> dropped.
+_PAIR_SQL = {"add": "({} + {})", "sub": "({} - {})", "mul": "({} * {})",
+             "div": "try_divide({}, {})"}
 
 
 def pair_op(df1: DataFrame, df2: DataFrame, op: str) -> DataFrame:
@@ -90,41 +86,33 @@ def pair_op(df1: DataFrame, df2: DataFrame, op: str) -> DataFrame:
     other and emits nothing.  Null inputs are left out of the collected
     lists; their results would be null and dropped anyway.
     """
-    if op not in _PAIR_FNS:
+    if op not in _PAIR_SQL:
         raise TsError(f"unknown pair op: {op}")
-    fn = _PAIR_FNS[op]
+    fn = _PAIR_SQL[op].format
 
-    u = df1.select("series_id", "epoch", "value", F.lit(True).alias("_l")).unionByName(
-        df2.select("series_id", "epoch", "value", F.lit(False).alias("_l"))
-    )
-    w = Window.partitionBy("series_id")
-    left, right = F.col("_l"), ~F.col("_l")
-    u = u.select(
+    u = df1.selectExpr("series_id", "epoch", "value", "TRUE AS _l").unionByName(
+        df2.selectExpr("series_id", "epoch", "value", "FALSE AS _l")
+    ).selectExpr(
         "series_id", "epoch", "value", "_l",
-        F.count_if(left).over(w).alias("_n1"),
-        F.count_if(right).over(w).alias("_n2"),
-        F.max(F.when(left, F.col("value"))).over(w).alias("_k1"),
-        F.max(F.when(right, F.col("value"))).over(w).alias("_k2"),
+        "count_if(_l) OVER (PARTITION BY series_id) AS _n1",
+        "count_if(NOT _l) OVER (PARTITION BY series_id) AS _n2",
+        "max(CASE WHEN _l THEN value END) OVER (PARTITION BY series_id) AS _k1",
+        "max(CASE WHEN NOT _l THEN value END) OVER (PARTITION BY series_id) AS _k2",
     )
     g = u.groupBy("series_id", "epoch").agg(
-        F.first("_n1").alias("_n1"),
-        F.first("_n2").alias("_n2"),
-        F.first("_k1").alias("_k1"),
-        F.first("_k2").alias("_k2"),
-        F.collect_list(F.when(left, F.col("value"))).alias("_a"),
-        F.collect_list(F.when(right, F.col("value"))).alias("_b"),
+        F.expr("first(_n1) AS _n1"),
+        F.expr("first(_n2) AS _n2"),
+        F.expr("first(_k1) AS _k1"),
+        F.expr("first(_k2) AS _k2"),
+        F.expr("collect_list(CASE WHEN _l THEN value END) AS _a"),
+        F.expr("collect_list(CASE WHEN NOT _l THEN value END) AS _b"),
     )
-    s1, s2 = F.col("_n1") == 1, F.col("_n2") == 1
-    vals = (
-        F.when(s1 == s2, F.flatten(F.transform("_a", lambda a: F.transform("_b", lambda b: fn(a, b)))))
-        .when(s1, F.transform("_b", lambda b: fn(F.col("_k1"), b)))
-        .otherwise(F.transform("_a", lambda a: fn(a, F.col("_k2"))))
-    )
-    out = g.select("series_id", "epoch", F.explode(vals).alias("value"))
-    out = out.filter(F.col("value").isNotNull() & ~F.isnan(F.col("value")))
-    if op == "div":
-        out = _drop_nonfinite(out)
-    return out
+    vals = (f"CASE WHEN (_n1 = 1) = (_n2 = 1)"
+            f" THEN flatten(transform(_a, a -> transform(_b, b -> {fn('a', 'b')})))"
+            f" WHEN _n1 = 1 THEN transform(_b, b -> {fn('_k1', 'b')})"
+            f" ELSE transform(_a, a -> {fn('a', '_k2')}) END")
+    keep = _FINITE if op == "div" else "value IS NOT NULL AND NOT isnan(value)"
+    return g.selectExpr("series_id", "epoch", f"explode({vals}) AS value").where(keep)
 
 
 _DIM_MSG = {

@@ -527,6 +527,19 @@ def semantic_dedup(
     )
 
 
+def _planned_width(df: DataFrame) -> int:
+    """Partitions of ``df`` as planned, read without running a job.
+
+    A plan with exchanges is adaptive, and building its RDD would run the
+    upstream shuffles: its width is the initial plan's output partitioning
+    (0 when that is unknown, which reads as narrow).  An exchange-free
+    plan's RDD is its scans', and building it runs nothing."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return plan.executedPlan().outputPartitioning().numPartitions()
+    return plan.execute().getNumPartitions()
+
+
 def _semantic_pairs(
     emb: DataFrame,
     centroids: list[list[float]],
@@ -543,9 +556,9 @@ def _semantic_pairs(
     in-cell pair in ONE task (the join output explodes quadratically in
     cell population, so AQE's input-size stats can't see it coming).  When
     the assigned frame is narrower than the session's shuffle parallelism
-    it is round-robin respread first; both join aliases read the respread
-    frame, so whichever side Catalyst broadcasts, the streamed side stays
-    wide.  At cluster scale the scan is already >= that wide and no extra
+    (as planned: :func:`_planned_width` runs no job) it is round-robin
+    respread first; both join aliases read the respread frame, so
+    whichever side Catalyst broadcasts, the streamed side stays wide.  At cluster scale the scan is already >= that wide and no extra
     exchange is ever added to the big path."""
     from tsengine.operators.similarity import _dot, _norm, ivf_assign
 
@@ -556,7 +569,7 @@ def _semantic_pairs(
         _norm(F.col(vec_col)).alias("nrm"),
     )
     n_shuffle = shuffle_parallelism(emb.sparkSession)
-    if a.rdd.getNumPartitions() < n_shuffle:
+    if _planned_width(a) < n_shuffle:
         a = a.repartition(n_shuffle)
     x, y = a.alias("x"), a.alias("y")
     cos = F.round(

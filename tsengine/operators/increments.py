@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tsengine.core import TsError
+from tsengine.core import TsError, sql_double
 
 MONOTONIES = ("increasing", "decreasing", "non_monotonous", "non-monotonous")
 
@@ -96,19 +96,18 @@ def increments(
     elif validate:
         validate_monotony(df, monotony, mv, rv)
 
-    w = Window.partitionBy("series_id").orderBy("epoch")
-    prev = F.lag("value").over(w)
-    reset_inc = F.col("value") - F.lit(rv) + (F.lit(0.0) if mv is None else (F.lit(mv) - prev))
-    inc = (
-        F.when((prev > F.col("value")) & F.lit(monotony == "increasing"), reset_inc)
-        .when((prev < F.col("value")) & F.lit(monotony == "decreasing"), reset_inc)
-        .otherwise(F.col("value") - prev)
-    )
+    inc = "value - _prev"
+    reset = {"increasing": "_prev > value", "decreasing": "_prev < value"}.get(monotony)
+    if reset is not None:
+        wrap = sql_double(0.0) if mv is None else f"({sql_double(mv)} - _prev)"
+        inc = f"CASE WHEN {reset} THEN value - {sql_double(rv)} + {wrap} ELSE {inc} END"
     return (
-        df.withColumn("_prev", prev)
-        .withColumn("_inc", inc)
-        .filter(F.col("_prev").isNotNull())
-        .select("series_id", "epoch", F.col("_inc").alias("value"))
+        df.selectExpr(
+            "series_id", "epoch", "value",
+            "lag(value) OVER (PARTITION BY series_id ORDER BY epoch) AS _prev",
+        )
+        .where("_prev IS NOT NULL")
+        .selectExpr("series_id", "epoch", f"{inc} AS value")
     )
 
 

@@ -18,56 +18,54 @@ shuffle, never range-split mid-series (LOCF must see the whole series).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from tsengine.core import TsError
+from tsengine.core import TsError, sql_double
 
 
-def _grid_bounds(step: int, lo, hi):
+def _grid_bounds(step: int, lo: str, hi: str) -> tuple[str, str]:
     """Exact grid rounding (tf:284-291): e_from ceils to the next multiple,
     e_to floors then +step; python-range end-exclusive means the last grid
     point is ``floor(e_to/s)*s + s`` minus one step when on-grid... pinned:
     grid = [ceil(lo/s)*s, g1) step s where g1 = (floor(hi/s)+1)*s (+s if
-    hi not on-grid). Inclusive last point = g1 - s."""
-    s = F.lit(step)
-    g0 = s * F.floor(lo / s)
-    g0 = F.when(lo % s != 0, g0 + s).otherwise(g0)
-    g1 = s * (F.floor(hi / s) + 1)
-    g1 = F.when(hi % s != 0, g1 + s).otherwise(g1)
-    return g0.cast("long"), (g1 - s).cast("long")
+    hi not on-grid). Inclusive last point = g1 - s.
+
+    ``lo``/``hi`` and the two bounds returned are SQL expressions."""
+    s = int(step)
+    g0 = f"{s} * FLOOR(({lo}) / {s})"
+    g1 = f"{s} * (FLOOR(({hi}) / {s}) + 1)"
+    return (
+        f"CAST(CASE WHEN ({lo}) % {s} != 0 THEN {g0} + {s} ELSE {g0} END AS BIGINT)",
+        f"CAST(CASE WHEN ({hi}) % {s} != 0 THEN {g1} + {s} ELSE {g1} END - {s} AS BIGINT)",
+    )
 
 
 def _with_grid(df: DataFrame, step: int, bounds) -> DataFrame:
     """The points of ``df`` tagged ``_g=0`` plus one null-valued ``_g=1``
     row per grid epoch, in one stream hash-partitioned on ``series_id``.
 
-    ``bounds(lo, hi)`` maps a series' first and last observation epochs to
-    its first and last grid epoch (no grid if the last is below the first
-    or null).  The bounds come from a window, and the grid rows are
-    exploded from each series' first row, so the input is read and
-    shuffled once and every later window reuses its partitioning.
+    ``bounds(lo, hi)`` maps the SQL expressions of a series' first and last
+    observation epochs to the SQL expressions of its first and last grid
+    epoch (no grid if the last is below the first or null).  The bounds
+    come from a window, and the grid rows are exploded from each series'
+    first row, so the input is read and shuffled once and every later
+    window reuses its partitioning.
     """
-    w = Window.partitionBy("series_id").orderBy("epoch")
-    x = df.select(
-        "series_id", "epoch", F.col("value").cast("double").alias("value"),
-        F.row_number().over(w).alias("_rn"),
-        F.max("epoch").over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("_hi"),
+    x = df.selectExpr(
+        "series_id", "epoch", "CAST(value AS DOUBLE) AS value",
+        "row_number() OVER (PARTITION BY series_id ORDER BY epoch) AS _rn",
+        "max(epoch) OVER (PARTITION BY series_id ORDER BY epoch"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS _hi",
     )
     # on the first row (ascending epoch) its own epoch is the series minimum
-    g0, g1 = bounds(F.col("epoch"), F.col("_hi"))
-    epochs = F.when(g1 >= g0, F.sequence(g0, g1, F.lit(step).cast("long"))).otherwise(
-        F.array().cast("array<long>")
+    g0, g1 = bounds("epoch", "_hi")
+    epochs = (f"CASE WHEN {g1} >= {g0} THEN sequence({g0}, {g1}, CAST({int(step)} AS BIGINT))"
+              " ELSE CAST(array() AS ARRAY<BIGINT>) END")
+    pt = "array(struct(epoch, value, 0 AS _g))"
+    gs = f"transform({epochs}, t -> struct(t AS epoch, CAST(NULL AS DOUBLE) AS value, 1 AS _g))"
+    return x.selectExpr(
+        "series_id", f"inline(CASE WHEN _rn = 1 THEN concat({pt}, {gs}) ELSE {pt} END)"
     )
-    pt = F.array(F.struct("epoch", "value", F.lit(0).alias("_g")))
-    gs = F.transform(
-        epochs,
-        lambda e: F.struct(e.alias("epoch"), F.lit(None).cast("double").alias("value"),
-                           F.lit(1).alias("_g")),
-    )
-    rows = F.when(F.col("_rn") == 1, F.concat(pt, gs)).otherwise(pt)
-    return x.select("series_id", F.inline(rows))
 
 
 def distribute(
@@ -92,38 +90,44 @@ def distribute(
         raise TsError("seconds must be a positive integer")
     u = _with_grid(df, seconds, lambda lo, hi: _grid_bounds(
         seconds,
-        F.lit(int(e_from)) if e_from is not None else lo,
-        F.lit(int(e_to)) if e_to is not None else hi,
+        str(int(e_from)) if e_from is not None else lo,
+        str(int(e_to)) if e_to is not None else hi,
     ))
 
     if fill_value is not None:
         # exact-match reindex: a point survives iff a grid row shares its
         # epoch (duplicates kept, as a left join keeps them); a grid row
         # survives iff no point does
-        at = Window.partitionBy("series_id", "epoch")
-        u = u.select(
-            "series_id", "epoch", "value", "_g",
-            F.max("_g").over(at).alias("_on"),
-            F.min("_g").over(at).alias("_alone"),
-        ).filter(F.when(F.col("_g") == 0, F.col("_on") == 1).otherwise(F.col("_alone") == 1))
-        return u.select(
-            "series_id", "epoch", F.coalesce("value", F.lit(float(fill_value))).alias("value")
+        return (
+            u.selectExpr(
+                "series_id", "epoch", "value", "_g",
+                "max(_g) OVER (PARTITION BY series_id, epoch) AS _on",
+                "min(_g) OVER (PARTITION BY series_id, epoch) AS _alone",
+            )
+            .where("CASE WHEN _g = 0 THEN _on = 1 ELSE _alone = 1 END")
+            .selectExpr("series_id", "epoch",
+                        f"coalesce(value, {sql_double(fill_value)}) AS value")
         )
 
     # LOCF then bfill: two frames over the grid stream's partitioning.
-    w = Window.partitionBy("series_id").orderBy("epoch", "_g")
-    pad = F.last("value", ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    u = u.withColumn("_pad", pad).filter(F.col("_g") == 1)
-    # bfill as a running last() over DESC order: (current, unboundedFollowing)
+    # bfill is a running last() over DESC order: (current, unboundedFollowing)
     # ascending == (unboundedPreceding, current) descending.  The descending
     # frame GROWS row-by-row (O(n) incremental in WindowExec); the ascending
     # first()-over-following frame SHRINKS, which Spark recomputes from
     # scratch per row — O(n^2) per series.
-    wb = Window.partitionBy("series_id").orderBy(F.col("epoch").desc())
-    bfill = F.last("_pad", ignorenulls=True).over(
-        wb.rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        u.selectExpr(
+            "*",
+            "last(value, true) OVER (PARTITION BY series_id ORDER BY epoch, _g"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _pad",
+        )
+        .where("_g = 1")
+        .selectExpr(
+            "series_id", "epoch",
+            "last(_pad, true) OVER (PARTITION BY series_id ORDER BY epoch DESC"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value",
+        )
     )
-    return u.select("series_id", "epoch", bfill.alias("value"))
 
 
 def distribute_linear(
@@ -145,62 +149,39 @@ def distribute_linear(
     step = int(time_int)
     if step <= 0:
         raise TsError("time_int must be a positive integer")
-    rv = float(reset_value)
+    rv = sql_double(reset_value)
 
     def bounds(lo, hi):
-        g0 = F.lit(step) * F.floor(lo / F.lit(step))
-        g0 = F.when(lo % step != 0, g0 + step).otherwise(g0).cast("long")
+        g0 = f"{step} * FLOOR({lo} / {step})"
+        g0 = f"CAST(CASE WHEN {lo} % {step} != 0 THEN {g0} + {step} ELSE {g0} END AS BIGINT)"
         # last emitted pivot is strictly below the last observation (af:560-563)
-        g1 = (F.lit(step) * F.floor((hi - 1) / F.lit(step))).cast("long")
-        return g0, F.when(hi > lo, g1)
+        return g0, f"CASE WHEN {hi} > {lo} THEN CAST({step} * FLOOR(({hi} - 1) / {step}) AS BIGINT) END"
 
     u = _with_grid(df, step, bounds)
     # Ordering (epoch, _g): a point at epoch e precedes the grid row at e, so
     # the prev-frame sees coincident points (af:543: ts[i] <= pivot) and the
     # next-frame (starting 1 row after the grid row) only sees strictly later
     # points (af:543: ts[i+1] > pivot).
-    w_prev = Window.partitionBy("series_id").orderBy("epoch", "_g")
+    prev = ("OVER (PARTITION BY series_id ORDER BY epoch, _g"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
     # "next observation" = first(...) over the ascending (1, unboundedFollowing)
     # frame — but that frame SHRINKS and Spark recomputes it from scratch per
     # row, O(n^2) per series.  Equivalent GROWING frame: running last() over
     # the exactly-reversed order, excluding the current row.
-    w_next = Window.partitionBy("series_id").orderBy(
-        F.col("epoch").desc(), F.col("_g").desc()
-    )
-    u = (
-        u.withColumn(
-            "_pe",
-            F.last(F.when(F.col("_g") == 0, F.col("epoch")), ignorenulls=True).over(
-                w_prev.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .withColumn(
-            "_pv",
-            F.last(F.when(F.col("_g") == 0, F.col("value")), ignorenulls=True).over(
-                w_prev.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .withColumn(
-            "_ne",
-            F.last(F.when(F.col("_g") == 0, F.col("epoch")), ignorenulls=True).over(
-                w_next.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-        )
-        .withColumn(
-            "_nv",
-            F.last(F.when(F.col("_g") == 0, F.col("value")), ignorenulls=True).over(
-                w_next.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-        )
-        .filter((F.col("_g") == 1) & F.col("_pe").isNotNull() & F.col("_ne").isNotNull())
-    )
-    t1 = (F.col("_ne") - F.col("_pe")).cast("double")
-    t2 = (F.col("epoch") - F.col("_pe")).cast("double")
-    reset = (
-        ((F.col("_pv") > F.col("_nv")) & F.lit(monotony == "increasing"))
-        | ((F.col("_pv") < F.col("_nv")) & F.lit(monotony == "decreasing"))
-    )
-    lerped = F.when(
-        reset, F.lit(rv) + (t2 / t1) * (F.col("_nv") - F.lit(rv))
-    ).otherwise(F.col("_pv") + (t2 / t1) * (F.col("_nv") - F.col("_pv")))
-    return u.select("series_id", "epoch", lerped.alias("value"))
+    nxt = ("OVER (PARTITION BY series_id ORDER BY epoch DESC, _g DESC"
+           " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)")
+    u = u.selectExpr(
+        "*",
+        f"last(CASE WHEN _g = 0 THEN epoch END, true) {prev} AS _pe",
+        f"last(CASE WHEN _g = 0 THEN value END, true) {prev} AS _pv",
+        f"last(CASE WHEN _g = 0 THEN epoch END, true) {nxt} AS _ne",
+        f"last(CASE WHEN _g = 0 THEN value END, true) {nxt} AS _nv",
+    ).where("_g = 1 AND _pe IS NOT NULL AND _ne IS NOT NULL")
+    frac = "(CAST(epoch - _pe AS DOUBLE) / CAST(_ne - _pe AS DOUBLE))"
+    lerped = f"_pv + {frac} * (_nv - _pv)"
+    # a meter reset (a decrease under 'increasing', an increase under
+    # 'decreasing') interpolates from reset_value instead
+    reset = {"increasing": "_pv > _nv", "decreasing": "_pv < _nv"}.get(monotony)
+    if reset is not None:
+        lerped = f"CASE WHEN {reset} THEN {rv} + {frac} * (_nv - {rv}) ELSE {lerped} END"
+    return u.selectExpr("series_id", "epoch", f"{lerped} AS value")

@@ -20,13 +20,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tsengine.core import TsError
+from tsengine.operators.aggregates import _AGGS, _inner
 from tsengine.timeutil import (
     DEFAULT_TZ,
     VALID_PERIODS,
     bucket_epoch_expr,
 )
-
-_AGGS = {"sum": F.sum, "max": F.max, "min": F.min, "mean": F.avg, "std": F.stddev_pop}
 
 # Zones whose DST transitions occur at LOCAL MIDNIGHT (tzdata): stepping a
 # calendar interval from a period boundary in wall time can then land on a
@@ -62,12 +61,7 @@ def split_agg(
     the last epoch of the bucket.  One shuffle; map-side partial agg free."""
     if agg not in _AGGS:
         raise TsError(f"unknown aggregate: {agg}")
-    b = split(df, period, tz_name)
-    return (
-        b.groupBy("series_id", "bucket")
-        .agg(F.max("epoch").alias("epoch"), _AGGS[agg]("value").alias("value"))
-        .select("series_id", "bucket", "epoch", "value")
-    )
+    return _inner(split(df, period, tz_name), agg, ["series_id", "bucket"])
 
 
 def group_by_legacy(

@@ -99,10 +99,15 @@ def _merged(fn):
     def call(df, **kw):
         if _is_split(df):
             kw["group_cols"] = ["series_id", "bucket"]
-        out = fn(df, **kw)
-        return out.select(F.lit(0).cast("long").alias("series_id"), "epoch", "value")
+        return _at_zero(fn(df, **kw))
 
     return call
+
+
+def _at_zero(df: DataFrame) -> DataFrame:
+    """``df`` as a ts_list of ONE series, list position 0, so pairwise ops
+    align positionally (tf:795-799)."""
+    return df.selectExpr("CAST(0 AS BIGINT) AS series_id", "epoch", "value")
 
 
 class Engine:
@@ -150,16 +155,9 @@ class Engine:
         time_ref = time_int * (now // time_int)  # truncate now (tf:158)
 
         rng = timeutil.column_range(kwargs, now=time_ref, int_type=int_type)
-        df = self.source.filter(F.col("series_id") == int(id_variable)).filter(
-            rng.predicate()
-        )
+        df = self.source.where(F.expr(f"series_id = {int(id_variable)}") & rng.predicate())
         if rng.limit is not None:
-            w = Window.partitionBy("series_id").orderBy(F.col("epoch").desc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= rng.limit)
-                .drop("_rn")
-            )
+            df = agg.last(df, number=rng.limit)
 
         # expand clamps (tf:173-185): e_to <= now+1yr, e_from >= 2013-01-01
         q_to = min(rng.hi, now + timeutil.YEAR) if (rng.hi is not None and expand) else None
@@ -168,15 +166,13 @@ class Engine:
         if cc is False and rng.limit is not None:
             cc = rng.limit
 
-        df = df.withColumn("value", F.col("value").cast("double"))
+        df = df.selectExpr("series_id", "epoch", "CAST(value AS DOUBLE) AS value")
         if distr:
             df = resample.distribute(df, seconds=time_int, e_to=q_to, e_from=q_from,
                                      fill_value=fill_value)
         if cc:
             df = agg.last(df, number=cc)
-        # a get_variable result is a ts_list of ONE series: normalize to list
-        # position 0 so pairwise ops align positionally (tf:795-799)
-        return df.select(F.lit(0).cast("long").alias("series_id"), "epoch", "value")
+        return _at_zero(df)
 
     # ---------------------------------------------------------------- E2
     def get_increments(
@@ -203,35 +199,33 @@ class Engine:
         # one `epoch <= hi` scan and one descending window give both the
         # in-range rows (the newest `limit` of them) and the anchor: the
         # first row below `lo`, i.e. the one whose predecessor is in range
-        df = self.source.filter(F.col("series_id") == int(id_variable))
+        scan = f"series_id = {int(id_variable)}"
         if rng.hi is not None:
-            df = df.filter(F.col("epoch") <= rng.hi)
-        w = Window.partitionBy("series_id").orderBy(F.col("epoch").desc())
-        df = df.select(
-            "series_id", "epoch", "value",
-            F.row_number().over(w).alias("_rn"),
-            F.lag("epoch").over(w).alias("_prev"),
-        )
-        keep = F.lit(True) if rng.limit is None else F.col("_rn") <= rng.limit
+            scan += f" AND epoch <= {int(rng.hi)}"
+        desc = "OVER (PARTITION BY series_id ORDER BY epoch DESC)"
+        keep = "TRUE" if rng.limit is None else f"_rn <= {int(rng.limit)}"
         if rng.lo is not None:
-            lo = F.lit(rng.lo)
-            keep = F.when(F.col("epoch") >= lo, keep).otherwise(
-                F.col("_prev").isNull() | (F.col("_prev") >= lo)
-            )
-        df = df.filter(keep).select("series_id", "epoch", "value")
+            lo = int(rng.lo)
+            keep = f"CASE WHEN epoch >= {lo} THEN {keep} ELSE _prev IS NULL OR _prev >= {lo} END"
+        df = (
+            self.source.where(scan)
+            .selectExpr("series_id", "epoch", "value",
+                        f"row_number() {desc} AS _rn", f"lag(epoch) {desc} AS _prev")
+            .where(keep)
+            .selectExpr("series_id", "epoch", "CAST(value AS DOUBLE) AS value")
+        )
 
         q_to = rng.hi if (rng.hi is not None and expand) else None
         q_from = rng.lo if (rng.lo is not None and expand) else None
         if cc is False and rng.limit is not None:
             cc = rng.limit
 
-        df = df.withColumn("value", F.col("value").cast("double"))
         if distr:
             df = resample.distribute(df, seconds=time_int, e_to=q_to, e_from=q_from)
         df = incr.increments(df, validate=False)
         if cc:
             df = agg.last(df, number=cc)
-        return df.select(F.lit(0).cast("long").alias("series_id"), "epoch", "value")
+        return _at_zero(df)
 
     # ---------------------------------------------------------------- E3
     def usage(self, id_variable, **kwargs) -> DataFrame:

@@ -140,14 +140,14 @@ class TimeRange:
     hi: int | None
     limit: int | None
 
-    def predicate(self, epoch_col: Column | str = "epoch") -> Column:
-        c = F.col(epoch_col) if isinstance(epoch_col, str) else epoch_col
-        pred = F.lit(True)
+    def predicate(self) -> Column:
+        """``epoch`` within [lo, hi], one SQL expression (TRUE unbounded)."""
+        pred = ["TRUE"]
         if self.lo is not None:
-            pred = pred & (c >= F.lit(self.lo))
+            pred.append(f"epoch >= {int(self.lo)}")
         if self.hi is not None:
-            pred = pred & (c <= F.lit(self.hi))
-        return pred
+            pred.append(f"epoch <= {int(self.hi)}")
+        return F.expr(" AND ".join(pred))
 
 
 def get_column_range(
@@ -225,9 +225,10 @@ VALID_PERIODS = ("year", "month", "week", "day", "hour")
 
 
 def bucket_epoch_expr(
-    epoch_col: Column | str, period: str, tz_name: str = DEFAULT_TZ, shift: bool = True
+    epoch_col: str, period: str, tz_name: str = DEFAULT_TZ, shift: bool = True
 ) -> Column:
-    """Column expression: epoch -> beginning-epoch of its calendar period.
+    """Column expression: epoch column ``epoch_col`` -> beginning-epoch of
+    its calendar period.
 
     Pure built-in composition (no UDF): minute-truncate, minute-0 shift
     (au:190 + au:285-307), tz-localize via from_utc_timestamp, date_trunc,
@@ -235,22 +236,21 @@ def bucket_epoch_expr(
     (au:224-227).  DST is handled by the JVM tz database, same offsets the
     reference takes from pytz (au:232-237).  ``shift=False`` gives the plain
     period beginning (no minute-0-belongs-to-previous-period quirk).
-    """
+
+    The integer arithmetic is one SQL expression; the zone and the period
+    stay Column arguments, never SQL text."""
     if period not in VALID_PERIODS:
         raise TsError(f"Invalid period given: {period}")
-    c = F.col(epoch_col) if isinstance(epoch_col, str) else epoch_col
-    em = (F.lit(60) * F.floor(c / F.lit(60))).cast("long")
+    em = f"CAST(60 * FLOOR(`{epoch_col}` / 60) AS BIGINT)"
     if period == "hour":
-        h = F.floor(em / F.lit(HOUR)).cast("long")
+        h = f"CAST(FLOOR({em} / {HOUR}) AS BIGINT)"
         if not shift:
-            return (h * F.lit(HOUR)).cast("long")
-        return (
-            F.when(em % F.lit(HOUR) == 0, (h - F.lit(1)) * F.lit(HOUR))
-            .otherwise(h * F.lit(HOUR))
-            .cast("long")
+            return F.expr(f"CAST({h} * {HOUR} AS BIGINT)")
+        return F.expr(
+            f"CAST(CASE WHEN {em} % {HOUR} = 0 THEN ({h} - 1) * {HOUR}"
+            f" ELSE {h} * {HOUR} END AS BIGINT)"
         )
     if shift:
-        em = F.when(em % F.lit(HOUR) == 0, em - F.lit(60)).otherwise(em)
-    local = F.from_utc_timestamp(F.timestamp_seconds(em), tz_name)
-    bucket_local = F.date_trunc(period, local)
-    return F.to_utc_timestamp(bucket_local, tz_name).cast("long")
+        em = f"CASE WHEN {em} % {HOUR} = 0 THEN {em} - 60 ELSE {em} END"
+    local = F.from_utc_timestamp(F.expr(f"timestamp_seconds({em})"), tz_name)
+    return F.to_utc_timestamp(F.date_trunc(period, local), tz_name).cast("long")
